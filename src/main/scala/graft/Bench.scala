@@ -270,11 +270,13 @@ object Bench {
         (line + "\n").getBytes("UTF-8"))
     }
     spark.stop()
-    parseErr.foreach { msg =>
-      System.err.println(s"BENCH FAILED: artifact JSON $msg")
-      sys.exit(3)
-    }
+    // report both failures; the query-error code (1) outranks the
+    // unparseable-artifact code (3)
+    parseErr.foreach(m => System.err.println(s"BENCH FAILED: artifact JSON $m"))
+    if (errors.nonEmpty) System.err.println(
+      s"BENCH FAILED: query errors in ${errors.keys.mkString(", ")}")
     if (errors.nonEmpty) sys.exit(1)
+    if (parseErr.isDefined) sys.exit(3)
     // cache_build promoted from attribution to ASSERTION (r12 verdict
     // item 5): the warm run exists to absorb shared-cache first-touch,
     // so a clean run whose TIMED minute rebuilt a cache family means a

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * that is the plan shape at any scale. The tgz single-artifact packaging
   * (S3/S5) round-trips bytes through the driver exactly like the reference;
   * it exists for artifact parity and is the SMALL-artifact path. The scale
-  * path is [[publishPartitioned]]: executors write partitioned csv.gz /
-  * parquet directly, no driver bottleneck, no coalesce(1).
+  * path is [[MergeTable]]: a bucketed parquet table that executors merge
+  * into directly, no driver bottleneck, no coalesce(1).
   */
 object Merge {
   /** Dedup keys of the season table (reference spark_merge_dfs.py:83). */
@@ -30,18 +30,12 @@ object Merge {
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").csv(path)
 
-  /** D1/U1 with reference semantics: align by name (missing columns →
-    * null), keep an arbitrary row per key (spark_merge_dfs.py:82-83).
-    */
-  def merge(season: DataFrame, delta: DataFrame): DataFrame =
-    season.unionByName(delta, allowMissingColumns = true)
-      .dropDuplicates(dedupKeys)
-
-  /** Deterministic upsert upgrade: newest source wins, reproducible under
-    * retries and shuffle-order changes. `__src` 0 (delta) beats 1
-    * (season); duplicate keys WITHIN a source are tie-broken by the
-    * remaining columns lexicographically, so the winner never depends on
-    * shuffle order.
+  /** D1/U1: the reference's upsert (spark_merge_dfs.py:82-83 — align by
+    * name, missing columns → null, one row per key) made deterministic:
+    * newest source wins, reproducible under retries and shuffle-order
+    * changes. `__src` 0 (delta) beats 1 (season); duplicate keys WITHIN
+    * a source are tie-broken by the remaining columns lexicographically,
+    * so the winner never depends on shuffle order.
     */
   def mergeDeterministic(season: DataFrame, delta: DataFrame,
       keys: Seq[String] = dedupKeys): DataFrame =
@@ -145,16 +139,5 @@ object Merge {
       tar.closeArchiveEntry()
     } finally tar.close()
     fs.delete(tmp, true)
-  }
-
-  /** S5 scale path: partitioned columnar publish — executors write in
-    * parallel, nothing flows through the driver. This is what replaces the
-    * single-tgz artifact at 100 TB.
-    */
-  def publishPartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(path)
   }
 }

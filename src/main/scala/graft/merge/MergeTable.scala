@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Partition-pruned MERGE over a hive-partitioned parquet layout — the
-  * storage-layer merge `Streaming.upsertSink`'s doc note promises
+  * storage-layer merge behind every `Streaming.upsertSink` micro-batch
   * (reference analogue: the whole-season S3 republish at
   * `scripts/spark_merge_dfs.py:96-123`, which rewrites everything every
   * run). Delta/Iceberg `MERGE INTO` is the managed-table form; no such
@@ -33,13 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object MergeTable {
   val BucketCol = "__bucket"
-
-  /** Sentinel for "pick nBuckets from the table or the size estimate"
-    * ([[suggestBuckets]]) — accepted by callers that own table CREATION
-    * (e.g. `Streaming.upsertSink`); [[merge]] itself always receives a
-    * concrete count.
-    */
-  val AutoBuckets: Int = -1
 
   /** The measured bucket-count sizing rule as code (r17
     * `BENCH_100X_r17.json` matrix; BUILD_NOTES "MergeTable at production
@@ -71,7 +64,8 @@ object MergeTable {
     * of the same table agree, and the result is stable for a table that
     * grows within one octave. The count is a CREATION-time decision:
     * once written, `_meta` pins the layout and merges must match it —
-    * callers resuming an existing table adopt `_meta`, never re-derive.
+    * callers resuming an existing table adopt `_meta`, never re-derive
+    * ([[bucketsFor]]).
     */
   def suggestBuckets(estimatedTableBytes: Long): Int = {
     require(estimatedTableBytes >= 0,
@@ -85,6 +79,17 @@ object MergeTable {
     }
   }
 
+  /** The bucket count a writer should merge into `path` with: an
+    * existing table's persisted `_meta` count wins (bucket counts are
+    * immutable per table — a different count would scatter keys across
+    * layouts and fail checkMeta loudly); otherwise the sizing rule over
+    * the caller's estimate of the table's EVENTUAL size. An estimate of
+    * 0 gets the rule's floor (16).
+    */
+  def bucketsFor(spark: SparkSession, path: String,
+      estimatedTableBytes: Long): Int =
+    meta(spark, path).map(_._1).getOrElse(suggestBuckets(estimatedTableBytes))
+
   /** Bucketing metadata persisted with the table. A merge invoked with a
     * different nBuckets (or key set) than the write-time values would
     * compute different bucket assignments and silently land keys in wrong
@@ -92,9 +97,6 @@ object MergeTable {
     * loud error instead.
     */
   private val MetaFile = "_meta"
-
-  private def bucketOf(keys: Seq[String], nBuckets: Int) =
-    pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
 
   /** The table's bucket-id column for `keys` under `nBuckets` — public
     * so a caller that pre-computes a delta's affected-bucket set (e.g.
@@ -104,7 +106,7 @@ object MergeTable {
     * that could drift from the persisted layout.
     */
   def bucketColumn(keys: Seq[String], nBuckets: Int): Column =
-    bucketOf(keys, nBuckets)
+    pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
 
   private def fsOf(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -257,7 +259,7 @@ object MergeTable {
     * dir, not one per (task, bucket) pair. */
   def write(df: DataFrame, path: String, keys: Seq[String],
       nBuckets: Int): Unit = {
-    df.withColumn(BucketCol, bucketOf(keys, nBuckets))
+    df.withColumn(BucketCol, bucketColumn(keys, nBuckets))
       .repartition(col(BucketCol))
       .write.partitionBy(BucketCol).mode("overwrite").parquet(path)
     // stamp AFTER the data write: overwrite mode clears the dir first
@@ -341,7 +343,7 @@ object MergeTable {
     * merge's affected-bucket aggregate).
     */
   def bucketIds(df: DataFrame, keys: Seq[String], nBuckets: Int): Set[Int] =
-    df.select(bucketOf(keys, nBuckets).as(BucketCol)).distinct()
+    df.select(bucketColumn(keys, nBuckets).as(BucketCol)).distinct()
       .collect().map(_.getInt(0)).toSet
 
   /** Ids of every bucket dir currently present (live or stranded `.old`
@@ -513,7 +515,8 @@ object MergeTable {
     * Concurrency contract (spec-asserted in MergeSpec):
     *  - SINGLE WRITER. Two concurrent merges race on the same staging dir
     *    and `.old` backups; the caller serializes writers (the streaming
-    *    `upsertSink` does — micro-batches are sequential by construction).
+    *    `upsertSink` is its season's only writer, and its micro-batches
+    *    are sequential by construction).
     *  - Readers are safe and NON-MUTATING ([[read]] never repairs the
     *    table — writer-side [[recover]] does): between any two bucket
     *    swaps every bucket dir holds a complete copy (entirely pre-merge
@@ -577,7 +580,7 @@ object MergeTable {
         .getOrElse(bucketIds(delta, keys, nBuckets).toSeq.sorted)
     }
     checkMeta(fs, p, keys, nBuckets)
-    val d = delta.withColumn(BucketCol, bucketOf(keys, nBuckets))
+    val d = delta.withColumn(BucketCol, bucketColumn(keys, nBuckets))
     // bounded by nBuckets rows — metadata-scale, never data-scale
     val affected = knownAffected.map(_.sorted.toArray).getOrElse {
       timed("affected") {
@@ -716,7 +719,7 @@ object MergeTable {
     // one bounded job: rows to delete → (count, distinct buckets);
     // pruned to the candidate dirs when the caller supplied them
     val hit = readPruned(spark, path, candidateBuckets).filter(predicate)
-      .select(bucketOf(keys, nBuckets).as(BucketCol))
+      .select(bucketColumn(keys, nBuckets).as(BucketCol))
       .agg(count(lit(1)).as("n"), collect_set(col(BucketCol)).as("bs"))
       .collect()(0)
     val deleted = hit.getLong(0)

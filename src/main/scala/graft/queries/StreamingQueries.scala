@@ -351,9 +351,10 @@ object StreamingQueries {
   /** q87: the streaming UPSERT SINK under the oracle gate — the
     * reference's signature "updating datasets" operation as continuous
     * ingestion ([[Streaming.upsertSink]] → the partition-pruned
-    * [[graft.merge.MergeTable]] MERGE backend, `nBuckets = 16`), not
-    * just spec-covered. The season is seeded with three
-    * oracle-distinguishable row classes before the drain:
+    * [[graft.merge.MergeTable]] MERGE, 16 buckets: the seed season's
+    * `_meta` layout, which the sink adopts), not just spec-covered. The
+    * season is seeded with three oracle-distinguishable row classes
+    * before the drain:
     *
     *  - STALE overlaps (every even event_id, value := −1): delta must
     *    WIN — a surviving −1 means season-wins or no-op merge;
@@ -593,7 +594,7 @@ object StreamingQueries {
         col("user_id"), col("event_type"), col("value"))
     withDrainPartitions(spark) {
       Streaming.upsertSink(delta, season, s"$base/cp",
-        keys = Seq("event_id"), nBuckets = 16)
+        keys = Seq("event_id"))
     }
     graft.merge.MergeTable.read(spark, season).orderBy(col("event_id"))
   }

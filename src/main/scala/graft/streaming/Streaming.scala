@@ -85,19 +85,20 @@ object Streaming {
     val dst = staged.resolve("events.parquet")
     val extra = if (sentinelHorizonHours > 0)
       Seq(staged.resolve("zz-sentinel.parquet")) else Seq.empty
-    if (!stagedCurrent(src, staged, dst +: extra)) {
+    val marker = stagedMarker(src, staged, dst +: extra).getOrElse {
       // Marker content captured BEFORE the copy: a fixture regenerated
       // mid-staging must leave a MISMATCHED marker (so the next call
       // restages), never a marker describing bytes we did not stage.
-      val marker = stagedMarkerContent(src)
+      val m = stagedMarkerContent(src)
       java.nio.file.Files.copy(src, dst,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       if (sentinelHorizonHours > 0)
         stageSentinel(spark, spark.read.parquet(dst.toString), staged,
           sentinelHorizonHours)
-      writeStagedMarker(marker, staged)
+      writeStagedMarker(m, staged)
+      m
     }
-    val schema = stagedSchema(spark, src, staged, dst)
+    val schema = stagedSchema(spark, staged, dst, marker)
     graft.Tables.normalizeEventTs(
       spark.readStream.schema(schema).parquet(staged.toString))
   }
@@ -106,18 +107,20 @@ object Streaming {
     * staged dir, fixture (size, mtime)): every drain query re-ran
     * `spark.read.parquet(...).schema` over the identical staged copy —
     * a per-call listing + footer read the r18 verdict told this round
-    * to shave (item 5). The cache key embeds the SAME staleness marker
-    * the staging itself uses, so a regenerated fixture (new size/mtime)
-    * re-infers; the schema describes the stream's input, nothing any
-    * query computes.
+    * to shave (item 5). The cache key embeds the marker of the staged
+    * bytes — the one staging wrote or found, passed in rather than
+    * recomputed from the fixture, so a fixture regenerated after staging
+    * can never bind its new marker to the old staged copy's schema. A
+    * regenerated fixture restages under a new marker and re-infers; the
+    * schema describes the stream's input, nothing any query computes.
     */
   private val stagedSchemas = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  private def stagedSchema(spark: SparkSession, src: java.nio.file.Path,
-      staged: java.nio.file.Path, dst: java.nio.file.Path)
+  private def stagedSchema(spark: SparkSession, staged: java.nio.file.Path,
+      dst: java.nio.file.Path, marker: String)
       : org.apache.spark.sql.types.StructType = {
-    val key = staged.toString + "|" + stagedMarkerContent(src)
+    val key = staged.toString + "|" + marker
     val hit = stagedSchemas.get(key)
     if (hit != null) hit
     else {
@@ -129,9 +132,10 @@ object Streaming {
     }
   }
 
-  /** True when `staged`'s marker matches the fixture's current
-    * (size, mtimeMillis) and every staged file exists. The marker is
-    * written AFTER staging completes, so a crash mid-staging restages.
+  /** `staged`'s marker when it matches the fixture's current
+    * (size, mtime) and every staged file exists; None means restage. The
+    * marker is written AFTER staging completes, so a crash mid-staging
+    * restages.
     * Underscore prefix keeps it invisible to the stream's file listing
     * (Spark skips `_`/`.`-prefixed files, like `_SUCCESS`).
     */
@@ -143,14 +147,14 @@ object Streaming {
     java.nio.file.Files.size(src) + ":" +
       java.nio.file.Files.getLastModifiedTime(src).toString
 
-  private def stagedCurrent(src: java.nio.file.Path,
+  private def stagedMarker(src: java.nio.file.Path,
       staged: java.nio.file.Path,
-      required: Seq[java.nio.file.Path]): Boolean = {
+      required: Seq[java.nio.file.Path]): Option[String] = {
     val marker = staged.resolve("_staged_marker")
-    java.nio.file.Files.exists(marker) &&
-      required.forall(java.nio.file.Files.exists(_)) &&
-      scala.util.Try(new String(java.nio.file.Files.readAllBytes(marker),
-        "UTF-8")).toOption.contains(stagedMarkerContent(src))
+    if (!java.nio.file.Files.exists(marker) ||
+        !required.forall(java.nio.file.Files.exists(_))) None
+    else scala.util.Try(new String(java.nio.file.Files.readAllBytes(marker),
+      "UTF-8")).toOption.filter(_ == stagedMarkerContent(src))
   }
 
   private def writeStagedMarker(content: String,
@@ -230,15 +234,16 @@ object Streaming {
     java.nio.file.Files.createDirectories(staged)
     val dst1 = staged.resolve("events.parquet")
     val dst2 = staged.resolve("events-replay.parquet")
-    if (!stagedCurrent(src, staged, Seq(dst1, dst2))) {
-      val marker = stagedMarkerContent(src) // pre-copy capture, as above
+    val marker = stagedMarker(src, staged, Seq(dst1, dst2)).getOrElse {
+      val m = stagedMarkerContent(src) // pre-copy capture, as above
       java.nio.file.Files.copy(src, dst1,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       java.nio.file.Files.copy(src, dst2,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      writeStagedMarker(marker, staged)
+      writeStagedMarker(m, staged)
+      m
     }
-    val schema = stagedSchema(spark, src, staged, dst1)
+    val schema = stagedSchema(spark, staged, dst1, marker)
     graft.Tables.normalizeEventTs(
       spark.readStream.schema(schema).parquet(staged.toString))
   }
@@ -447,51 +452,32 @@ object Streaming {
   /** Streaming upsert sink: the reference's merge job (season ∪ delta →
     * one row per key) as a foreachBatch sink, i.e. continuous ingestion
     * straight into the maintained dataset instead of a separate batch
-    * merge pass. Each micro-batch: read current season parquet → merge
-    * deterministically (delta wins) → atomically republish. Exactly-once
-    * end-to-end: the checkpoint replays unacked batches and the merge is
-    * idempotent by key.
+    * merge pass. Every micro-batch is a partition-pruned MERGE via
+    * [[graft.merge.MergeTable]]: the season lives as hash-bucketed
+    * partition dirs and each micro-batch rewrites only the buckets its
+    * keys touch, so per-batch cost is O(delta + affected partitions)
+    * instead of O(season). This is the plain-parquet form of a
+    * Delta/Iceberg MERGE INTO (no such jars exist in this environment);
+    * swapping in a transactional format later changes only the storage
+    * call, not this sink. Exactly-once end-to-end: the checkpoint replays
+    * unacked batches and the merge is idempotent by key.
     *
-    * Scale backends, same interface and idempotence contract:
-    *  - `nBuckets = 0` (default): whole-season read → merge → atomic
-    *    swap — the reference's shape, fine for small seasons.
-    *  - `nBuckets > 0`: partition-pruned MERGE via [[graft.merge
-    *    .MergeTable]] — the season lives as hash-bucketed partition
-    *    dirs and each micro-batch rewrites only the buckets its keys
-    *    touch, so per-batch cost is O(delta + affected partitions)
-    *    instead of O(season). This is the plain-parquet form of a
-    *    Delta/Iceberg MERGE INTO (no such jars exist in this
-    *    environment); swapping in a transactional format later changes
-    *    only the storage call, not this sink.
-    *  - `nBuckets = MergeTable.AutoBuckets` (-1): bucketed as above,
-    *    with the count picked by the MEASURED sizing rule
-    *    ([[graft.merge.MergeTable.suggestBuckets]]) from
-    *    `estimatedSeasonBytes` — a creation-time decision: once the
-    *    season exists its persisted `_meta` layout wins, even if the
-    *    caller's estimate later disagrees (bucket counts are immutable
-    *    per table; re-deriving one would scatter keys across layouts).
+    * The bucket count is read once, when the sink starts
+    * ([[graft.merge.MergeTable.bucketsFor]] with no size estimate): an
+    * existing season keeps its `_meta` layout, a new one gets the sizing
+    * rule's floor (16). The sink is the season's only writer, so a
+    * season created by its first batch keeps that count.
     */
   def upsertSink(delta: DataFrame, seasonPath: String, checkpoint: String,
-      keys: Seq[String] = graft.merge.Merge.dedupKeys,
-      nBuckets: Int = 0,
-      estimatedSeasonBytes: Long = 0L): Unit = {
+      keys: Seq[String] = graft.merge.Merge.dedupKeys): Unit = {
     import graft.merge.MergeTable
-    require(nBuckets != MergeTable.AutoBuckets || estimatedSeasonBytes > 0,
-      "upsertSink: AutoBuckets needs estimatedSeasonBytes > 0 — the " +
-        "bucket count is a creation-time decision and the rule's input " +
-        "is the season's EVENTUAL size, which only the caller can know")
+    val nBuckets = MergeTable.bucketsFor(delta.sparkSession, seasonPath,
+      estimatedTableBytes = 0L)
     val q = delta.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val n =
-          if (nBuckets == MergeTable.AutoBuckets)
-            MergeTable.meta(batch.sparkSession, seasonPath).map(_._1)
-              .getOrElse(MergeTable.suggestBuckets(estimatedSeasonBytes))
-          else nBuckets
-        if (n > 0)
-          MergeTable.merge(batch.toDF(), seasonPath, keys, n)
-        else legacyWholeSeasonMerge(batch.toDF(), seasonPath, keys)
+        MergeTable.merge(batch.toDF(), seasonPath, keys, nBuckets)
         ()
       }
       .trigger(Trigger.AvailableNow())
@@ -861,39 +847,6 @@ object Streaming {
             .getOrElse(false))
         fs.delete(st.getPath, true)
     }
-  }
-
-  /** The reference-shaped merge body: read whole season → merge → atomic
-    * rename swap (a complete season is readable at every instant; crash
-    * recovery restores from `.old`).
-    */
-  private def legacyWholeSeasonMerge(batch: DataFrame, seasonPath: String,
-      keys: Seq[String]): Unit = {
-    val spark = batch.sparkSession
-    val cur = new org.apache.hadoop.fs.Path(seasonPath)
-    // Path.toUri percent-encodes; a raw java.net.URI would reject
-    // legal paths containing spaces etc.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      cur.toUri, spark.sparkContext.hadoopConfiguration)
-    val bak = new org.apache.hadoop.fs.Path(seasonPath + ".old")
-    val tmp = new org.apache.hadoop.fs.Path(seasonPath + ".next")
-    // Crash recovery (single-writer): a previous run may have died
-    // between the two renames below, leaving the season only in .old.
-    // Restore it BEFORE reading, and never delete .old until the new
-    // season is in place — so some complete copy always exists.
-    if (!fs.exists(cur) && fs.exists(bak)) fs.rename(bak, cur)
-    if (fs.exists(tmp)) fs.delete(tmp, true) // stale partial write
-    val merged =
-      if (fs.exists(cur)) {
-        val season = spark.read.parquet(seasonPath)
-        graft.merge.Merge.mergeDeterministic(season, batch, keys)
-      } else batch
-    // write-new-then-swap keeps a complete season readable throughout
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(cur)) fs.rename(cur, bak)
-    fs.rename(tmp, cur)
-    if (fs.exists(bak)) fs.delete(bak, true)
   }
 
   /** Drain a streaming frame through a parquet FILE sink (append mode)

@@ -160,19 +160,15 @@ object PipelineMain {
     val quarT = req(opts, "quar")
     val cp = req(opts, "checkpoint")
     // --buckets: explicit N wins; otherwise an EXISTING main table's
-    // persisted `_meta` layout wins (bucket counts are immutable per
-    // table — a different count would scatter keys across layouts and
-    // fail checkMeta loudly); otherwise the measured sizing rule
-    // ([[graft.merge.MergeTable.suggestBuckets]]) over --table-bytes
-    // (the caller's estimate of the EVENTUAL meta-table size, not the
-    // blob bytes — meta rows are ~100 B/blob). With no estimate either,
-    // the rule's floor (16) applies: media-meta/quarantine tables are
-    // MB-GB scale, the regime the 100× matrix confirmed 16 for.
-    val nBuckets = opts.get("buckets").map(_.toInt).getOrElse {
-      graft.merge.MergeTable.meta(spark, mainT).map(_._1).getOrElse(
-        graft.merge.MergeTable.suggestBuckets(
-          opts.get("table-bytes").map(_.toLong).getOrElse(0L)))
-    }
+    // `_meta` layout, else the sizing rule over --table-bytes
+    // ([[graft.merge.MergeTable.bucketsFor]]). --table-bytes estimates
+    // the EVENTUAL meta-table size, not the blob bytes — meta rows are
+    // ~100 B/blob. With no estimate the rule's floor (16) applies:
+    // media-meta/quarantine tables are MB-GB scale, the regime the 100×
+    // matrix confirmed 16 for.
+    val nBuckets = opts.get("buckets").map(_.toInt).getOrElse(
+      graft.merge.MergeTable.bucketsFor(spark, mainT,
+        opts.get("table-bytes").map(_.toLong).getOrElse(0L)))
     val tmp = opts.getOrElse("tmp", mainT + ".quarantine-tmp")
     val crashAfter = opts.get("crash-after-batch").map(_.toLong)
     val schema = org.apache.spark.sql.Encoders

@@ -23,8 +23,9 @@ class MergeSpec extends SparkTestBase {
     ("g3", "2:00.0", "4", "new2", "extra2")
   ).toDF("game_id", "time_remaining", "quarter", "payload", "batch_tag")
 
-  test("merge: union-by-name null-fill + one row per key") {
-    val m = Merge.merge(season, delta)
+  test("mergeDeterministic: delta wins on key collision; idempotent") {
+    val m = Merge.mergeDeterministic(season, delta)
+    // union-by-name null-fill + one row per key
     assert(m.columns.toSet == Set("game_id", "time_remaining", "quarter",
       "payload", "batch_tag"))
     assert(m.count() == 4)
@@ -32,10 +33,6 @@ class MergeSpec extends SparkTestBase {
       .filter(col("count") > 1).count() == 0)
     // season-only rows got a null batch_tag
     assert(m.filter(col("game_id") === "g2" && col("batch_tag").isNull).count() == 1)
-  }
-
-  test("mergeDeterministic: delta wins on key collision; idempotent") {
-    val m = Merge.mergeDeterministic(season, delta)
     assert(m.filter(col("game_id") === "g1" && col("time_remaining") === "11:30.0")
       .select("payload").as[String].collect().toSeq == Seq("new1"))
     // re-merging the same delta changes nothing
@@ -60,15 +57,6 @@ class MergeSpec extends SparkTestBase {
     assert(back.count() == df.count())
     // all-string round trip (header=true, no inferSchema), like the reference
     assert(back.schema.fields.forall(_.dataType.typeName == "string"))
-  }
-
-  test("publishPartitioned writes executor-parallel parquet") {
-    val dir = Files.createTempDirectory("graft-part").toString
-    Merge.publishPartitioned(Merge.merge(season, delta), s"$dir/out",
-      partitionCols = Seq("quarter"))
-    val back = spark.read.parquet(s"$dir/out")
-    assert(back.count() == 4)
-    assert(back.select("quarter").distinct().count() == 3)
   }
 
   test("MergeTable: pruned merge equals full merge, untouched dirs untouched") {
@@ -920,5 +908,19 @@ class MergeSpec extends SparkTestBase {
       assert(n >= 16 && n <= 4096 && Integer.bitCount(n) == 1,
         s"every suggestion a clamped power of two, got $n"))
     intercept[IllegalArgumentException](suggestBuckets(-1L))
+  }
+
+  test("MergeTable.bucketsFor: an absent table follows suggestBuckets, " +
+      "an existing table's _meta wins over a disagreeing estimate") {
+    import graft.merge.MergeTable
+    val path = Files.createTempDirectory("graft-bf").toString + "/t"
+    val GiB = 1024L * 1024 * 1024
+    assert(MergeTable.bucketsFor(spark, path, 0L) == 16)
+    assert(MergeTable.bucketsFor(spark, path, 32 * GiB) == 256)
+    MergeTable.write((1L to 10L).toDF("k"), path, Seq("k"), nBuckets = 8)
+    assert(MergeTable.bucketsFor(spark, path, 0L) == 8)
+    // 100 TB: the rule says 4096, the persisted layout still wins
+    assert(MergeTable.bucketsFor(spark, path,
+      100L * 1000 * 1000 * 1000 * 1000) == 8)
   }
 }

@@ -120,27 +120,6 @@ class StreamingSpec extends SparkTestBase {
     assert(emitted <= batchEvents.count() && emitted > batchEvents.count() / 2)
   }
 
-  test("foreachBatch upsert sink: stream merges into the season dataset") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsert").toString
-    val season = s"$dir/season"
-    // seed season with a subset (keyed by event_id for this fixture)
-    batchEvents.filter($"event_id" < 100)
-      .withColumn("src_tag", lit("seed"))
-      .write.parquet(season)
-    val delta = streamEvents.withColumn("src_tag", lit("delta"))
-    Streaming.upsertSink(delta, season, s"$dir/ckpt", keys = Seq("event_id"))
-    val merged = spark.read.parquet(season)
-    assert(merged.count() == batchEvents.count())
-    assert(merged.groupBy("event_id").count().filter(col("count") > 1).count() == 0)
-    // delta wins on overlapping keys
-    assert(merged.filter($"event_id" < 100 && $"src_tag" === "delta").count() == 100)
-    // re-running the same drained stream is a no-op (checkpoint + idempotence)
-    Streaming.upsertSink(
-      Streaming.fileEventSource(spark, sf).withColumn("src_tag", lit("delta2")),
-      season, s"$dir/ckpt", keys = Seq("event_id"))
-    assert(spark.read.parquet(season).filter($"src_tag" === "delta2").count() == 0)
-  }
-
   test("event-time timeout fires across micro-batches (watermark advancement)") {
     // user 1 goes silent after batch 1; user 2's later events advance the
     // watermark in batches 2-3, which must evict and emit user 1's
@@ -180,8 +159,10 @@ class StreamingSpec extends SparkTestBase {
       batchEvents.filter($"event_id" < 100).withColumn("src_tag", lit("seed")),
       season, Seq("event_id"), nBuckets = 8)
     val delta = streamEvents.withColumn("src_tag", lit("delta"))
-    Streaming.upsertSink(delta, season, s"$dir/ckpt",
-      keys = Seq("event_id"), nBuckets = 8)
+    Streaming.upsertSink(delta, season, s"$dir/ckpt", keys = Seq("event_id"))
+    // the sink adopts the seeded layout (any other count would fail
+    // checkMeta loudly on the first batch)
+    assert(MergeTable.meta(spark, season).map(_._1).contains(8))
     val merged = MergeTable.read(spark, season)
     assert(merged.count() == batchEvents.count())
     assert(merged.groupBy("event_id").count().filter(col("count") > 1).count() == 0)
@@ -189,60 +170,24 @@ class StreamingSpec extends SparkTestBase {
     // re-running the same drained stream is a no-op (checkpoint + idempotence)
     Streaming.upsertSink(
       Streaming.fileEventSource(spark, sf).withColumn("src_tag", lit("delta2")),
-      season, s"$dir/ckpt", keys = Seq("event_id"), nBuckets = 8)
+      season, s"$dir/ckpt", keys = Seq("event_id"))
     assert(MergeTable.read(spark, season)
       .filter($"src_tag" === "delta2").count() == 0)
   }
 
-  test("upsert sink AutoBuckets: creation applies the sizing rule, " +
-      "resume adopts the persisted _meta over a disagreeing estimate") {
+  test("upsert sink stamps a fresh season with the sizing rule's " +
+      "floor (16 buckets)") {
     import graft.merge.MergeTable
-    val dir = java.nio.file.Files.createTempDirectory("graft-upauto").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-upfresh").toString
     val season = s"$dir/season"
-    // creation: a 2 GiB season estimate → suggestBuckets says 16
-    Streaming.upsertSink(
-      streamEvents.withColumn("src_tag", lit("delta")),
-      season, s"$dir/ckpt", keys = Seq("event_id"),
-      nBuckets = MergeTable.AutoBuckets,
-      estimatedSeasonBytes = 2L * 1024 * 1024 * 1024)
-    assert(MergeTable.meta(spark, season).map(_._1).contains(16),
-      "auto creation must stamp the rule's count into _meta")
-    assert(MergeTable.read(spark, season).count() == batchEvents.count())
-    // resume with a WILDLY different estimate (100 TB → rule says 4096):
-    // the persisted layout must win — re-deriving would scatter keys
-    // across layouts (and checkMeta would fail loudly if it didn't)
-    Streaming.upsertSink(
-      Streaming.fileEventSource(spark, sf).withColumn("src_tag", lit("d2")),
-      season, s"$dir/ckpt2", keys = Seq("event_id"),
-      nBuckets = MergeTable.AutoBuckets,
-      estimatedSeasonBytes = 100L * 1000 * 1000 * 1000 * 1000)
-    assert(MergeTable.meta(spark, season).map(_._1).contains(16),
-      "resume must adopt _meta, not the fresh estimate")
+    Streaming.upsertSink(streamEvents.withColumn("src_tag", lit("delta")),
+      season, s"$dir/ckpt", keys = Seq("event_id"))
+    assert(MergeTable.meta(spark, season) == Some((16, Seq("event_id"))),
+      "the first batch creates the season with suggestBuckets(0)")
     val merged = MergeTable.read(spark, season)
     assert(merged.count() == batchEvents.count())
     assert(merged.groupBy("event_id").count()
       .filter(col("count") > 1).count() == 0)
-    // estimate-less auto is a loud creation-time error, not a guess
-    intercept[IllegalArgumentException] {
-      Streaming.upsertSink(streamEvents, s"$dir/other", s"$dir/ckpt3",
-        keys = Seq("event_id"), nBuckets = MergeTable.AutoBuckets)
-    }
-  }
-
-  test("upsert sink recovers a season stranded in .old by a crash") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-crash").toString
-    val season = s"$dir/season"
-    // simulate dying between the two swap renames: season exists ONLY as .old
-    batchEvents.filter($"event_id" < 50).withColumn("src_tag", lit("seed"))
-      .write.parquet(season + ".old")
-    Streaming.upsertSink(
-      streamEvents.withColumn("src_tag", lit("delta")),
-      season, s"$dir/ckpt", keys = Seq("event_id"))
-    val merged = spark.read.parquet(season)
-    // the .old seed survived the crash and merged with the delta
-    assert(merged.count() == batchEvents.count())
-    assert(merged.filter($"src_tag" === "delta").count() == batchEvents.count())
-    assert(!new java.io.File(season + ".old").exists())
   }
 
   test("stateful sessionize (flatMapGroupsWithState) matches batch gaps-and-islands") {
