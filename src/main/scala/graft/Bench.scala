@@ -1,23 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession.Cost
+/** The steady-state query bench: `runMain graft.Bench [prefix ...]` times
+  * every declared query, or, given query-name prefixes, the matching
+  * queries in argument order. Prints the full artifact line and a compact
+  * line, and writes the full line to BENCH_SUMMARY.json and bench_runs/.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Local-harness scan parallelism: testdata tables are single
-      // parquet files well under the default 128m split size, which
-      // serializes the scan on one core. 16m splits let local[32] use
-      // its cores; a real cluster keeps the 128m default.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queryNames(args.toSeq)
+    val spark = GraftSession("graft-bench")
+    val master = spark.sparkContext.master
+    val nCpus = spark.sparkContext.defaultParallelism
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // The timed action is a noop-sink WRITE, not count(): under a count
     // Catalyst prunes every column the count doesn't need, so a
@@ -27,38 +21,32 @@ object Bench {
     // the executors and discards it — full materialization, zero I/O.
     // Methodology change recorded in BASELINE.md (r11): totals before
     // r11 are count()-based, comparable only to each other.
-    // Process-CPU seconds sampled around each timed run (r16 verdict
-    // item 3, the GcProbe lesson): wall time on the drain family carries
-    // a ±15-20% ambient spread, but a starved run burns the SAME
-    // cpu-seconds as a fast one while a deopt/rebuild run burns MORE —
-    // cpu_seconds is the stable signal that separates drift from
-    // regression without quiet-window reruns. local[*] executors live
-    // in this JVM, so process CPU captures the whole query's work.
-    val osBean = scala.util.Try(java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]).toOption
-    def cpuNanos: Long = osBean.map(_.getProcessCpuTime).getOrElse(-1L)
-    def runOnce(name: String): (Double, Double) = {
-      val c0 = cpuNanos
-      val t0 = System.nanoTime()
-      try {
+    // Process-CPU and GC seconds sampled around each timed run (r16
+    // verdict item 3): wall time on the drain family carries a ±15-20%
+    // ambient spread, but a starved run burns the SAME cpu-seconds as a
+    // fast one while a deopt/rebuild run burns MORE — cpu_seconds is the
+    // stable signal that separates drift from regression without
+    // quiet-window reruns, and gc_seconds says how much of a slow run was
+    // heap contention rather than plan shape.
+    def runOnce(name: String): Option[Cost] =
+      try Some(GraftSession.cost {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9,
-          if (c0 < 0) -1.0 else (cpuNanos - c0) / 1e9)
-      }
+      })
       catch { case e: Throwable =>
         // Error marker, NOT a near-zero time: a broken query must never
         // read as a fast one (it would *improve* the total).
         errors(name) = (e.getClass.getSimpleName + ": " +
           String.valueOf(e.getMessage)).replace('\n', ' ').take(200)
-        (-1.0, -1.0)
+        None
       }
-    }
-    def load1(): Double = scala.util.Try(
+    // /proc/loadavg's three averages, or None off Linux
+    def loadavg(): Option[Array[String]] = scala.util.Try(
       new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim.split(" ")(0).toDouble)
-      .getOrElse(-1.0)
+        java.nio.file.Paths.get("/proc/loadavg"))).trim.split(" ").take(3))
+      .toOption
+    def load1(): Double =
+      loadavg().flatMap(_.headOption.flatMap(_.toDoubleOption)).getOrElse(-1.0)
     // Contamination guard, per-query (round-9 verdict item 1: the r9
     // artifact was poisoned by a MID-run load spike that a single
     // before-the-run sample sailed past). Three layers:
@@ -71,7 +59,6 @@ object Bench {
     //  3. the contamination flag derives from the run's own expected
     //     footprint (cpus + margin) instead of a hard-coded constant,
     //     and trips if ANY sampled window exceeded it.
-    val nCpus = scala.util.Try(cpus.toInt).getOrElse(4)
     val loadThresh = nCpus.toDouble + 4.0
     val loadBefore = load1()
     var loadMax = loadBefore
@@ -88,10 +75,11 @@ object Bench {
     // delta per query as `cache_build`, so a nonzero entry flags "this
     // time includes N cache rebuilds" in the artifact itself.
     val cacheBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    // returns (warm wall, kept wall, kept cache delta, kept cpu-seconds)
-    def attempt(n: String): (Double, Double, Long, Double) = {
-      val (w, _) = runOnce(n)
-      if (w < 0) return (w, -1.0, 0L, -1.0)
+    // returns the warm wall (-1 on error) and, when both timed runs
+    // succeeded, the kept run's cost with its cache-miss delta
+    def attempt(n: String): (Double, Option[(Cost, Long)]) = {
+      val w = runOnce(n).fold(-1.0)(_.wallSec)
+      if (w < 0) return (w, None)
       errors.remove(n)
       // Counter sampled around EACH timed run separately, and the delta
       // recorded only for the run whose time is KEPT (min), after both
@@ -102,18 +90,17 @@ object Bench {
       // whole attempt, and a discarded attempt's rebuild must not fail
       // the bench or annotate a kept time that never paid it (ADVICE
       // r13) — the caller commits only the delta of the attempt that
-      // supplied the final kept best. cpu_seconds travels the same way:
-      // the artifact carries the cpu of the RUN whose wall was kept.
+      // supplied the final kept best. cpu and gc seconds travel the same
+      // way: the artifact carries the cost of the RUN whose wall was kept.
       val b0 = graft.ops.SessionLru.buildsSoFar
-      val (a, aCpu) = runOnce(n)
+      val a = runOnce(n)
       val b1 = graft.ops.SessionLru.buildsSoFar
-      if (a < 0) return (w, -1.0, 0L, -1.0)
-      val (x, xCpu) = runOnce(n)
+      if (a.isEmpty) return (w, None)
+      val x = runOnce(n)
       val b2 = graft.ops.SessionLru.buildsSoFar
-      if (x < 0) return (w, -1.0, 0L, -1.0)
-      val keptDelta = if (a <= x) b1 - b0 else b2 - b1
-      val keptCpu = if (a <= x) aCpu else xCpu
-      (w, math.min(a, x), keptDelta, keptCpu)
+      if (x.isEmpty) return (w, None)
+      (w, Some(if (a.get.wallSec <= x.get.wallSec) (a.get, b1 - b0)
+        else (x.get, b2 - b1)))
     }
     // Host-speed calibration (r17): a fixed single-thread xorshift loop
     // timed before and after the sweep. On a VM the host's clock /
@@ -139,11 +126,13 @@ object Bench {
     val perLoad = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val retimed = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val perCpu = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val perGc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val results = names.map { n =>
       val lq = load1()
       perLoad(n) = lq
       if (lq > loadMax) loadMax = lq
-      var (warm, best, bestDelta, bestCpu) = attempt(n)
+      var (warm, kept) = attempt(n)
+      def best: Double = kept.fold(-1.0)(_._1.wallSec)
       // Suspect iff the timed min exceeds 3x the warm run (and is not
       // trivially small): the warm run bounds the query's true cost
       // from above, so a far-slower timed run means external load hit
@@ -153,24 +142,24 @@ object Bench {
       while (best >= 0 && tries <= 2 && retriesLeft > 0 &&
           best > 3.0 * warm && best > 0.3) {
         retriesLeft -= 1
-        val (w2, b2, d2, c2) = attempt(n)
+        val (w2, k2) = attempt(n)
         if (w2 >= 0 && w2 < warm) warm = w2
-        if (b2 >= 0 && b2 < best) { best = b2; bestDelta = d2; bestCpu = c2 }
+        k2.filter(_._1.wallSec < best).foreach(k => kept = Some(k))
         tries += 1
         retimed(n) = tries - 1
       }
-      if (best >= 0 && bestDelta > 0) cacheBuilds(n) = bestDelta
-      if (best >= 0) perCpu(n) = bestCpu
+      kept.foreach { case (c, delta) =>
+        if (delta > 0) cacheBuilds(n) = delta
+        perCpu(n) = c.cpuSec
+        perGc(n) = c.gcSec
+      }
       val lEnd = load1()
       if (lEnd > loadMax) loadMax = lEnd
       n -> best
     }
     val calibAfter = calib()
     val loadContaminated = loadMax > loadThresh
-    val loadavg = scala.util.Try(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim.split(" ").take(3)
-        .mkString(" ")).getOrElse("unknown")
+    val loadavgNow = loadavg().map(_.mkString(" ")).getOrElse("unknown")
     def js(s: String): String = JsonEscape(s)
     // Locale.ROOT: scala's "%.2f".format uses the JVM default locale —
     // a comma-decimal locale would emit 0,52 and break the JSON artifact
@@ -178,20 +167,19 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     def fmt3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def fmtLoad(v: Double): String = fmt2(v)
-    val qs = results.map { case (k, v) => js(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val loadJson = perLoad.map { case (k, v) => js(k) + ":" + fmtLoad(v) }
-      .mkString("{", ",", "}")
-    val retimedJson = retimed.map { case (k, v) => js(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val cacheBuildJson = cacheBuilds.map { case (k, v) => js(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => js(k) + ":" + js(v) }
-      .mkString("{", ",", "}")
-    val cpuJson = perCpu.map { case (k, v) => js(k) + ":" + fmt2(v) }
-      .mkString("{", ",", "}")
+    // a JSON object of per-query values, in run order
+    def obj(m: Iterable[(String, Any)]): String =
+      m.map { case (k, v) => js(k) + ":" + v }.mkString("{", ",", "}")
+    val qs = obj(results)
+    val loadJson = obj(perLoad.view.mapValues(fmt2))
+    val retimedJson = obj(retimed)
+    val cacheBuildJson = obj(cacheBuilds)
+    val errJson = obj(errors.view.mapValues(js))
+    val cpuJson = obj(perCpu.view.mapValues(fmt2))
+    val gcJson = obj(perGc.view.mapValues(fmt2))
     val cpuTotal = perCpu.values.filter(_ >= 0).sum
+    val heapMb = Runtime.getRuntime.maxMemory() / (1L << 20)
+    val host = s""""cpus":$nCpus,"master":${js(master)},"""
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // Calib-normalized total (r17 verdict item 2): wall scaled by the
     // pinned reference calib over THIS run's calib, so artifacts from
@@ -212,10 +200,11 @@ object Bench {
       s""""value_calib_normalized":${fmt2(totalCalibNorm)},""" +
       s""""calib_ref_s":${fmt3(calibRef)},""" +
       s""""cpu_seconds":$cpuJson,"cpu_total":${fmt2(cpuTotal)},""" +
+      s""""gc_seconds":$gcJson,"heap_mb":$heapMb,""" + host +
       s""""n_errors":${errors.size},"errors":$errJson,""" +
-      s""""loadavg":${js(loadavg)},"load_before":$loadBefore,""" +
-      s""""load_per_query":$loadJson,"load_max":${fmtLoad(loadMax)},""" +
-      s""""load_threshold":${fmtLoad(loadThresh)},"retimed":$retimedJson,""" +
+      s""""loadavg":${js(loadavgNow)},"load_before":$loadBefore,""" +
+      s""""load_per_query":$loadJson,"load_max":${fmt2(loadMax)},""" +
+      s""""load_threshold":${fmt2(loadThresh)},"retimed":$retimedJson,""" +
       s""""cache_build":$cacheBuildJson,""" +
       s""""calib_before_s":${fmt3(calibBefore)},""" +
       s""""calib_after_s":${fmt3(calibAfter)},""" +
@@ -223,9 +212,9 @@ object Bench {
       s""""action":"noop_write","sf":"$sfDir"}"""
     val compactLine = s"""{"metric":"total_compact","value":$total,"unit":"sec",""" +
       s""""value_calib_normalized":${fmt2(totalCalibNorm)},""" +
-      s""""cpu_total":${fmt2(cpuTotal)},""" +
+      s""""cpu_total":${fmt2(cpuTotal)},""" + host +
       s""""n_queries":${names.size},"n_errors":${errors.size},""" +
-      s""""loadavg":${js(loadavg)},"load_max":${fmtLoad(loadMax)},""" +
+      s""""loadavg":${js(loadavgNow)},"load_max":${fmt2(loadMax)},""" +
       s""""n_retimed":${retimed.size},""" +
       s""""load_contaminated":$loadContaminated,""" +
       s""""action":"noop_write","sf":"$sfDir"}"""
@@ -258,17 +247,13 @@ object Bench {
     // artifact addressable: re-running Bench (e.g. the driver's own
     // sweep) overwrites BENCH_SUMMARY.json in cwd, which kept clobbering
     // the round's frozen numbers (r18 verdict item "working-tree drift").
-    scala.util.Try(java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_SUMMARY.json"),
-      (line + "\n").getBytes("UTF-8")))
-    scala.util.Try {
-      val d = java.nio.file.Paths.get("bench_runs")
-      java.nio.file.Files.createDirectories(d)
-      java.nio.file.Files.write(
-        d.resolve(s"bench-${System.currentTimeMillis()}-pid${
-          ProcessHandle.current().pid()}.json"),
-        (line + "\n").getBytes("UTF-8"))
-    }
+    Seq(java.nio.file.Paths.get("BENCH_SUMMARY.json"),
+      java.nio.file.Paths.get("bench_runs", s"bench-${
+        System.currentTimeMillis()}-pid${ProcessHandle.current().pid()}.json"))
+      .foreach { p => scala.util.Try {
+        Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+        java.nio.file.Files.writeString(p, line + "\n")
+      } }
     spark.stop()
     // report both failures; the query-error code (1) outranks the
     // unparseable-artifact code (3)

@@ -1,0 +1,90 @@
+package graft
+
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+/** The one session rule and the one cost timer every graft main uses.
+  *
+  *  - A session that already exists (a main called in-JVM, as the
+  *    pipeline tests do) is returned unchanged; no conf is re-applied.
+  *  - Otherwise a `spark.master` already in the SparkConf wins — that is
+  *    where spark-submit's `--master` and `-Dspark.master` put it — and
+  *    the session keeps its cluster defaults. A master set in code would
+  *    outrank spark-submit, so nothing here ever sets one for a cluster.
+  *  - With no master set, the session is the local harness: `local[N]`,
+  *    N = `SPARK_GRAFT_CPUS` or else the host's processors, with N
+  *    shuffle partitions, UTC, no UI, 16m file splits and WARN logging.
+  *    The testdata tables are single parquet files well under the 128m
+  *    default split size, which would serialize each scan on one core;
+  *    a cluster keeps its own split size.
+  */
+object GraftSession {
+  def apply(appName: String): SparkSession =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .getOrElse {
+        val conf = new SparkConf() // loads spark.* system properties
+        val local = !conf.contains("spark.master")
+        val spark = SparkSession.builder()
+          .config(resolve(conf, sys.env.get("SPARK_GRAFT_CPUS"))
+            .setIfMissing("spark.app.name", appName))
+          .getOrCreate()
+        if (local) spark.sparkContext.setLogLevel("WARN")
+        spark
+      }
+
+  /** `conf` unchanged when it carries a master; else the local harness. */
+  private[graft] def resolve(conf: SparkConf, cpusEnv: Option[String]): SparkConf =
+    if (conf.contains("spark.master")) conf
+    else {
+      val n = cpusEnv.map(_.trim.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors())
+      conf.setMaster(s"local[$n]")
+        .set("spark.sql.shuffle.partitions", n.toString)
+        .set("spark.sql.session.timeZone", "UTC")
+        .set("spark.ui.enabled", "false")
+        .set("spark.sql.files.maxPartitionBytes", "16m")
+    }
+
+  /** What a block cost: wall, process-CPU and JVM GC seconds. `cpuSec` is
+    * -1 when the JVM exposes no process-CPU counter. Local executors run
+    * in this JVM, so process CPU covers the whole job's work there.
+    */
+  final case class Cost(wallSec: Double, cpuSec: Double, gcSec: Double)
+
+  private val osBean = scala.util.Try(java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]).toOption
+
+  private def cpuNanos: Long = osBean.map(_.getProcessCpuTime).getOrElse(-1L)
+
+  private def gcMillis: Long = java.lang.management.ManagementFactory
+    .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+
+  def cost(body: => Any): Cost = {
+    val c0 = cpuNanos
+    val g0 = gcMillis
+    val t0 = System.nanoTime()
+    body
+    val wall = (System.nanoTime() - t0) / 1e9
+    val c1 = cpuNanos
+    Cost(wall, if (c0 < 0 || c1 < 0) -1.0 else (c1 - c0) / 1e9,
+      (gcMillis - g0) / 1000.0)
+  }
+
+  /** Wait for asynchronously delivered listener events to stop arriving:
+    * `snapshot` must read the same twice in a row, polled every 100 ms
+    * and capped at ~2 s. The listener bus's flush API is private to
+    * Spark, so this poll is the public way to let late events land.
+    */
+  def awaitListenerQuiet(snapshot: () => Any): Unit = {
+    var prev = snapshot()
+    var settled = 0
+    var waited = 0
+    while (settled < 2 && waited < 20) {
+      Thread.sleep(100); waited += 1
+      val cur = snapshot()
+      if (cur == prev) settled += 1 else { settled = 0; prev = cur }
+    }
+  }
+}

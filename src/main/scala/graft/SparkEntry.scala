@@ -32,6 +32,18 @@ object SparkEntry {
       (KafkaLogQueries.queries, KafkaLogQueries.oracle),
       (StreamingQueries.queries, StreamingQueries.oracle))
 
+  /** Declared query names matching the given name prefixes, in argument
+    * order; every declared query, sorted, when no prefix is given. */
+  def queryNames(prefixes: Seq[String]): Seq[String] = {
+    val all = queries.keys.toSeq.sorted
+    if (prefixes.isEmpty) all
+    else prefixes.flatMap { a =>
+      val hits = all.filter(_.startsWith(a))
+      require(hits.nonEmpty, s"no query matches '$a'")
+      hits
+    }.distinct
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.iterator.map(_._1).reduce(_ ++ _)

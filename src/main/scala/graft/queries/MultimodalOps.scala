@@ -317,19 +317,13 @@ object MultimodalOps {
     */
   def quarantineLoop(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Scope shuffle partitions to 8 for the loop, like the streaming
-    // drains do (StreamingQueries.withDrainPartitions): the loop is a
-    // chain of ~15 small sequential jobs (stages, merges, snapshots)
-    // whose per-partition constants dominate at bench scale; a
-    // deployment sizes the conf to its data instead.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    // AQE off for the loop's bounded merge jobs, same rationale and
-    // measurement as StreamingQueries.withDrainPartitions
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // Run the loop under the streaming drains' scope (8 shuffle
+    // partitions, AQE off — StreamingQueries.withDrainPartitions): the
+    // loop is a chain of ~15 small sequential jobs (stages, merges,
+    // snapshots) whose per-partition constants dominate at bench scale;
+    // a deployment sizes the conf to its data instead.
     val base = java.nio.file.Files.createTempDirectory("graft-q91-").toString
-    try {
+    try StreamingQueries.withDrainPartitions(spark) {
       val mainT = s"$base/media_meta"
       val quarT = s"$base/quarantine"
       val nB = 16
@@ -360,8 +354,6 @@ object MultimodalOps {
       spark.createDataFrame((s1 ++ s2).toSeq.asJava, schema)
         .orderBy(col("cycle"), col("media_type"))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       scala.util.Try(org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(base)))
     }

@@ -43,7 +43,7 @@ object StreamingQueries {
     * around start() is safe, and it is restored before any other query
     * plans.
     */
-  private def withDrainPartitions[A](spark: SparkSession)(body: => A): A = {
+  private[graft] def withDrainPartitions[A](spark: SparkSession)(body: => A): A = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", "8")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** MergeTable scaling matrix over production-ish bucket counts (r16
@@ -30,28 +30,13 @@ import org.apache.spark.sql.functions._
 object BucketScale {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sfbig100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val bucketCounts =
       if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(16, 256, 1024)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def timedCpu[A](body: => A): (A, Double, Double) = {
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      val r = body
-      (r, (System.nanoTime() - t0) / 1e9,
-        (osBean.getProcessCpuTime - c0) / 1e9)
-    }
+    val spark = GraftSession("graft-bucket-scale")
+    // 64m splits, not the harness's 16m: BENCH_100X_r17's matrix was
+    // recorded at 64m, and the split size sets the lineitem scan's task
+    // count, so new runs stay comparable with it
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64m")
     import graft.merge.MergeTable
     val keys = Seq("l_orderkey", "l_linenumber")
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -70,11 +55,9 @@ object BucketScale {
 
     bucketCounts.foreach { nB =>
       val path = s"$base/li-$nB"
-      val (_, initWall, initCpu) = timedCpu {
-        MergeTable.write(li, path, keys, nB)
-      }
+      val init = GraftSession.cost { MergeTable.write(li, path, keys, nB) }
       println(f"""{"probe":"bucket_scale","nB":$nB,"phase":"init",""" +
-        f""""wall":$initWall%.2f,"cpu":$initCpu%.2f,"rows":$nRows}""")
+        f""""wall":${init.wallSec}%.2f,"cpu":${init.cpuSec}%.2f,"rows":$nRows}""")
       Seq("skew5" -> math.max(1, nB / 20), "uniform" -> nB).foreach {
         case (pattern, nTouch) =>
           val subset = (0 until nTouch).toSet
@@ -96,7 +79,7 @@ object BucketScale {
             val preBytes = dirBytes(path, touched)
             val phases = scala.collection.mutable.Map[String, Double]()
               .withDefaultValue(0.0)
-            val (_, wall, cpu) = timedCpu {
+            val c = GraftSession.cost {
               MergeTable.merge(delta, path, keys, nB, _ => (),
                 probe = (ph, ns) => phases(ph) += ns / 1e9,
                 knownAffected = Some(touched))
@@ -107,7 +90,7 @@ object BucketScale {
               f""""pattern":"$pattern","batch":$batch,""" +
               f""""delta_rows":$deltaRows,"touched":${touched.size},""" +
               f""""touched_mb":${preBytes / 1e6}%.1f,""" +
-              f""""wall":$wall%.2f,"cpu":$cpu%.2f,"phases":{$ph}}""")
+              f""""wall":${c.wallSec}%.2f,"cpu":${c.cpuSec}%.2f,"phases":{$ph}}""")
           }
       }
       // constant-isolation datapoint: a near-empty delta (one key) —
@@ -115,12 +98,12 @@ object BucketScale {
       val one = li.limit(1)
         .withColumn("l_returnflag", concat(col("l_returnflag"), lit("#tiny")))
       val oneTouched = MergeTable.bucketIds(one, keys, nB).toSeq
-      val (_, tinyWall, tinyCpu) = timedCpu {
+      val tiny = GraftSession.cost {
         MergeTable.merge(one, path, keys, nB, _ => (),
           knownAffected = Some(oneTouched))
       }
       println(f"""{"probe":"bucket_scale","nB":$nB,"phase":"tiny_delta",""" +
-        f""""wall":$tinyWall%.2f,"cpu":$tinyCpu%.2f,""" +
+        f""""wall":${tiny.wallSec}%.2f,"cpu":${tiny.cpuSec}%.2f,""" +
         f""""touched":${oneTouched.size}}""")
       // clean up this table before the next config (disk headroom)
       scala.util.Try(org.apache.commons.io.FileUtils

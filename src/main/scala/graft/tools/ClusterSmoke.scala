@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the streaming clustering sink: fold the documents
@@ -23,23 +23,14 @@ object ClusterSmoke {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(10)
     val compactEvery = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-cluster-smoke")
     val state = java.nio.file.Files.createTempDirectory("graft-csmoke").toString
     val docs = graft.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     def stateDirs(sub: String): Int =
       Option(new java.io.File(s"$state/$sub").listFiles())
         .map(_.count(f => f.isDirectory && !f.getName.endsWith(".next") &&
           !f.getName.endsWith(".old"))).getOrElse(0)
-    val tAll = System.nanoTime()
-    val perBatch = (0 until nBatches).map { b =>
-      val t = System.nanoTime()
+    val perBatch = (0 until nBatches).map(b => GraftSession.cost {
       graft.streaming.Streaming.clusterBatch(
         docs.filter(col("doc_id") % nBatches === b), b.toLong, state,
         graft.queries.ClusterOps.clusterJaccard, nBuckets = 16,
@@ -52,9 +43,8 @@ object ClusterSmoke {
         require(dd <= compactEvery + 2 && stateDirs("bandkeys") <= compactEvery + 2,
           s"state dirs unbounded: docs=$dd after batch $b")
       }
-      (System.nanoTime() - t) / 1e9
-    }
-    val foldSec = (System.nanoTime() - tAll) / 1e9
+    }.wallSec)
+    val foldSec = perBatch.sum
     val t1 = System.nanoTime()
     val batch = graft.queries.ClusterOps.dupClusters(spark, dir)
       .select(col("doc_id"), col("cluster_id"))

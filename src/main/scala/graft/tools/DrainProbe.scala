@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -27,25 +28,16 @@ import scala.collection.mutable
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *          sbt "runMain graft.tools.DrainProbe [repeats]"
+  * (session per [[graft.GraftSession]]; each drain runs under the same
+  * `StreamingQueries.withDrainPartitions` scope as the declared drains).
   * Prints one JSON line per run; the BUILD_NOTES R16 attribution table
   * is transcribed from this output.
   */
 object DrainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = args.headOption.map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-drain-probe")
     import spark.implicits._
 
     (1 to repeats).foreach { run =>
@@ -66,11 +58,7 @@ object DrainProbe {
       }
       spark.streams.addListener(listener)
 
-      def sec[A](body: => A): (A, Double) = {
-        val t0 = System.nanoTime()
-        val r = body
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
+      def sec(body: => Any): Double = GraftSession.cost(body).wallSec
 
       val base = java.nio.file.Files
         .createTempDirectory("graft-drainprobe-").toString
@@ -78,19 +66,14 @@ object DrainProbe {
       val quarT = s"$base/quarantine"
       val src = s"$base/src"
       val blobs = graft.multimodal.Multimodal.documentBlobs(spark, sfDir)
-      val (_, fixtureSec) = sec {
+      val fixtureSec = sec {
         blobs.map { r =>
           if (r.media_id % 7 == 0) r.copy(content = r.content.take(5)) else r
         }.toDF().repartitionByRange(3, col("media_id")).write.parquet(src)
       }
       val schema = spark.read.parquet(src).schema
-      def drain(): Double = {
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set("spark.sql.adaptive.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-        try sec {
+      def drain(): Double =
+        graft.queries.StreamingQueries.withDrainPartitions(spark)(sec {
           val q = spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1").parquet(src)
             .writeStream
@@ -108,45 +91,26 @@ object DrainProbe {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           q.awaitTermination()
-        }._2
-        finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prev)
-          spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        }
-      }
+        })
       val drain1Sec = drain()
-      val (_, repairSec) = sec {
+      val repairSec = sec {
         blobs.filter(_.media_id % 7 == 0).toDF()
           .repartitionByRange(2, col("media_id"))
           .write.mode("append").parquet(src)
       }
       val drain2Sec = drain()
-      val (_, snapSec) = sec {
+      val snapSec = sec {
         // q93's snapshot equivalent: one aggregate over each table
         graft.merge.MergeTable.read(spark, mainT)
           .groupBy("media_type").count().collect()
         graft.merge.MergeTable.read(spark, quarT)
           .groupBy("media_type", "status").count().collect()
       }
-      // Progress events are delivered asynchronously on the listener
-      // bus — removing the listener right after awaitTermination can
-      // drop late events and undercount the durationMs attribution.
-      // The bus-flush API is private[spark], so poll for quiescence:
-      // the totals must hold still across two consecutive reads
-      // (bounded at ~2 s — a missing final event skews one trigger's
-      // share, never the wall segments).
-      locally {
-        def snap(): (Int, Double) =
-          durations.synchronized { (nTriggers, durations.values.sum) }
-        var prev = snap()
-        var settled = 0
-        var waited = 0
-        while (settled < 2 && waited < 20) {
-          Thread.sleep(100); waited += 1
-          val cur = snap()
-          if (cur == prev) settled += 1 else { settled = 0; prev = cur }
-        }
-      }
+      // progress events arrive asynchronously: let late ones land
+      // before removing the listener (a missing final event skews one
+      // trigger's share, never the wall segments)
+      GraftSession.awaitListenerQuiet(() =>
+        durations.synchronized { (nTriggers, durations.values.sum) })
       spark.streams.removeListener(listener)
       val total = fixtureSec + drain1Sec + repairSec + drain2Sec + snapSec
       def m(map: mutable.Map[String, Double]): String = map.toSeq.sortBy(-_._2)

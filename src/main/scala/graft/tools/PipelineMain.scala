@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions.col
   *    convergence);
   *  - `run`: both stages, one command.
   *
-  * Usage (spark-submit provides the master/cluster conf; local runs fall
-  * back to local[*]):
+  * Usage (the master comes from spark-submit's `--master` or
+  * `-Dspark.master`; with neither, [[graft.GraftSession]] runs the local
+  * harness, `local[SPARK_GRAFT_CPUS or nproc]`):
   * {{{
   *   PipelineMain ingest --servers <brokers|kafka-log root> --topic shots \
   *     --out /data/ongoing --checkpoint /data/ckpt \
@@ -39,11 +40,7 @@ object PipelineMain {
     require(args.nonEmpty, usage)
     val cmd = args.head
     val opts = parseOpts(args.tail)
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-pipeline")
     cmd match {
       case "ingest" => ingest(spark, opts)
       case "merge" => mergePublish(spark, opts)

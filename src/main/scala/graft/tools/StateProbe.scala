@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Per-trigger STATE-STORE attribution for the stateful drain queries
   * (r18 verdict item 4: "verify q85's watermark/interval condition
@@ -13,49 +14,38 @@ import scala.collection.mutable
   * durationMs split — so claims about state size are measured from the
   * real path, never estimated.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  * Usage: SPARK_GRAFT_SF_DIR=<sf0.1 data dir> \
   *          sbt "runMain graft.tools.StateProbe q85 q89 q80"
-  * Prints one JSON line per (query, trigger) with state metrics and a
-  * per-query wall/cpu line.
+  * (session per [[graft.GraftSession]]: `local[SPARK_GRAFT_CPUS or nproc]`
+  * unless `-Dspark.master` names one). Prints one JSON line per (query,
+  * trigger) with state metrics and a per-query wall/cpu line.
   */
 object StateProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "16m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-state-probe")
     val all = graft.SparkEntry.queries
-    val names = args.toSeq.flatMap { a =>
-      val hits = all.keys.filter(_.startsWith(a)).toSeq.sorted
-      if (hits.isEmpty) { println(s"no query matches '$a'"); Nil } else hits
-    }
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val names = graft.SparkEntry.queryNames(args.toSeq)
 
     // one JSON line per trigger, buffered under a lock (listener bus is
-    // async); flushed after each query's quiescence wait
+    // async); flushed after each query's quiescence wait. Each event is
+    // filed under the query that STARTED its stream: onQueryStarted runs
+    // synchronously inside start(), on the thread running query
+    // `current`, so the run id → name map is exact, and an event that
+    // lands after the poll cap keeps its own query's name.
     val lines = mutable.ArrayBuffer.empty[String]
     var current = "none"
+    val nameOf = mutable.Map.empty[java.util.UUID, String]
     val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        lines.synchronized { nameOf(e.runId) = current }
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
       override def onQueryProgress(e: QueryProgressEvent): Unit =
         lines.synchronized {
           val p = e.progress
-          val dur = {
-            val b = mutable.ArrayBuffer.empty[String]
-            p.durationMs.forEach((k, v) => b += s""""$k":$v""")
-            b.sorted.mkString("{", ",", "}")
-          }
+          val dur = p.durationMs.asScala.toSeq.sortBy(_._1)
+            .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
           val ops = p.stateOperators.zipWithIndex.map { case (o, i) =>
             s"""{"op":"${o.operatorName}","i":$i,""" +
               s""""rows_total":${o.numRowsTotal},""" +
@@ -64,33 +54,26 @@ object StateProbe {
               s""""mem_bytes":${o.memoryUsedBytes},""" +
               s""""commit_ms":${o.commitTimeMs}}"""
           }.mkString("[", ",", "]")
-          lines += s"""{"probe":"state","q":"$current","batch":${p.batchId},""" +
+          val q = nameOf.getOrElse(p.runId, "unknown")
+          lines += s"""{"probe":"state","q":"$q","batch":${p.batchId},""" +
             s""""rows_in":${p.numInputRows},"durationMs":$dur,""" +
             s""""stateOperators":$ops}"""
         }
     }
     spark.streams.addListener(listener)
+    def flush(): Unit = lines.synchronized { lines.foreach(println); lines.clear() }
     names.foreach { n =>
-      lines.synchronized { current = n; lines.clear() }
-      val c0 = osBean.getProcessCpuTime
-      val t0 = System.nanoTime()
-      all(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-      // poll for listener quiescence (DrainProbe rule: the bus is async)
-      locally {
-        def snap(): Int = lines.synchronized(lines.size)
-        var prev = snap(); var settled = 0; var waited = 0
-        while (settled < 2 && waited < 20) {
-          Thread.sleep(100); waited += 1
-          val cur = snap()
-          if (cur == prev) settled += 1 else { settled = 0; prev = cur }
-        }
+      lines.synchronized { current = n }
+      val c = GraftSession.cost {
+        all(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-      lines.synchronized { lines.foreach(println) }
-      println(f"""{"probe":"state_total","q":"$n","wall":$wall%.2f,"cpu":$cpu%.2f}""")
+      GraftSession.awaitListenerQuiet(() => lines.synchronized(lines.size))
+      flush()
+      println(f"""{"probe":"state_total","q":"$n","wall":${c.wallSec}%.2f,""" +
+        f""""cpu":${c.cpuSec}%.2f}""")
     }
     spark.streams.removeListener(listener)
+    flush() // events that arrived after the last query's poll cap
     System.out.flush()
     spark.stop()
   }

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{GetJsonObject, RegExpExtract}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
-import org.apache.spark.sql.execution.{FormattedMode, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, FormattedMode, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -666,6 +666,12 @@ class PlanShapeSpec extends SparkTestBase {
           // relevance predicate mentioning bcnt above the block window
           val bhj = all.collect { case j: BroadcastHashJoinExec => j }
           assert(bhj.nonEmpty, s"$n: block attach must stay a broadcast join")
+          val buildFilters = all.collect { case b: BroadcastExchangeExec => b }
+            .flatMap(b => collectAll(b).collect { case f: FilterExec => f })
+          assert(buildFilters.exists(_.condition.references
+              .exists(a => a.name == "bcnt" || a.name == "blk_before")),
+            s"$n: the broadcast side must carry the bcnt/blk_before " +
+              s"relevance filter, got ${buildFilters.map(_.condition.sql)}")
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
