@@ -108,6 +108,8 @@ object Merge {
   /** S5 small-artifact path: single CSV inside a `.tgz`
     * (spark_merge_dfs.py:86-128). coalesce(1) narrows without a shuffle;
     * the repack runs on the driver over the one part file.
+    * Packed at the sibling `<tgz>.next` and [[Swap.replace]]d in, so a
+    * kill mid-pack never leaves a truncated artifact as the only copy.
     */
   def publishTgz(df: DataFrame, tmpDir: String, tgzPath: String,
       csvName: String): Unit = {
@@ -119,9 +121,11 @@ object Merge {
       .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".csv"))
       .getOrElse(throw new java.io.FileNotFoundException(s"no part file in $tmpDir"))
     val outP = new Path(tgzPath)
+    val next = new Path(tgzPath + ".next")
     val outFs = FileSystem.get(outP.toUri, conf)
+    Swap.recover(outFs, outP)
     val tar = new TarArchiveOutputStream(
-      new GZIPOutputStream(new BufferedOutputStream(outFs.create(outP, true))))
+      new GZIPOutputStream(new BufferedOutputStream(outFs.create(next, true))))
     try {
       val len = fs.getFileStatus(part).getLen
       val entry = new TarArchiveEntry(csvName)
@@ -138,6 +142,7 @@ object Merge {
       finally in.close()
       tar.closeArchiveEntry()
     } finally tar.close()
+    Swap.replace(outFs, outP, next)
     fs.delete(tmp, true)
   }
 }

@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   *  2. reads ONLY the affected partition dirs (partition pruning — the
   *     scan never touches untouched buckets);
   *  3. merges delta-wins per key (`Merge.mergeDeterministic`);
-  *  4. atomically swaps ONLY the affected partition dirs, with the same
-  *     `.old`-backup discipline as `ScaleOps.compact`: some complete copy
-  *     of every bucket exists on disk at every instant, and a crashed
-  *     merge is recovered from `.old` on the next call.
+  *  4. atomically swaps ONLY the affected partition dirs through
+  *     [[Swap]]: some complete copy of every bucket exists on disk at
+  *     every instant, and a crashed merge is recovered from `.old` on the
+  *     next call.
   *
   * Per-batch cost is O(delta + affected-partition bytes), not O(table):
   * with a 100 TB season in 4096 buckets, a delta touching 3% of keys
@@ -122,31 +122,17 @@ object MergeTable {
   private def decKey(k: String): String =
     java.net.URLDecoder.decode(k, "UTF-8")
 
+  // atomic (Swap.writeText): readers see the old `_meta`, none (absent
+  // skips read-side verification) or the new one, never a torn file
   private def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, keys: Seq[String], nBuckets: Int): Unit = {
-    // temp-file + rename: a direct create(overwrite) exposes a
-    // created-but-unwritten `_meta` to concurrent readers (the e2e soak
-    // caught readers failing on "missing nBuckets field" mid-stamp).
-    // With the rename, readers see the old `_meta`, none at all (both
-    // fine — absent skips read-side verification), or the complete new
-    // one — never a torn file.
-    val tmp = new org.apache.hadoop.fs.Path(p, MetaFile + ".tmp")
-    val dst = new org.apache.hadoop.fs.Path(p, MetaFile)
-    val out = fs.create(tmp, true)
-    try out.write(s"nBuckets=$nBuckets\nkeys=${keys.map(encKey).mkString(",")}\n"
-      .getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    require(fs.rename(tmp, dst), s"MergeTable: _meta rename failed at $dst")
-  }
+      p: org.apache.hadoop.fs.Path, keys: Seq[String], nBuckets: Int): Unit =
+    Swap.writeText(fs, new org.apache.hadoop.fs.Path(p, MetaFile),
+      s"nBuckets=$nBuckets\nkeys=${keys.map(encKey).mkString(",")}\n")
 
   private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[(Int, Seq[String])] = {
     val f = new org.apache.hadoop.fs.Path(p, MetaFile)
-    if (!fs.exists(f)) return None
-    try {
-      val in = fs.open(f)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    try Swap.readText(fs, f).map { text =>
       val fields = text.linesIterator.filter(_.contains("="))
         .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
       val nBuckets = fields.getOrElse("nBuckets",
@@ -154,7 +140,7 @@ object MergeTable {
       val keys = fields.getOrElse("keys",
         throw new IllegalStateException("missing keys field"))
         .split(",", -1).toSeq.filter(_.nonEmpty).map(decKey)
-      Some((nBuckets, keys))
+      (nBuckets, keys)
     } catch {
       // name the file: a truncated/corrupt _meta should read as "this
       // table's metadata is damaged", not a bare NoSuchElement/NumberFormat
@@ -171,10 +157,8 @@ object MergeTable {
     * [[bucketColumn]] instead of threading write-time parameters
     * through every call site.
     */
-  def meta(spark: SparkSession, path: String): Option[(Int, Seq[String])] = {
-    val (fs, p) = fsOf(spark, path)
-    if (!fs.exists(p)) None else readMeta(fs, p)
-  }
+  def meta(spark: SparkSession, path: String): Option[(Int, Seq[String])] =
+    fsOf(spark, path) match { case (fs, p) => readMeta(fs, p) }
 
   /** Validate caller bucketing against the persisted `_meta`; tables
     * created before `_meta` existed are stamped with the caller's values
@@ -205,55 +189,6 @@ object MergeTable {
     Merge.deterministicWinner(base, d, keys,
       extraPartitionCols = Seq(BucketCol))
 
-  /** Recover any bucket dir a crashed merge left only in `.old`. Called
-    * by the WRITER (merge) only — a reader must never mutate the table,
-    * or it races a concurrent merge's two-rename swap: resurrecting the
-    * backup between the writer's renames would make the writer's
-    * `rename(next, live)` fail and silently drop that bucket's merge.
-    * (Staged replacements live in the sibling `__staging` dir, which
-    * `merge` clears at start — nothing else is ever created inside the
-    * table dir.)
-    */
-  /** Remove a bucket dir ATOMICALLY from a reader's point of view. A
-    * plain recursive delete has a window where the dir still lists but
-    * its files are already unlinked — a reader that chose that dir then
-    * scans ZERO rows with no error, a silent torn snapshot missing the
-    * whole bucket (found by MergeSpec's reader-vs-writer soak: 224 of
-    * 240 keys, no exception anywhere). Renaming to a dot-hidden name
-    * first is one atomic step out of the reader-visible namespace
-    * (readers match only `__bucket=` prefixes; Hadoop/Spark listings
-    * skip dot-paths): a racing reader either still had the complete
-    * copy or fails with a missing-path error that [[readRetrying]]
-    * classifies and retries. The hidden dir is then deleted invisibly;
-    * a crash between the two leaves only hidden garbage, swept by
-    * [[recover]] on the next writer call.
-    */
-  private def removeFromView(fs: org.apache.hadoop.fs.FileSystem,
-      tableDir: org.apache.hadoop.fs.Path,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(dir)) return
-    val hidden = new org.apache.hadoop.fs.Path(tableDir,
-      s".trash-${dir.getName}-${System.nanoTime()}")
-    if (fs.rename(dir, hidden)) fs.delete(hidden, true)
-    else fs.delete(dir, true) // rename refused (shouldn't happen) — degrade
-  }
-
-  private def recover(spark: SparkSession, path: String): Unit = {
-    val (fs, p) = fsOf(spark, path)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (name.endsWith(".old")) {
-        val live = new org.apache.hadoop.fs.Path(p, name.stripSuffix(".old"))
-        if (!fs.exists(live))
-          require(fs.rename(st.getPath, live), s"recover: rename failed for $name")
-        else removeFromView(fs, p, st.getPath) // swap completed; drop backup
-      } else if (name.startsWith(".trash-")) {
-        fs.delete(st.getPath, true) // hidden garbage from a crashed delete
-      }
-    }
-  }
-
   /** Initial (or full re-) write of the table in the bucketed layout —
     * bucket-clustered like merge's staged write: one file per bucket
     * dir, not one per (task, bucket) pair. */
@@ -270,12 +205,9 @@ object MergeTable {
   /** Read the table (bucket column dropped — layout is an implementation
     * detail of the merge, not part of the row schema).
     *
-    * NON-MUTATING crash-consistent view: each bucket is read from its
-    * live dir, or from a stranded `.old` backup when the live dir is
-    * absent (a merge crashed between its two renames). When both exist
-    * the live dir wins — the swap completed and the backup is stale.
-    * Actual on-disk repair is [[recover]], run by the single writer on
-    * its next merge; readers only observe.
+    * NON-MUTATING crash-consistent view ([[Swap.visible]]): each bucket
+    * from its live dir, else from a `.old` backup stranded by a merge
+    * killed between its renames; repair is the writer's job.
     *
     * A single directory listing is NOT atomic against a concurrent swap
     * (paginated listStatus RPCs on HDFS, unordered readdir locally): a
@@ -353,25 +285,23 @@ object MergeTable {
     */
   def presentBucketIds(spark: SparkSession, path: String): Set[Int] = {
     val (fs, p) = fsOf(spark, path)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith(BucketCol + "="))
-      .map(_.stripPrefix(BucketCol + "=").stripSuffix(".old").toInt).toSet
+    if (!fs.exists(p)) Set.empty else bucketNames(fs, p).map(bucketIdOf).toSet
   }
+
+  /** Bucket dir names (live and `.old`) in one listing of `dir`. */
+  private def bucketNames(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[String] =
+    fs.listStatus(dir).map(_.getPath.getName).toSeq
+      .filter(_.startsWith(BucketCol + "="))
+
+  private def bucketIdOf(name: String): Int =
+    name.stripPrefix(BucketCol + "=").stripSuffix(Swap.OldSuffix).toInt
 
   private def readPruned(spark: SparkSession, path: String,
       buckets: Option[Set[Int]]): DataFrame = {
     val (fs, p) = fsOf(spark, path)
-    def bucketIdOfName(n: String): Int =
-      n.stripPrefix(BucketCol + "=").stripSuffix(".old").toInt
-    def chosenSet(): Set[String] = {
-      val names = fs.listStatus(p).map(_.getPath.getName)
-        .filter(_.startsWith(BucketCol + "="))
-        .filter(n => buckets.forall(_.contains(bucketIdOfName(n))))
-      val live = names.filterNot(_.endsWith(".old")).toSet
-      live ++ names
-        .filter(n => n.endsWith(".old") && !live.contains(n.stripSuffix(".old")))
-    }
+    def chosenSet(): Set[String] = Swap.visible(bucketNames(fs, p)
+      .filter(n => buckets.forall(_.contains(bucketIdOf(n)))))
     // The stability loop alone is NOT enough on a local FS: Hadoop's
     // RawLocalFileSystem.listStatus stats each readdir name and SKIPS
     // entries whose stat fails ("the dir list may have changed"), so a
@@ -399,8 +329,7 @@ object MergeTable {
           .getOrElse(Set.empty))
       (candidates -- chosenIds).exists { id =>
         val live = new org.apache.hadoop.fs.Path(p, s"$BucketCol=$id")
-        val bak = new org.apache.hadoop.fs.Path(p, s"$BucketCol=$id.old")
-        fs.exists(live) || fs.exists(bak) || fs.exists(live)
+        fs.exists(live) || fs.exists(Swap.backup(live)) || fs.exists(live)
       }
     }
     var chosen = chosenSet()
@@ -409,7 +338,7 @@ object MergeTable {
     while (!ok && tries < 8) {
       val again = chosenSet()
       if (again == chosen &&
-          !claimedAbsentHidden(chosen.map(bucketIdOfName))) ok = true
+          !claimedAbsentHidden(chosen.map(bucketIdOf))) ok = true
       else chosen = again // unstable or a hidden bucket: next round re-lists
       tries += 1
     }
@@ -508,6 +437,44 @@ object MergeTable {
     throw last
   }
 
+  /** `body`, reporting its wall nanos to `probe` under `phase`. */
+  private[graft] def timed[A](probe: (String, Long) => Unit, phase: String)(
+      body: => A): A = {
+    val t0 = System.nanoTime()
+    val r = body
+    probe(phase, System.nanoTime() - t0)
+    r
+  }
+
+  /** The staged-rewrite tail of [[merge]] and [[deleteWhere]]: clear the
+    * sibling `__staging` dir, `stage` the rewrite into it by bucket,
+    * `verify` the staged bucket ids while the table is untouched, then
+    * [[Swap.replace]] each affected bucket and drop staging. An affected
+    * bucket with no staged dir is removed with `absentRemoves` (all its
+    * rows deleted); without it (merge: delta-wins stages every affected
+    * bucket) it is a writer anomaly that fails before live is touched.
+    */
+  private def stagedRewrite(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, affected: Seq[Int],
+      absentRemoves: Boolean, probe: (String, Long) => Unit,
+      onBucketSwapped: Int => Unit)(stage: String => Unit)(
+      verify: Set[Int] => Unit): Unit = {
+    val staging = new org.apache.hadoop.fs.Path(p.toString + "__staging")
+    if (fs.exists(staging)) fs.delete(staging, true)
+    timed(probe, "stage_write") { stage(staging.toString) }
+    verify(if (!fs.exists(staging)) Set.empty[Int]
+      else bucketNames(fs, staging).map(bucketIdOf).toSet)
+    timed(probe, "swap") {
+      affected.foreach { b =>
+        val name = s"$BucketCol=$b"
+        Swap.replace(fs, new org.apache.hadoop.fs.Path(p, name),
+          new org.apache.hadoop.fs.Path(staging, name), absentRemoves)
+        onBucketSwapped(b)
+      }
+      fs.delete(staging, true)
+    }
+  }
+
   /** MERGE: upsert `delta` into the table at `path`, delta-wins per key,
     * touching only the partition dirs whose buckets appear in the delta.
     * Creates the table if absent.
@@ -518,7 +485,7 @@ object MergeTable {
     *    `upsertSink` is its season's only writer, and its micro-batches
     *    are sequential by construction).
     *  - Readers are safe and NON-MUTATING ([[read]] never repairs the
-    *    table — writer-side [[recover]] does): between any two bucket
+    *    table — the writer's [[Swap.recover]] does): between any two bucket
     *    swaps every bucket dir holds a complete copy (entirely pre-merge
     *    or entirely post-merge), and a key lives in exactly one bucket,
     *    so a read observes each key exactly once with its old or new
@@ -562,33 +529,19 @@ object MergeTable {
       nBuckets: Int, onBucketSwapped: Int => Unit,
       probe: (String, Long) => Unit = (_, _) => (),
       knownAffected: Option[Seq[Int]] = None): Seq[Int] = {
-    def timed[A](phase: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      probe(phase, System.nanoTime() - t0)
-      r
-    }
     val spark = delta.sparkSession
     val (fs, p) = fsOf(spark, path)
-    recover(spark, path)
-    if (!fs.exists(p)) {
-      timed("create") { write(delta, path, keys, nBuckets) }
-      // create path: the bucket set wasn't needed for pruning, so it is
-      // computed here once (table creation happens once per table) —
-      // unless the caller already knows it
-      return knownAffected.map(_.sorted)
-        .getOrElse(bucketIds(delta, keys, nBuckets).toSeq.sorted)
-    }
-    checkMeta(fs, p, keys, nBuckets)
+    // writer-side repair of a crashed swap (readers never mutate); staged
+    // replacements live in the sibling `__staging` dir, never inside p
+    Swap.recoverAll(fs, p)
+    val created = !fs.exists(p)
+    if (created) timed(probe, "create") { write(delta, path, keys, nBuckets) }
+    else checkMeta(fs, p, keys, nBuckets)
+    // bounded by nBuckets rows; on the create path only the return value
+    val affected = knownAffected.getOrElse(
+      timed(probe, "affected") { bucketIds(delta, keys, nBuckets).toSeq }).sorted
+    if (created || affected.isEmpty) return affected
     val d = delta.withColumn(BucketCol, bucketColumn(keys, nBuckets))
-    // bounded by nBuckets rows — metadata-scale, never data-scale
-    val affected = knownAffected.map(_.sorted.toArray).getOrElse {
-      timed("affected") {
-        d.select(col(BucketCol)).distinct()
-          .collect().map(_.getInt(0)).sorted
-      }
-    }
-    if (affected.isEmpty) return Nil
     // partition-pruned base read: only affected bucket dirs are scanned
     val base = spark.read.parquet(path)
       .filter(col(BucketCol).isin(affected.map(Integer.valueOf): _*))
@@ -607,57 +560,30 @@ object MergeTable {
     // per (task, bucket) pair — 256 tiny files from a 16-task merge
     // touching 16 buckets, re-read and re-planned by every later merge).
     val merged = rewritePlan(base, d, keys)
-    // staged write for all affected buckets, then per-dir swaps: every
-    // bucket dir has a complete copy (live or .old) at every instant.
-    val staging = new org.apache.hadoop.fs.Path(path + "__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    timed("stage_write") {
-      merged.write.partitionBy(BucketCol).parquet(staging.toString)
+    stagedRewrite(fs, p, affected, absentRemoves = false, probe,
+        onBucketSwapped)(merged.write.partitionBy(BucketCol).parquet(_)) {
+      staged =>
+        // Guard against a WRONG `knownAffected` subset: a delta row hashing
+        // to a bucket NOT in `affected` is staged (partitionBy writes its
+        // dir) but the swap loop would never rename it in, and the
+        // staging delete would then discard it — silent data loss, the same
+        // failure class the swap's exists-check and deleteWhere's
+        // kept-bucket guard fail loudly on. The staged dir listing IS the
+        // ground truth for which buckets the delta actually touched (the
+        // writer wrote them from the delta's own rows), so requiring
+        // staged ⊆ affected catches a stale or subset caller set BEFORE any
+        // rename, while the live table is still untouched. One cheap fs
+        // listing, no extra Spark job; when `affected` was computed from
+        // the delta itself the check holds by construction.
+        val unswapped = staged -- affected
+        require(unswapped.isEmpty,
+          s"MergeTable: staged output contains bucket(s) " +
+            s"${unswapped.toSeq.sorted.mkString(",")} absent from the " +
+            s"affected set [${affected.mkString(",")}] — a wrong " +
+            "knownAffected subset would silently drop those rows; aborting " +
+            "before any swap")
     }
-    // Guard against a WRONG `knownAffected` subset: a delta row hashing
-    // to a bucket NOT in `affected` is staged (partitionBy writes its
-    // dir) but the swap loop below would never rename it in, and the
-    // staging delete would then discard it — silent data loss, the same
-    // failure class the swap's exists-check and deleteWhere's
-    // kept-bucket guard fail loudly on. The staged dir listing IS the
-    // ground truth for which buckets the delta actually touched (the
-    // writer wrote them from the delta's own rows), so requiring
-    // staged ⊆ affected catches a stale or subset caller set BEFORE any
-    // rename, while the live table is still untouched. One cheap fs
-    // listing, no extra Spark job; when `affected` was computed from
-    // the delta itself the check holds by construction.
-    val stagedBuckets = fs.listStatus(staging).map(_.getPath.getName)
-      .filter(_.startsWith(BucketCol + "="))
-      .map(_.stripPrefix(BucketCol + "=").toInt).toSet
-    val unswapped = stagedBuckets -- affected.toSet
-    require(unswapped.isEmpty,
-      s"MergeTable: staged output contains bucket(s) " +
-        s"${unswapped.toSeq.sorted.mkString(",")} absent from the " +
-        s"affected set [${affected.mkString(",")}] — a wrong " +
-        "knownAffected subset would silently drop those rows; aborting " +
-        "before any swap")
-    timed("swap") {
-      affected.foreach { b =>
-        val live = new org.apache.hadoop.fs.Path(p, s"$BucketCol=$b")
-        val bak = new org.apache.hadoop.fs.Path(p, s"$BucketCol=$b.old")
-        val next = new org.apache.hadoop.fs.Path(staging, s"$BucketCol=$b")
-        // Fail loudly BEFORE touching the live dir if the staged output is
-        // missing: delta-wins semantics guarantee every affected bucket has
-        // rows, so an absent staging dir means a writer anomaly — renaming
-        // live away and deleting its backup would silently destroy the
-        // bucket's only copy.
-        require(fs.exists(next),
-          s"MergeTable: staged output missing for bucket $b under $staging")
-        removeFromView(fs, p, bak)
-        if (fs.exists(live))
-          require(fs.rename(live, bak), s"MergeTable: backup rename failed for bucket $b")
-        require(fs.rename(next, live), s"MergeTable: swap rename failed for bucket $b")
-        removeFromView(fs, p, bak)
-        onBucketSwapped(b)
-      }
-      fs.delete(staging, true)
-    }
-    affected.toSeq
+    affected
   }
 
   /** DELETE: remove every row matching `predicate`, rewriting only the
@@ -665,18 +591,14 @@ object MergeTable {
     * table's lifecycle (merge grows it, delete retires it; the quarantine
     * table's resolved-tombstone retention is the motivating caller).
     *
-    * Same single-writer + swap discipline as [[merge]]: staged rewrite,
-    * per-bucket two-rename swap with `.old` backups, crash recovery on
-    * the next writer call. Two differences:
-    *  - a bucket whose rows ALL match is removed outright (partitionBy
-    *    writes no dir for an empty bucket — the absent staged dir means
-    *    "this bucket is now empty", so the live dir is renamed to `.old`
-    *    and dropped rather than required to exist in staging);
-    *  - a table left with ZERO bucket dirs is deleted entirely
-    *    (`_meta` included): an all-retired table reads as ABSENT, the
-    *    same state a deferred-creation writer like `quarantineRoute`
-    *    starts from, so the next delta recreates it cleanly instead of
-    *    hitting an unreadable zero-bucket layout.
+    * Same single-writer staged-rewrite tail as [[merge]]
+    * ([[stagedRewrite]]), except that a bucket whose rows ALL match is
+    * removed outright (partitionBy writes no dir for an empty bucket),
+    * and a table left with ZERO bucket dirs is deleted entirely (`_meta`
+    * included): an all-retired table reads as ABSENT, the same state a
+    * deferred-creation writer like `quarantineRoute` starts from, so the
+    * next delta recreates it cleanly instead of hitting an unreadable
+    * zero-bucket layout.
     *
     * Idempotent: re-running the same delete matches nothing. Cost: the
     * REWRITE is O(matching-bucket bytes), but the FIND phase (locating
@@ -711,7 +633,7 @@ object MergeTable {
   def deleteWhere(spark: SparkSession, path: String, predicate: Column,
       candidateBuckets: Option[Set[Int]]): Long = {
     val (fs, p) = fsOf(spark, path)
-    recover(spark, path)
+    Swap.recoverAll(fs, p)
     if (!fs.exists(p)) return 0L
     val (nBuckets, keys) = readMeta(fs, p).getOrElse(throw new
         IllegalStateException(s"MergeTable.deleteWhere: no _meta at $path"))
@@ -734,8 +656,6 @@ object MergeTable {
     // (filter(p) drops it from the delete count), so it must be KEPT —
     // plain !p would drop it from both sides and silently lose the row
     val kept = base.filter(!coalesce(predicate, lit(false)))
-    val staging = new org.apache.hadoop.fs.Path(path + "__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
     // Buckets with SURVIVING rows, observed for free on the staged
     // write (collect_set over the rows the writer itself processes).
     // An absent staged dir is ambiguous on its own: "every row in this
@@ -750,44 +670,30 @@ object MergeTable {
     // rows handed to the writer, so a commit-side bucket loss (the
     // anomaly class the guard exists for) cannot hide from it.
     val keptObs = org.apache.spark.sql.Observation()
-    kept.observe(keptObs, collect_set(col(BucketCol)).as("kept_buckets"))
-      .repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).parquet(staging.toString)
-    // When the observed subtree executes ZERO tasks (an all-deleted
-    // table: `kept` is empty and AQE's empty-relation propagation
-    // replaces the staged write's input outright), the CollectMetrics
-    // accumulator never updates and the observation completes with an
-    // EMPTY row — `get` then has no key at all, not an empty set. Fall
-    // back to the explicit bounded aggregate (<= nBuckets rows) over
-    // the same pruned read; it runs only in this degenerate case.
-    val keptBuckets = keptObs.get.get("kept_buckets") match {
-      case Some(s) => s.asInstanceOf[scala.collection.Seq[Int]].toSet
-      case None => kept.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSet
+    stagedRewrite(fs, p, affected, absentRemoves = true, (_, _) => (),
+        _ => ())(kept.observe(keptObs,
+        collect_set(col(BucketCol)).as("kept_buckets"))
+      .repartition(col(BucketCol)).write.partitionBy(BucketCol).parquet(_)) {
+      staged =>
+        // When the observed subtree executes ZERO tasks (an all-deleted
+        // table: `kept` is empty and AQE's empty-relation propagation
+        // replaces the staged write's input outright), the CollectMetrics
+        // accumulator never updates and the observation completes with an
+        // EMPTY row — `get` then has no key at all, not an empty set. Fall
+        // back to the explicit bounded aggregate (<= nBuckets rows) over
+        // the same pruned read; it runs only in this degenerate case.
+        val keptBuckets = keptObs.get.get("kept_buckets") match {
+          case Some(s) => s.asInstanceOf[scala.collection.Seq[Int]].toSet
+          case None => kept.select(col(BucketCol)).distinct()
+            .collect().map(_.getInt(0)).toSet
+        }
+        val lost = keptBuckets -- staged
+        require(lost.isEmpty, s"MergeTable.deleteWhere: staged output " +
+          s"missing for bucket(s) ${lost.toSeq.sorted.mkString(",")}, which " +
+          "have surviving rows — refusing to drop the live dirs")
     }
-    keptBuckets.foreach { b =>
-      require(fs.exists(new org.apache.hadoop.fs.Path(staging, s"$BucketCol=$b")),
-        s"MergeTable.deleteWhere: staged output missing for bucket $b, " +
-          s"which has surviving rows, under $staging — refusing to drop " +
-          "the live dir")
-    }
-    affected.foreach { b =>
-      val live = new org.apache.hadoop.fs.Path(p, s"$BucketCol=$b")
-      val bak = new org.apache.hadoop.fs.Path(p, s"$BucketCol=$b.old")
-      val next = new org.apache.hadoop.fs.Path(staging, s"$BucketCol=$b")
-      removeFromView(fs, p, bak)
-      if (fs.exists(live))
-        require(fs.rename(live, bak),
-          s"MergeTable.deleteWhere: backup rename failed for bucket $b")
-      if (fs.exists(next))
-        require(fs.rename(next, live),
-          s"MergeTable.deleteWhere: swap rename failed for bucket $b")
-      removeFromView(fs, p, bak)
-    }
-    fs.delete(staging, true)
-    val remaining = fs.listStatus(p)
-      .exists(_.getPath.getName.startsWith(BucketCol + "="))
-    if (!remaining) fs.delete(p, true) // all-retired table reads as absent
+    // all-retired table reads as absent
+    if (bucketNames(fs, p).isEmpty) fs.delete(p, true)
     deleted
   }
 }

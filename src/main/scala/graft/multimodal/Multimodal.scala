@@ -508,12 +508,8 @@ object Multimodal {
       // unreachable any other way now that the chains run concurrently.
       crashSeam: String => Unit = _ => ()): Unit = {
     val spark = decoded.sparkSession
-    def timed[A](phase: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      probe(phase, System.nanoTime() - t0)
-      r
-    }
+    def timed[A](phase: String)(body: => A): A =
+      graft.merge.MergeTable.timed(probe, phase)(body)
     def exists(path: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -799,10 +795,10 @@ object Multimodal {
     * tombstones (`_resolved_buckets` inside the table dir — removed
     * with the table, absent until the first resolution). Maintained by
     * the route (superset union before each quarantine merge) and
-    * consumed + tightened by [[quarantineRetire]]'s pruned find. Writes
-    * are temp-file + rename so a crash mid-write leaves either the old
-    * sidecar or none (absent reads as "no hint" — full-scan fallback,
-    * never a torn subset).
+    * consumed + tightened by [[quarantineRetire]]'s pruned find. Written
+    * and read through [[graft.merge.Swap]]'s atomic small-file pair, so a
+    * crash mid-write leaves the old sidecar, never a torn subset (an
+    * absent one reads as "no hint" — full-scan fallback).
     */
   private val ResolvedBucketsFile = "_resolved_buckets"
 
@@ -814,28 +810,17 @@ object Multimodal {
   private[graft] def readResolvedBuckets(spark: SparkSession,
       quarTable: String): Option[Set[Int]] = {
     val (fs, f) = sidecarFs(spark, quarTable)
-    if (!fs.exists(f)) return None
-    try {
-      val in = fs.open(f)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      Some(text.split(",", -1).toSeq.filter(_.nonEmpty).map(_.trim.toInt).toSet)
-    } catch {
-      // unreadable sidecar = no hint (full-scan fallback) — the sidecar
-      // is a pure optimization, never load-bearing for correctness
-      case _: Exception => None
-    }
+    // unreadable sidecar = no hint (full-scan fallback) — the sidecar is
+    // a pure optimization, never load-bearing for correctness
+    try graft.merge.Swap.readText(fs, f).map(
+      _.split(",", -1).toSeq.filter(_.nonEmpty).map(_.trim.toInt).toSet)
+    catch { case _: Exception => None }
   }
 
   private def writeResolvedBuckets(spark: SparkSession, quarTable: String,
       buckets: Set[Int]): Unit = {
     val (fs, f) = sidecarFs(spark, quarTable)
-    val tmp = new org.apache.hadoop.fs.Path(f.getParent, ResolvedBucketsFile + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(buckets.toSeq.sorted.mkString(",").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(f)) fs.delete(f, false)
-    require(fs.rename(tmp, f),
-      s"Multimodal: sidecar rename failed at $f")
+    graft.merge.Swap.writeText(fs, f, buckets.toSeq.sorted.mkString(","))
   }
 
   private def addResolvedBuckets(spark: SparkSession, quarTable: String,

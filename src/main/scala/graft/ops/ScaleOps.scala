@@ -214,11 +214,6 @@ object ScaleOps {
       .saveAsTable(table)
   }
 
-  /** Range-partitioned write for sorted, pruned scans (e.g. by date). */
-  def writeRangePartitioned(df: DataFrame, path: String, n: Int,
-      rangeCols: Seq[Column]): Unit =
-    df.repartitionByRange(n, rangeCols: _*).write.mode("overwrite").parquet(path)
-
   /** Range-cluster a dataset on `colNames` and write parquet whose
     * per-file (and per-row-group) min/max statistics are tight and
     * pairwise disjoint on the leading column — the data-layout move that
@@ -361,28 +356,23 @@ object ScaleOps {
     * NameNode/object store; periodic compaction is table maintenance 101
     * at 100 TB.
     *
-    * Swap discipline (single-writer, rename-based FS): a complete copy
-    * always exists on disk — `.old` is only deleted after the new data is
-    * in place, and a crashed run is recovered from `.old` on the next
-    * call. Readers racing the two renames can briefly see a missing
-    * path; with a transactional table format (Delta/Iceberg) this becomes
-    * a metadata swap.
+    * The rewrite is staged at `path.compact` and replaced in through
+    * [[graft.merge.Swap]] (single writer): a complete copy always exists
+    * on disk, and a run killed mid-replace is recovered from `path.old`
+    * on the next call. Readers racing the two renames can briefly see a
+    * missing path; with a transactional table format (Delta/Iceberg)
+    * this becomes a metadata swap.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       targetBytes: Long = 128L << 20): Int = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri,
       spark.sparkContext.hadoopConfiguration)
-    val bak = new org.apache.hadoop.fs.Path(path + ".old")
     val tmp = new org.apache.hadoop.fs.Path(path + ".compact")
-    if (!fs.exists(p) && fs.exists(bak)) fs.rename(bak, p) // crash recovery
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    graft.merge.Swap.recover(fs, p)
     val (frame, nFiles) = compactFrame(spark, path, targetBytes)
     frame.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    fs.rename(p, bak)
-    fs.rename(tmp, p)
-    fs.delete(bak, true)
+    graft.merge.Swap.replace(fs, p, tmp)
     nFiles
   }
 

@@ -511,11 +511,10 @@ object Streaming {
     * self-repairing, and the membership merge is idempotent per key.
     *
     * State is BOUNDED: once `compactEvery` completed prior-batch
-    * partitions accumulate, they fold into a single `base` segment (with
-    * the same `.old`-backup swap discipline as [[graft.ops.ScaleOps
-    * .compact]]), so the per-batch listing + union-plan width stays
-    * ≤ base + compactEvery + 1 dirs forever instead of growing one dir
-    * per micro-batch. See [[clusterBatch]] for the fold contract.
+    * partitions accumulate, they fold into a single `base` segment
+    * (swapped in through [[graft.merge.Swap]]), so the per-batch listing
+    * + union-plan width stays ≤ base + compactEvery + 1 dirs forever
+    * instead of growing one dir per micro-batch. See [[clusterBatch]] for the fold contract.
     */
   def clusterSink(newDocs: DataFrame, statePath: String, checkpoint: String,
       threshold: Double = graft.queries.ClusterOps.clusterJaccard,
@@ -575,10 +574,12 @@ object Streaming {
       // retained state — without the content check, a stale delta from
       // the previous stream incarnation would silently merge in place of
       // the new batch's data.
-      val fpRow = fresh.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(doc_id, text))")).head()
-      val batchFp = fpRow.getLong(0) + ":" +
-        (if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1))
+      def fingerprint(df: DataFrame): String = {
+        val r = df.agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, text))"))
+          .head()
+        r.getLong(0) + ":" + (if (r.isNullAt(1)) 0L else r.getLong(1))
+      }
+      val batchFp = fingerprint(fresh)
       // Incarnation guard: a checkpoint RESET against retained state makes
       // batch ids restart at 0 with different content. Proceeding would
       // overwrite (or shadow, if already folded into base) the previous
@@ -601,18 +602,10 @@ object Streaming {
           "retained state). Either restore the original checkpoint or " +
           "start from an empty statePath.")
       if (batchId <= foldedUpto(fs, docsDir)) incarnationError()
-      smallFileRead(fs, docStamp) match {
-        case Some(fp) => if (fp != batchFp) incarnationError()
-        case None =>
-          if (fs.exists(new org.apache.hadoop.fs.Path(docPart, "_SUCCESS"))) {
-            val r = spark.read.parquet(docPart.toString)
-              .agg(count(lit(1)), expr("bit_xor(xxhash64(doc_id, text))"))
-              .head()
-            val fp = r.getLong(0) + ":" +
-              (if (r.isNullAt(1)) 0L else r.getLong(1))
-            if (fp != batchFp) incarnationError()
-          }
-      }
+      val stamped = graft.merge.Swap.readText(fs, docStamp).orElse(
+        if (!fs.exists(new org.apache.hadoop.fs.Path(docPart, "_SUCCESS"))) None
+        else Some(fingerprint(spark.read.parquet(docPart.toString))))
+      if (stamped.exists(_ != batchFp)) incarnationError()
       val fpFile = new org.apache.hadoop.fs.Path(thisDelta, "_fingerprint")
       // Replay fast path: this batch already durably CHOSE its membership
       // delta (crash after the delta write, possibly mid-way through the
@@ -622,9 +615,9 @@ object Streaming {
       // "touched", so its old cluster mates never get relabeled) and the
       // clustering would diverge from batch truth permanently.
       val deltaReady = fs.exists(new org.apache.hadoop.fs.Path(thisDelta, "_SUCCESS")) &&
-        smallFileRead(fs, fpFile).contains(batchFp)
+        graft.merge.Swap.readText(fs, fpFile).contains(batchFp)
       if (!deltaReady) {
-        val bkPrior = stateSegments(fs, bkDir, batchId)
+        val bkPrior = stateSegments(fs, bkDir, batchId)._1
         val allBK = if (bkPrior.isEmpty) newBK else newBK.unionByName(
           spark.read.parquet(bkPrior: _*)
             .select(col("doc_id"), col("band_idx"), col("band_hash")))
@@ -638,7 +631,7 @@ object Streaming {
           .select(least(col("doc_x"), col("doc_y")).as("doc_a"),
             greatest(col("doc_x"), col("doc_y")).as("doc_b"))
           .distinct()
-        val docsPrior = stateSegments(fs, docsDir, batchId)
+        val docsPrior = stateSegments(fs, docsDir, batchId)._1
         val allDocs = if (docsPrior.isEmpty) fresh else fresh.unionByName(
           spark.read.parquet(docsPrior: _*)
             .select(col("doc_id"), col("text")))
@@ -675,7 +668,7 @@ object Streaming {
           newEdges.unpersist()
           graft.ops.ConnectedComponents.release(relabel)
         }
-        smallFileWrite(fs, fpFile, batchFp)
+        graft.merge.Swap.writeText(fs, fpFile, batchFp)
       }
       // shared commit tail (normal path and replay fast path): merge the
       // durable delta, record the batch's corpus + index partitions
@@ -685,9 +678,11 @@ object Streaming {
         spark.read.parquet(thisDelta.toString), membersDir,
         Seq("doc_id"), nBuckets)
       fresh.write.mode("overwrite").parquet(s"$docsDir/batch=$batchId")
-      smallFileWrite(fs, docStamp, batchFp)
+      graft.merge.Swap.writeText(fs, docStamp, batchFp)
       newBK.write.mode("overwrite").parquet(s"$bkDir/batch=$batchId")
-      gcDeltas(fs, deltaDir, batchId)
+      // the checkpoint replays at most the latest unacknowledged batch,
+      // so older deltas can never be needed again
+      dropBatches(fs, new org.apache.hadoop.fs.Path(deltaDir), batchId)
       maybeFold(spark, fs, docsDir, batchId, compactEvery)
       maybeFold(spark, fs, bkDir, batchId, compactEvery)
     } finally {
@@ -702,20 +697,6 @@ object Streaming {
   private val BaseDir = "base"
   private val FoldedUpto = "_folded_upto"
 
-  private def smallFileRead(fs: org.apache.hadoop.fs.FileSystem,
-      f: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    }
-
-  private def smallFileWrite(fs: org.apache.hadoop.fs.FileSystem,
-      f: org.apache.hadoop.fs.Path, s: String): Unit = {
-    val out = fs.create(f, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
   /** Highest batch id folded into `dir`'s base segment, -1 when no base
     * exists. A base without its watermark is impossible by construction
     * (written pre-swap) — fail loudly rather than risk double-reading
@@ -724,45 +705,55 @@ object Streaming {
       dir: String): Long = {
     val base = new org.apache.hadoop.fs.Path(dir, BaseDir)
     if (!fs.exists(base)) -1L
-    else smallFileRead(fs, new org.apache.hadoop.fs.Path(base, FoldedUpto))
+    else graft.merge.Swap.readText(fs, new org.apache.hadoop.fs.Path(base, FoldedUpto))
       .map(_.trim.toLong)
       .getOrElse(throw new IllegalStateException(
         s"clusterSink: base segment $base has no $FoldedUpto watermark"))
   }
 
-  /** Readable accumulated-state segments of one state dir: the base
-    * segment (if present) plus every COMPLETED prior-batch partition not
-    * yet folded into it. `batch=<this id>` is excluded (may be a crashed
-    * partial write — the commit-tail overwrite repairs it), `_SUCCESS`
-    * gates out torn dirs, and the fold watermark excludes dirs whose
-    * content already lives in base (a fold crash between swap and dir
-    * deletion must not double-count them).
+  /** The `batch=<id>` dirs of `p` with their ids. */
+  private def batchDirs(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Seq[(org.apache.hadoop.fs.Path, Long)] =
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("batch="))
+      .flatMap(d => scala.util.Try(d.getName.stripPrefix("batch=").toLong)
+        .toOption.map(d -> _))
+
+  /** Delete the `batch=<id>` dirs of `p` with `id < upTo`. */
+  private def dropBatches(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, upTo: Long): Unit =
+    batchDirs(fs, p).foreach { case (d, id) => if (id < upTo) fs.delete(d, true) }
+
+  /** Readable accumulated-state segments of one state dir (the base, if
+    * present, and every COMPLETED prior-batch partition not yet folded
+    * into it), plus those partitions with their ids, oldest first.
+    * `batch=<this id>` is excluded (may be a crashed partial write — the
+    * commit-tail overwrite repairs it), `_SUCCESS` gates out torn dirs,
+    * and the fold watermark excludes dirs whose content already lives in
+    * base (a fold crash between swap and dir deletion must not
+    * double-count them).
     */
   private def stateSegments(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, batchId: Long): Seq[String] = {
+      dir: String, batchId: Long)
+      : (Seq[String], Seq[(org.apache.hadoop.fs.Path, Long)]) = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) return Seq.empty
     val wm = foldedUpto(fs, dir)
-    val base = new org.apache.hadoop.fs.Path(p, BaseDir)
-    (if (wm >= 0) Seq(base.toString) else Seq.empty) ++
-      fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("batch="))
-        .filter { d =>
-          val id = d.getName.stripPrefix("batch=").toLong
-          id > wm && id < batchId &&
-            fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))
-        }
-        .map(_.toString)
+    val priors = batchDirs(fs, p).filter { case (d, id) => id > wm &&
+      id < batchId && fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")) }
+      .sortBy(_._2)
+    (((if (wm >= 0) Seq(new org.apache.hadoop.fs.Path(p, BaseDir)) else Nil) ++
+      priors.map(_._1)).map(_.toString), priors)
   }
 
   /** Fold completed prior-batch partitions into the base segment once
     * `every` of them accumulate — the state-growth bound: without it the
     * per-batch listing and union-plan width grow by one dir per
     * micro-batch forever (round-5 verdict's one unbounded-growth path).
-    * Same `.old`-backup swap discipline as [[graft.ops.ScaleOps.compact]]
-    * (a complete copy of the folded content exists on disk at every
-    * instant; [[recoverFold]] repairs a crashed swap), files sized to
-    * ~128 MB like compact.
+    * `base.next` replaces `base` through [[graft.merge.Swap]] (a complete
+    * copy of the folded content exists on disk at every instant;
+    * [[recoverFold]] repairs a crashed swap), files sized to ~128 MB like
+    * compact.
     *
     * Cost: each fold rewrites base, so amortized per-batch fold cost is
     * O(corpus / every). At deployment scale, size `every` to trade
@@ -774,79 +765,36 @@ object Streaming {
       fs: org.apache.hadoop.fs.FileSystem, dir: String, batchId: Long,
       every: Int): Unit = {
     if (every <= 0) return
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) return
-    val wm = foldedUpto(fs, dir)
-    val foldable = fs.listStatus(p).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("batch="))
-      .map(d => (d, d.getName.stripPrefix("batch=").toLong))
-      .filter { case (d, id) => id > wm && id < batchId &&
-        fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")) }
-      .sortBy(_._2)
+    val (srcs, foldable) = stateSegments(fs, dir, batchId)
     if (foldable.size < every) return
-    val base = new org.apache.hadoop.fs.Path(p, BaseDir)
-    val next = new org.apache.hadoop.fs.Path(p, BaseDir + ".next")
-    val bak = new org.apache.hadoop.fs.Path(p, BaseDir + ".old")
-    if (fs.exists(next)) fs.delete(next, true) // stale partial fold
-    val srcs = (if (wm >= 0) Seq(base) else Seq.empty) ++ foldable.map(_._1)
-    val bytes = srcs.map(s => fs.getContentSummary(s).getLength).sum
+    val next = new org.apache.hadoop.fs.Path(dir, BaseDir + ".next")
+    val bytes = srcs.map(s =>
+      fs.getContentSummary(new org.apache.hadoop.fs.Path(s)).getLength).sum
     val nFiles = math.max(1, math.ceil(bytes.toDouble / (128L << 20)).toInt)
-    spark.read.parquet(srcs.map(_.toString): _*)
+    spark.read.parquet(srcs: _*)
       .repartition(nFiles)
-      .write.parquet(next.toString)
+      .write.parquet(next.toString) // recoverFold dropped any stale partial
     // watermark BEFORE the swap: a visible base must always name what it
     // contains, or a crash here would double-read folded dirs
-    smallFileWrite(fs, new org.apache.hadoop.fs.Path(next, FoldedUpto),
+    graft.merge.Swap.writeText(fs, new org.apache.hadoop.fs.Path(next, FoldedUpto),
       foldable.map(_._2).max.toString)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (wm >= 0)
-      require(fs.rename(base, bak), s"fold: backup rename failed for $base")
-    require(fs.rename(next, base), s"fold: swap rename failed for $base")
+    graft.merge.Swap.replace(fs, new org.apache.hadoop.fs.Path(dir, BaseDir), next)
     foldable.foreach { case (d, _) => fs.delete(d, true) }
-    fs.delete(bak, true)
   }
 
-  /** Repair a fold that crashed mid-swap (writer-side, like MergeTable's
-    * recover): restore a base stranded in `.old`, drop stale `.next`
-    * partials and completed-swap backups, and GC batch dirs at or below
-    * the watermark (folded into base but not yet deleted — the watermark
-    * filter already excludes them from reads; this reclaims the space).
+  /** Repair a fold that crashed mid-swap (writer-side,
+    * [[graft.merge.Swap.recover]]): restore a base stranded in `.old`,
+    * drop stale `.next` partials and completed-swap backups, and GC batch
+    * dirs at or below the watermark (folded into base but not yet deleted
+    * — the watermark filter already excludes them from reads; this
+    * reclaims the space).
     */
   private def recoverFold(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(p)) return
-    val base = new org.apache.hadoop.fs.Path(p, BaseDir)
-    val next = new org.apache.hadoop.fs.Path(p, BaseDir + ".next")
-    val bak = new org.apache.hadoop.fs.Path(p, BaseDir + ".old")
-    if (!fs.exists(base) && fs.exists(bak))
-      require(fs.rename(bak, base), s"recoverFold: restore failed for $base")
-    if (fs.exists(next)) fs.delete(next, true)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    val wm = foldedUpto(fs, dir)
-    if (wm >= 0) fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch=") &&
-          scala.util.Try(n.stripPrefix("batch=").toLong <= wm)
-            .getOrElse(false))
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  /** Drop delta dirs of batches before `keepId`: the stream checkpoint
-    * replays at most the latest unacknowledged batch, so older deltas
-    * can never be needed again. */
-  private def gcDeltas(fs: org.apache.hadoop.fs.FileSystem, deltaDir: String,
-      keepId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(deltaDir)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("batch=") &&
-          scala.util.Try(name.stripPrefix("batch=").toLong < keepId)
-            .getOrElse(false))
-        fs.delete(st.getPath, true)
-    }
+    graft.merge.Swap.recover(fs, new org.apache.hadoop.fs.Path(p, BaseDir))
+    fs.delete(new org.apache.hadoop.fs.Path(p, BaseDir + ".next"), true)
+    dropBatches(fs, p, foldedUpto(fs, dir) + 1)
   }
 
   /** Drain a streaming frame through a parquet FILE sink (append mode)

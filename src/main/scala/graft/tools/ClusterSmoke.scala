@@ -29,7 +29,7 @@ object ClusterSmoke {
     def stateDirs(sub: String): Int =
       Option(new java.io.File(s"$state/$sub").listFiles())
         .map(_.count(f => f.isDirectory && !f.getName.endsWith(".next") &&
-          !f.getName.endsWith(".old"))).getOrElse(0)
+          !f.getName.endsWith(graft.merge.Swap.OldSuffix))).getOrElse(0)
     val perBatch = (0 until nBatches).map(b => GraftSession.cost {
       graft.streaming.Streaming.clusterBatch(
         docs.filter(col("doc_id") % nBatches === b), b.toLong, state,

@@ -102,8 +102,9 @@ object PipelineMain {
   }
 
   /** Stage 2: season tgz ∪ delta CSV → [[Merge.mergeDeterministic]] →
-    * republish (spark_merge_dfs.py's job). A missing season bootstraps
-    * from the delta alone (day-0 run). Rows are sorted by the dedup keys
+    * republish (spark_merge_dfs.py's job). A missing season (after
+    * recovering one stranded by a killed publish) bootstraps from the
+    * delta alone (day-0 run). Rows are sorted by the dedup keys
     * before packaging so the artifact is byte-reproducible.
     */
   def mergePublish(spark: SparkSession, opts: Map[String, String]): Unit = {
@@ -118,6 +119,9 @@ object PipelineMain {
     val delta = Merge.readCsv(spark, deltaDir)
     val seasonPath = new org.apache.hadoop.fs.Path(seasonTgz)
     val fs = seasonPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a run killed mid-publish can leave the season only at `.old`;
+    // unrecovered, it would read as day 0 and publish the delta alone
+    graft.merge.Swap.recover(fs, seasonPath)
     val merged =
       if (fs.exists(seasonPath))
         Merge.mergeDeterministic(Merge.readSeasonTgz(spark, seasonTgz), delta)

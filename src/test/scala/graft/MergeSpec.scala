@@ -323,7 +323,7 @@ class MergeSpec extends SparkTestBase {
 
   test("crash debris is swept and invisible: a stranded .trash dir and a " +
       "torn _meta.tmp never reach readers and vanish on the next write") {
-    // removeFromView renames a backup to `.trash-*` then deletes it; a
+    // Swap drops a backup by renaming it to `.trash-*`, then deleting; a
     // crash between the two leaves the hidden dir. writeMeta stages to
     // `_meta.tmp` then renames; a crash leaves the tmp. Neither may be
     // visible to reads (dot-prefix / name filters) and both must be

@@ -263,6 +263,43 @@ class PipelineE2ESpec extends SparkTestBase {
     assert(Merge.readSeasonTgz(spark, s"$dir/shots-2025.tgz").count() == 2)
   }
 
+  test("mergePublish recovers a season stranded at .old by a killed publish " +
+      "instead of bootstrapping from the delta alone") {
+    import graft.tools.PipelineMain
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-torn").toString
+    val tgz = s"$dir/shots-2025.tgz"
+    val play = "1st Q, 10:00.0 remaining<br>Donovan Mitchell made 2-pointer " +
+      "from 8 ft<br>Cleveland leads 2-0"
+    val season = Ingest.transform(Seq(
+      ("k0", envelopeJson("g1", "Cleveland", "Boston", play)),
+      ("k1", envelopeJson("g3", "Denver", "Utah",
+        "3rd Q, 2:00.0 remaining<br>Nikola Jokic made 2-pointer from 4 ft<br>Denver leads 70-60"))
+    ).toDF("key", "value"))
+    Merge.publishTgz(season, s"$dir/t0", tgz, "shots-2025.csv")
+    val published = Merge.readSeasonTgz(spark, tgz) // read eagerly
+    // a publish killed mid-replace: the live season renamed to .old, its
+    // successor only partly packed at the sibling .next
+    val live = java.nio.file.Paths.get(tgz)
+    java.nio.file.Files.move(live,
+      live.resolveSibling("shots-2025.tgz" + graft.merge.Swap.OldSuffix))
+    java.nio.file.Files.write(live.resolveSibling("shots-2025.tgz.next"),
+      Array[Byte](0x1f, 0x8b.toByte, 8))
+    Ingest.writeCsv(Ingest.transform(Seq(
+      ("k0", envelopeJson("g1", "Cleveland", "Boston", play)),
+      ("k2", envelopeJson("g2", "LA Lakers", "Miami",
+        "4th Q, 0:01.2 remaining<br>LeBron James made 3-pointer from 30 ft<br>LA Lakers now leads 101-99"))
+    ).toDF("key", "value")), s"$dir/ongoing")
+    PipelineMain.mergePublish(spark, Map("season" -> tgz, "delta" -> s"$dir/ongoing"))
+    val want = Merge.mergeDeterministic(published,
+      Merge.readCsv(spark, s"$dir/ongoing"))
+    val got = Merge.readSeasonTgz(spark, tgz)
+    assert(got.count() == 3, "season ∪ delta winners: g1, g2 and g3")
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
+    assert(new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("shots-2025")).toSet == Set("shots-2025.tgz"),
+      "no backup or partial sibling may remain")
+  }
+
   test("streaming flavor: envelope file stream -> transform -> csv sink") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pipe-s").toString
     Seq(("k1", envelopeJson("g9", "Utah", "Chicago",

@@ -363,6 +363,41 @@ class StreamingSpec extends SparkTestBase {
     assert(boomStampless.getMessage.contains("incarnation"))
   }
 
+  test("clustering sink: a fold killed between its renames recovers from base.old; " +
+      "membership equals the unfolded twin") {
+    import graft.queries.ClusterOps
+    val dir = java.nio.file.Files.createTempDirectory("graft-cfoldkill").toString
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val n = 6
+    def batch(state: String, b: Int, every: Int): Unit =
+      Streaming.clusterBatch(docs.filter($"doc_id" % n === b), b.toLong,
+        state, ClusterOps.clusterJaccard, nBuckets = 4, compactEvery = every)
+    def members(state: String) = Streaming.clusterMembership(spark, state)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (0 until n).foreach(batch(s"$dir/plain", _, 0))
+    (0 until n - 1).foreach(batch(s"$dir/folded", _, 2))
+    // kill the last fold between its renames in both state dirs: base
+    // renamed to base.old, the complete base.next never renamed in
+    Seq("docs", "bandkeys").foreach { sub =>
+      val base = java.nio.file.Paths.get(s"$dir/folded/$sub/base")
+      assert(java.nio.file.Files.isDirectory(base), s"$sub: no base to strand")
+      org.apache.commons.io.FileUtils.copyDirectory(base.toFile,
+        new java.io.File(s"$dir/folded/$sub/base.next"))
+      java.nio.file.Files.move(base,
+        base.resolveSibling("base" + graft.merge.Swap.OldSuffix))
+    }
+    batch(s"$dir/folded", n - 1, 2)
+    val want = members(s"$dir/plain")
+    assert(want.nonEmpty && members(s"$dir/folded") == want)
+    Seq("docs", "bandkeys").foreach { sub =>
+      val names = new java.io.File(s"$dir/folded/$sub").listFiles()
+        .map(_.getName).toSet
+      assert(names.contains("base") && !names.contains("base.next") &&
+        !names.contains("base" + graft.merge.Swap.OldSuffix),
+        s"$sub: swap debris left behind: $names")
+    }
+  }
+
   test("clustering sink: replay after a crash mid-members-merge converges (durable delta)") {
     import graft.queries.ClusterOps
     val dir = java.nio.file.Files.createTempDirectory("graft-ccrash").toString
