@@ -59,6 +59,124 @@ class MergeSpec extends SparkTestBase {
     assert(back.schema.fields.forall(_.dataType.typeName == "string"))
   }
 
+  /** A gzipped tar of `members` (name → bytes), in order. */
+  private def writeTgz(path: String, members: (String, Array[Byte])*): Unit = {
+    import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
+    val tar = new TarArchiveOutputStream(new java.util.zip.GZIPOutputStream(
+      new java.io.FileOutputStream(path)))
+    try members.foreach { case (name, bytes) =>
+      val e = new TarArchiveEntry(name)
+      e.setSize(bytes.length.toLong)
+      tar.putArchiveEntry(e)
+      tar.write(bytes)
+      tar.closeArchiveEntry()
+    } finally tar.close()
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.collect().map(_.toSeq.map(v => if (v == null) null else v.toString)).toSeq
+      .sortBy(_.mkString("\u0000"))
+
+  test("readSeasonTgz contract: malformed UTF-8 reads back U+FFFD, AppleDouble " +
+      "members are skipped, CRLF parses as LF") {
+    val dir = Files.createTempDirectory("graft-tgz-read").toString
+    val csv = "game_id,time_remaining,quarter,player\ng1,11:30.0,1,Jok\nG2,5:00.0,2,Ab\n"
+    val utf8 = csv.getBytes("UTF-8")
+    // "Ab" becomes "A<0xFF>b": a byte that is never valid UTF-8
+    val i = csv.lastIndexOf("Ab") + 1
+    val malformed = utf8.take(i) ++ Array(0xFF.toByte) ++ utf8.drop(i)
+    writeTgz(s"$dir/bad.tgz", "season/shots.csv" -> malformed)
+    val bad = Merge.readSeasonTgz(spark, s"$dir/bad.tgz")
+    assert(bad.filter(col("game_id") === "G2").select("player").as[String]
+      .collect().toSeq == Seq("A\uFFFDb"))
+    // a macOS AppleDouble `._` companion ahead of the real member, with a
+    // .csv name of its own, must not be taken as the season
+    writeTgz(s"$dir/mac.tgz",
+      "season/._shots.csv" -> Array[Byte](0, 5, 22, 7, 0, 2, 0, 0),
+      "season/shots.csv" -> utf8)
+    val mac = Merge.readSeasonTgz(spark, s"$dir/mac.tgz")
+    assert(mac.columns.toSeq == Seq("game_id", "time_remaining", "quarter", "player"))
+    assert(rows(mac) == Seq(Seq("G2", "5:00.0", "2", "Ab"), Seq("g1", "11:30.0", "1", "Jok")))
+    writeTgz(s"$dir/crlf.tgz", "shots.csv" -> csv.replace("\n", "\r\n").getBytes("UTF-8"))
+    val crlf = Merge.readSeasonTgz(spark, s"$dir/crlf.tgz")
+    assert(crlf.columns.toSeq == mac.columns.toSeq)
+    assert(rows(crlf) == rows(mac))
+  }
+
+  test("readSeasonTgz contract: a tgz with no .csv member fails with " +
+      "FileNotFoundException") {
+    val dir = Files.createTempDirectory("graft-tgz-nocsv").toString
+    writeTgz(s"$dir/none.tgz", "README.txt" -> "no season here\n".getBytes("UTF-8"),
+      "._shots.csv" -> Array[Byte](0, 5, 22, 7))
+    val err = intercept[Exception] {
+      Merge.readSeasonTgz(spark, s"$dir/none.tgz").count()
+    }
+    // thrown where the member is searched for: directly on the driver,
+    // or as the cause of the failed Spark job on an executor
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => e.isInstanceOf[java.io.FileNotFoundException] &&
+      e.getMessage.contains("no .csv member")), chain.mkString("\n"))
+  }
+
+  test("publishTgz is byte-identical to publishing the coalesce(1) frame, " +
+      "for 1, 4 and 0 partitions and a header-only result") {
+    val dir = Files.createTempDirectory("graft-tgz-bytes").toString
+    var n = 0
+    def publish(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
+      n += 1
+      Merge.publishTgz(df, s"$dir/tmp$n", s"$dir/out$n.tgz", "shots-2025.csv")
+      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/out$n.tgz"))
+    }
+    val merged = Merge.mergeDeterministic(season, delta)
+      .orderBy(Merge.dedupKeys.map(col): _*)
+    val wide = (1 to 500).map(i => (s"g${i % 7}", f"$i%05d", s"${i % 4}", s"p,$i"))
+      .toDF("game_id", "time_remaining", "quarter", "payload")
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      season.schema)
+    assert(empty.rdd.getNumPartitions == 0)
+    // range-partitioned and sorted within partitions: a fixed row order,
+    // so the bytes of two publishes of the frame can be compared
+    val ranged = wide.repartitionByRange(4, col("time_remaining"))
+      .sortWithinPartitions("time_remaining")
+    val frames = Seq(
+      "1 partition" -> merged.coalesce(1),
+      "4 partitions" -> ranged,
+      "4 partitions, first empty" -> ranged.filter(col("time_remaining") > "00200"),
+      "0 partitions" -> empty,
+      "header only" -> season.filter(lit(false)).repartition(4))
+    frames.foreach { case (what, df) =>
+      assert(publish(df).sameElements(publish(df.coalesce(1))), what)
+    }
+    // the artifact still carries every row once, in the frame's order
+    publish(ranged)
+    val back = Merge.readSeasonTgz(spark, s"$dir/out$n.tgz")
+    assert(back.select("time_remaining").as[String].collect().toSeq ==
+      (1 to 500).map(i => f"$i%05d"))
+    assert(back.filter(col("payload") === "p,17").count() == 1)
+  }
+
+  test("an empty day-0 publish is one header-only member, gzip and tar " +
+      "headers fixed") {
+    import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
+    val dir = Files.createTempDirectory("graft-tgz-day0").toString
+    // day 0 with an empty delta: mergePublish's bootstrap frame
+    val delta0 = season.filter(lit(false))
+    Merge.publishTgz(delta0.dropDuplicates(Merge.dedupKeys)
+      .orderBy(Merge.dedupKeys.map(col): _*), s"$dir/tmp", s"$dir/day0.tgz", "shots-2025.csv")
+    val header = season.columns.mkString(",") + "\n"
+    val want = new java.io.ByteArrayOutputStream()
+    val tar = new TarArchiveOutputStream(new java.util.zip.GZIPOutputStream(want))
+    val e = new TarArchiveEntry("shots-2025.csv")
+    e.setSize(header.length.toLong)
+    e.setModTime(0L)
+    tar.putArchiveEntry(e)
+    tar.write(header.getBytes("UTF-8"))
+    tar.closeArchiveEntry()
+    tar.close()
+    assert(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/day0.tgz"))
+      .sameElements(want.toByteArray))
+  }
+
   test("MergeTable: pruned merge equals full merge, untouched dirs untouched") {
     import graft.merge.MergeTable
     val path = Files.createTempDirectory("graft-mt").toString + "/t"

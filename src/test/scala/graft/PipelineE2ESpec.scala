@@ -276,7 +276,12 @@ class PipelineE2ESpec extends SparkTestBase {
         "3rd Q, 2:00.0 remaining<br>Nikola Jokic made 2-pointer from 4 ft<br>Denver leads 70-60"))
     ).toDF("key", "value"))
     Merge.publishTgz(season, s"$dir/t0", tgz, "shots-2025.csv")
-    val published = Merge.readSeasonTgz(spark, tgz) // read eagerly
+    // a snapshot: readSeasonTgz re-reads the file on every action, and the
+    // file is republished below
+    val published = {
+      val read = Merge.readSeasonTgz(spark, tgz)
+      spark.createDataFrame(java.util.Arrays.asList(read.collect(): _*), read.schema)
+    }
     // a publish killed mid-replace: the live season renamed to .old, its
     // successor only partly packed at the sibling .next
     val live = java.nio.file.Paths.get(tgz)

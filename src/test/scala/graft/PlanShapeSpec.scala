@@ -435,6 +435,44 @@ class PlanShapeSpec extends SparkTestBase {
         "shuffle), not below it")
   }
 
+  test("season merge: ONE range exchange on the dedup keys feeds both the " +
+      "winner window and the publish sort; no driver-side season rows") {
+    // mergePublish's frame. A hash exchange for the window plus a range
+    // exchange for the orderBy shuffled every merged row twice, and a
+    // season read into a driver-side LocalRelation cost ~1 s of planning
+    // per merge at 75k rows; both regressions keep every row correct.
+    import graft.merge.Merge
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-merge").toString
+    def plays(rows: (String, String, String, String)*) =
+      rows.toDF("game_id", "time_remaining", "quarter", "player")
+    Merge.publishTgz(plays(("g1", "11:30.0", "1", "a"), ("g2", "5:00.0", "2", "b")),
+      s"$dir/t0", s"$dir/season.tgz", "season.csv")
+    plays(("g1", "11:30.0", "1", "c")).write.option("header", "true").csv(s"$dir/delta")
+    val frame = Merge.mergeDeterministic(Merge.readSeasonTgz(spark, s"$dir/season.tgz"),
+      Merge.readCsv(spark, s"$dir/delta")).orderBy(Merge.dedupKeys.map(col): _*)
+    val nodes = collectAll(frame.queryExecution.executedPlan)
+    val ex = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(ex.size == 1, s"season merge must shuffle exactly once, got ${ex.size}:\n" +
+      frame.queryExecution.executedPlan)
+    ex.head.outputPartitioning match {
+      case r: RangePartitioning =>
+        assert(r.ordering.map(_.child.references.map(_.name).toSeq) ==
+          Merge.dedupKeys.map(Seq(_)), s"range exchange ordering was ${r.ordering}")
+      case other => fail(s"season merge exchange partitioning was $other")
+    }
+    val windows = nodes.collect { case w: WindowExec => w }
+    assert(windows.size == 1 && collectAll(windows.head.child).contains(ex.head),
+      "the winner window must sit above the range exchange")
+    assert(!nodes.exists(_.isInstanceOf[LocalTableScanExec]),
+      "the season must not be planned as driver-side rows")
+    assert(frame.as[(String, String, String, String)].collect().toSeq == Seq(
+      ("g1", "11:30.0", "1", "c"), ("g2", "5:00.0", "2", "b")))
+  }
+
   test("full-surface join/window/sort audit: no cartesian, no " +
       "unpartitioned window, no interior global sort, every " +
       "nested-loop join has a bounded build side") {

@@ -98,11 +98,13 @@ BIG_DUMP_ROWS = 500_000
 
 
 def _duck_kind(t):
-    """DuckDB type → pandas-dtype-kind analog for the int-vs-float check.
+    """DuckDB type → pandas-dtype-kind analog for the column-kind check.
 
     DECIMAL maps to 'f' because duckdb's .df() hands pandas a float64 for
     it — the in-db path must flag the same divergences the pandas path
-    would have.
+    would have. DATE, every TIMESTAMP flavour and BOOLEAN get kinds of
+    their own: EXCEPT ALL would otherwise compare them to a VARCHAR column
+    after an implicit cast and pass.
     """
     t = t.upper()
     if t.startswith("DECIMAL") or t in ("FLOAT", "DOUBLE", "REAL"):
@@ -110,6 +112,12 @@ def _duck_kind(t):
     if t in ("TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT",
              "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT"):
         return "i"
+    if t == "DATE":
+        return "d"
+    if t.startswith("TIMESTAMP"):
+        return "M"
+    if t == "BOOLEAN":
+        return "b"
     return "o"
 
 
@@ -131,14 +139,12 @@ def compare_indb(con, name, sql, dump_glob, n_mine, timeout_s):
         if sorted(mcols) != sorted(wcols):
             print(f"FAIL {name}: columns {sorted(mcols)} vs {sorted(wcols)}")
             return "fail"
-        # Kind mismatch fails when the pair is {i,f} OR when exactly one
-        # side is non-numeric ('o'): EXCEPT ALL coerces VARCHAR vs numeric
-        # to a common type and would erase a string-vs-number divergence
-        # the pandas canon path catches via tuple inequality (r18 ADVICE).
-        dtype_bad = [
-            c for c in mcols
-            if {_duck_kind(mcols[c]), _duck_kind(wcols[c])} == {"i", "f"}
-            or (_duck_kind(mcols[c]) == "o") != (_duck_kind(wcols[c]) == "o")]
+        # Any kind mismatch fails: EXCEPT ALL coerces both sides to a
+        # common type and would erase a string-vs-number (or -date, or
+        # -boolean) divergence the pandas canon path catches via tuple
+        # inequality.
+        dtype_bad = [c for c in mcols
+                     if _duck_kind(mcols[c]) != _duck_kind(wcols[c])]
         if dtype_bad:
             print(f"FAIL {name}: dtype-kind divergence on {dtype_bad} "
                   f"({ {c: (mcols[c], wcols[c]) for c in dtype_bad} })")
