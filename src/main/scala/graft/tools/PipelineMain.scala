@@ -104,8 +104,9 @@ object PipelineMain {
   /** Stage 2: season tgz ∪ delta CSV → [[Merge.mergeDeterministic]] →
     * republish (spark_merge_dfs.py's job). A missing season (after
     * recovering one stranded by a killed publish) bootstraps from the
-    * delta alone (day-0 run). Rows are sorted by the dedup keys
-    * before packaging so the artifact is byte-reproducible.
+    * delta alone (day-0 run), under the same winner rule. Rows are
+    * sorted by the dedup keys before packaging so the artifact is
+    * byte-reproducible.
     */
   def mergePublish(spark: SparkSession, opts: Map[String, String]): Unit = {
     val seasonTgz = req(opts, "season")
@@ -122,12 +123,12 @@ object PipelineMain {
     // a run killed mid-publish can leave the season only at `.old`;
     // unrecovered, it would read as day 0 and publish the delta alone
     graft.merge.Swap.recover(fs, seasonPath)
-    val merged =
-      if (fs.exists(seasonPath))
-        Merge.mergeDeterministic(Merge.readSeasonTgz(spark, seasonTgz), delta)
-      else delta.dropDuplicates(Merge.dedupKeys)
-    Merge.publishTgz(merged.orderBy(Merge.dedupKeys.map(col): _*),
-      tmpDir, outTgz, csvName)
+    // day 0 merges into an empty season: the delta's own duplicate keys
+    // meet the same winner rule as on every later day
+    val season =
+      if (fs.exists(seasonPath)) Merge.readSeasonTgz(spark, seasonTgz) else delta.limit(0)
+    Merge.publishTgz(Merge.mergeDeterministic(season, delta)
+      .orderBy(Merge.dedupKeys.map(col): _*), tmpDir, outTgz, csvName)
   }
 
   /** Stage 3 (the engine extension beyond the reference's two jobs): the

@@ -103,6 +103,20 @@ class MergeSpec extends SparkTestBase {
     assert(rows(crlf) == rows(mac))
   }
 
+  test("readSeasonTgz keeps file order across blocks and ranges: CRLF " +
+      "endings, a line longer than a block") {
+    val dir = Files.createTempDirectory("graft-tgz-blocks").toString
+    val long = "x" * (600 << 10)
+    val want = (1 to 20000).map(i => Seq(s"g$i", f"$i%05d", s"${i % 4}",
+      if (i == 7000) long else s"p$i"))
+    val csv = ("game_id,time_remaining,quarter,payload" +: want.map(_.mkString(",")))
+      .mkString("", "\r\n", "\r\n")
+    writeTgz(s"$dir/big.tgz", "big.csv" -> csv.getBytes("UTF-8"))
+    val back = Merge.readSeasonTgz(spark, s"$dir/big.tgz")
+    assert(back.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(back.collect().map(_.toSeq.map(_.toString)).toSeq == want)
+  }
+
   test("readSeasonTgz contract: a tgz with no .csv member fails with " +
       "FileNotFoundException") {
     val dir = Files.createTempDirectory("graft-tgz-nocsv").toString
@@ -175,6 +189,169 @@ class MergeSpec extends SparkTestBase {
     tar.close()
     assert(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/day0.tgz"))
       .sameElements(want.toByteArray))
+  }
+
+  test("readSeasonTgz opens the literal path: `_` and `.` names and a `[x]` " +
+      "directory read back the season's rows") {
+    val dir = Files.createTempDirectory("graft-tgz-names").toString
+    Merge.publishTgz(Merge.mergeDeterministic(season, delta)
+      .orderBy(Merge.dedupKeys.map(col): _*), s"$dir/tmp", s"$dir/season.tgz", "season.csv")
+    val want = rows(Merge.readSeasonTgz(spark, s"$dir/season.tgz"))
+    assert(want.size == 4)
+    val src = java.nio.file.Paths.get(s"$dir/season.tgz")
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/a[x]"))
+    Seq("_season.tgz", ".season.tgz", "a[x]/season.tgz").foreach { name =>
+      Files.copy(src, java.nio.file.Paths.get(s"$dir/$name"))
+      assert(rows(Merge.readSeasonTgz(spark, s"$dir/$name")) == want, name)
+    }
+  }
+
+  test("day 0 picks the winner rule's variant of a duplicated key, whatever " +
+      "the delta's file order") {
+    import graft.tools.PipelineMain
+    val dir = Files.createTempDirectory("graft-day0-winner").toString
+    val header = "game_id,time_remaining,quarter,payload\n"
+    val variants = Seq("g1,11:30.0,1,b\ng2,5:00.0,2,x\n", "g1,11:30.0,1,a\ng3,2:00.0,4,y\n")
+    def publish(order: Seq[String], name: String): Array[Byte] = {
+      Files.createDirectories(java.nio.file.Paths.get(s"$dir/$name"))
+      order.zipWithIndex.foreach { case (rowsCsv, i) =>
+        Files.write(java.nio.file.Paths.get(s"$dir/$name/part-$i.csv"),
+          (header + rowsCsv).getBytes("UTF-8"))
+      }
+      PipelineMain.mergePublish(spark, PipelineMain.parseOpts(Array(
+        "--season", s"$dir/$name.tgz", "--delta", s"$dir/$name",
+        "--csv-name", "shots-2025.csv")))
+      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$name.tgz"))
+    }
+    val forward = publish(variants, "forward")
+    assert(forward.sameElements(publish(variants.reverse, "reverse")))
+    // the rule: no season row on day 0, so the smallest remaining columns win
+    assert(rows(Merge.readSeasonTgz(spark, s"$dir/forward.tgz")) == Seq(
+      Seq("g1", "11:30.0", "1", "a"), Seq("g2", "5:00.0", "2", "x"),
+      Seq("g3", "2:00.0", "4", "y")))
+  }
+
+  /** Completed stages that ran an RDD named `name` while `body` ran. */
+  private def stagesRunning(name: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val sc = spark.sparkContext
+    val marker = s"listener-marker-${System.nanoTime()}"
+    val count = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val names = e.stageInfo.rddInfos.map(_.name)
+        if (names.contains(name)) count.incrementAndGet()
+        if (names.contains(marker)) seen.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers in order: once the marker's stage is seen, so
+      // are all of body's
+      sc.parallelize(Seq(1), 1).setName(marker).count()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+    } finally sc.removeSparkListener(listener)
+    count.get
+  }
+
+  test("mergePublish decodes the season member once: one completed stage " +
+      "runs the decode RDD") {
+    import graft.tools.PipelineMain
+    val dir = Files.createTempDirectory("graft-decode-once").toString
+    val wide = (1 to 2000).map(i => (s"g${i % 7}", f"$i%05d", s"${i % 4}", s"p$i"))
+      .toDF("game_id", "time_remaining", "quarter", "payload")
+    Merge.publishTgz(wide.coalesce(1), s"$dir/t0", s"$dir/season.tgz", "season.csv")
+    delta.write.option("header", "true").csv(s"$dir/delta")
+    val stages = stagesRunning(Merge.DecodeRdd) {
+      PipelineMain.mergePublish(spark, PipelineMain.parseOpts(Array(
+        "--season", s"$dir/season.tgz", "--delta", s"$dir/delta")))
+    }
+    assert(stages == 1, s"the season member was decoded by $stages stages")
+    assert(Merge.readSeasonTgz(spark, s"$dir/season.tgz").count() == 2002)
+  }
+
+  /** 500 rows whose payload needs CSV quoting, and their CSV text. */
+  private def wideRows = (1 to 500).map(i => (s"g${i % 7}", f"$i%05d", s"${i % 4}", s"p,$i"))
+  private def wideCsv: String = "game_id,time_remaining,quarter,payload\n" +
+    wideRows.map { case (g, t, q, p) => s"""$g,$t,$q,"$p"\n""" }.mkString
+
+  /** The single-stream tar of one entry holding `csv`. */
+  private def tarOf(name: String, csv: String): Array[Byte] = {
+    import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
+    val bytes = csv.getBytes("UTF-8")
+    val out = new java.io.ByteArrayOutputStream()
+    val tar = new TarArchiveOutputStream(out)
+    val e = new TarArchiveEntry(name)
+    e.setSize(bytes.length.toLong)
+    e.setModTime(0L)
+    tar.putArchiveEntry(e)
+    tar.write(bytes)
+    tar.closeArchiveEntry()
+    tar.close()
+    out.toByteArray
+  }
+
+  private def gzip(bytes: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(out)
+    gz.write(bytes)
+    gz.close()
+    out.toByteArray
+  }
+
+  private val chunk = 4000L
+
+  test("chunked publish: the members gunzip to the single-stream tar, cut " +
+      "at fixed offsets") {
+    val dir = Files.createTempDirectory("graft-tgz-chunks").toString
+    val wide = wideRows.toDF("game_id", "time_remaining", "quarter", "payload")
+    Merge.publishTgz(wide.coalesce(1), s"$dir/tmp", s"$dir/out.tgz", "shots-2025.csv", chunk)
+    val got = Files.readAllBytes(java.nio.file.Paths.get(s"$dir/out.tgz"))
+    val want = tarOf("shots-2025.csv", wideCsv)
+    assert(want.length > 2 * chunk, "the tar must span at least three chunks")
+    assert(new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(got))
+      .readAllBytes().sameElements(want))
+    assert(got.sameElements(want.grouped(chunk.toInt).toSeq.flatMap(c => gzip(c).toSeq)))
+  }
+
+  test("chunked publish: the same rows publish the same bytes at 3, 5 and 1 " +
+      "partitions") {
+    val dir = Files.createTempDirectory("graft-tgz-chunk-parts").toString
+    val wide = wideRows.toDF("game_id", "time_remaining", "quarter", "payload")
+    def publish(name: String, df: org.apache.spark.sql.DataFrame): Array[Byte] = {
+      Merge.publishTgz(df, s"$dir/tmp-$name", s"$dir/$name.tgz", "shots-2025.csv", chunk)
+      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$name.tgz"))
+    }
+    def ranged(n: Int) = wide.repartitionByRange(n, col("time_remaining"))
+      .sortWithinPartitions("time_remaining")
+    val one = publish("one", wide.coalesce(1))
+    assert(publish("three", ranged(3)).sameElements(one))
+    assert(publish("five", ranged(5)).sameElements(one))
+  }
+
+  test("chunked publish reads back through readSeasonTgz, tar -xzf and " +
+      "Python's tarfile") {
+    import scala.sys.process._
+    val dir = Files.createTempDirectory("graft-tgz-chunk-read").toString
+    val wide = wideRows.toDF("game_id", "time_remaining", "quarter", "payload")
+    Merge.publishTgz(wide.repartitionByRange(3, col("time_remaining"))
+      .sortWithinPartitions("time_remaining"), s"$dir/tmp", s"$dir/out.tgz",
+      "shots-2025.csv", chunk)
+    val back = Merge.readSeasonTgz(spark, s"$dir/out.tgz")
+    assert(back.as[(String, String, String, String)].collect().toSeq == wideRows)
+    def has(tool: String) = Seq("sh", "-c", s"command -v $tool").! (ProcessLogger(_ => ())) == 0
+    assume(has("tar"), "tar is not installed")
+    assume(has("python3"), "python3 is not installed")
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/x"))
+    assert(Seq("tar", "-xzf", s"$dir/out.tgz", "-C", s"$dir/x").! == 0)
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/x/shots-2025.csv")),
+      "UTF-8") == wideCsv)
+    val py = "import sys, tarfile\n" +
+      "t = tarfile.open(sys.argv[1])\n" +
+      "sys.stdout.write(t.extractfile('shots-2025.csv').read().decode('utf-8'))\n"
+    assert(Seq("python3", "-c", py, s"$dir/out.tgz").!! == wideCsv)
   }
 
   test("MergeTable: pruned merge equals full merge, untouched dirs untouched") {

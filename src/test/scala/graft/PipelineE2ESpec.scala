@@ -276,8 +276,8 @@ class PipelineE2ESpec extends SparkTestBase {
         "3rd Q, 2:00.0 remaining<br>Nikola Jokic made 2-pointer from 4 ft<br>Denver leads 70-60"))
     ).toDF("key", "value"))
     Merge.publishTgz(season, s"$dir/t0", tgz, "shots-2025.csv")
-    // a snapshot: readSeasonTgz re-reads the file on every action, and the
-    // file is republished below
+    // a snapshot taken now: the file is republished below, and a frame
+    // whose decode was lost would read the file again
     val published = {
       val read = Merge.readSeasonTgz(spark, tgz)
       spark.createDataFrame(java.util.Arrays.asList(read.collect(): _*), read.schema)
