@@ -730,6 +730,36 @@ object Multimodal {
     }
   }
 
+  /** The one quarantine drain, behind `PipelineMain quarantine`, q92, q93
+    * and DrainProbe: a checkpointed AvailableNow drain of the blob
+    * parquet dir `src`, one file per micro-batch, each batch's lazy
+    * decode plan ([[decodeMetaTotal]]) going straight into
+    * [[quarantineRoute]], whose normalization stage is its one
+    * materialization. Blobs are read with the [[MediaRow]] schema (the
+    * file source makes every field nullable either way), so no schema is
+    * inferred. `afterBatch(id)` runs after batch `id`'s route and before
+    * its checkpoint commit — the restart drills' crash seam; `probe` is
+    * the route's phase seam. The caller owns the conf scope.
+    */
+  def quarantineDrain(spark: SparkSession, src: String, mainT: String,
+      quarT: String, nBuckets: Int, checkpoint: String, scratch: String,
+      afterBatch: Long => Unit = _ => (),
+      probe: (String, Long) => Unit = (_, _) => ()): Unit = {
+    val enc = org.apache.spark.sql.Encoders.product[MediaRow]
+    spark.readStream.schema(enc.schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        quarantineRoute(decodeMetaTotal(batch.as(enc)).toDF(), mainT, quarT,
+          nBuckets, scratch, seq = id, probe = probe)
+        afterBatch(id)
+      }
+      .option("checkpointLocation", checkpoint)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+  }
+
   /** Retention for the quarantine table: retire `resolved` tombstones
     * whose `routed_seq` is older than `retireBefore`, so table size
     * tracks ACTIVE corruption plus a bounded resolution-history horizon
@@ -866,6 +896,17 @@ object Multimodal {
   def plantedVideoWidth(len: Int): Int = 64 + len % 577
   def plantedVideoHeight(len: Int, first: Int): Int = 64 + (len * 31 + first) % 513
   def plantedVideoFrames(len: Int): Int = len % 24 + 1
+
+  /** The planted-corruption rule of q90–q93 and DrainProbe: every
+    * `media_id % 7 == 0` blob is truncated to its first 5 bytes, too short
+    * for any container's header. The oracles state the same rule in SQL
+    * (`doc_id % 7 = 0`) as its independent twin. */
+  def plantedCorrupt(mediaId: Long): Boolean = mediaId % 7 == 0
+
+  def plantCorruption(blobs: Dataset[MediaRow]): Dataset[MediaRow] =
+    blobs.map(r => if (plantedCorrupt(r.media_id))
+      r.copy(content = r.content.take(5)) else r)(
+      org.apache.spark.sql.Encoders.product[MediaRow])
 
   /** Generated blob corpora as PARQUET, one dir per (input dir,
     * fingerprint); eviction deletes the temp layout. Disk-backed rather

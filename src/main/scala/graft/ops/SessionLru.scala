@@ -111,6 +111,10 @@ private[graft] object SessionLru {
     * added, removed, resized, or re-written (mtime) under `path` changes
     * it. One metadata listing per access — negligible next to the scans
     * the cached values feed, and the price of rewrite safety.
+    *
+    * Hadoop reports whole milliseconds, so a local file is stamped with
+    * its own `FileTime` instead, at the filesystem's full precision: a
+    * same-size rewrite within one millisecond still changes the print.
     */
   def pathFingerprint(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -120,7 +124,11 @@ private[graft] object SessionLru {
     val parts = scala.collection.mutable.ArrayBuffer.empty[String]
     while (it.hasNext) {
       val s = it.next()
-      parts += s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}"
+      val mtime =
+        if (fs.getScheme != "file") s.getModificationTime.toString
+        else java.nio.file.Files.getLastModifiedTime(
+          java.nio.file.Paths.get(s.getPath.toUri)).toString
+      parts += s"${s.getPath.getName}:${s.getLen}:$mtime"
     }
     parts.sorted.mkString("|")
   }

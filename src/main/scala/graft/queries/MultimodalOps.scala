@@ -225,10 +225,7 @@ object MultimodalOps {
     * job.
     */
   def decodeErrors(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val corrupted = Multimodal.documentBlobs(spark, dir).map { r =>
-      if (r.media_id % 7 == 0) r.copy(content = r.content.take(5)) else r
-    }
+    val corrupted = Multimodal.plantCorruption(Multimodal.documentBlobs(spark, dir))
     Multimodal.decodeMetaTotal(corrupted).toDF()
       .groupBy(col("media_type"))
       .agg(count(lit(1)).as("n_media"),
@@ -330,9 +327,7 @@ object MultimodalOps {
       // lazy decode plans go straight into the route — the route's own
       // normalization stage is the single materialization (one staging
       // pair per cycle, not two; the codec pass still executes once)
-      val corrupted = Multimodal.documentBlobs(spark, dir).map { r =>
-        if (r.media_id % 7 == 0) r.copy(content = r.content.take(5)) else r
-      }
+      val corrupted = Multimodal.plantCorruption(Multimodal.documentBlobs(spark, dir))
       Multimodal.quarantineRoute(Multimodal.decodeMetaTotal(corrupted).toDF(),
         mainT, quarT, nB, s"$base/scratch1", seq = 1L)
       val snap1 = quarantineSnapshot(spark, mainT, quarT, 1)

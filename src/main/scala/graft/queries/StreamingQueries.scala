@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.streaming.Streaming
+import graft.multimodal.Multimodal
+import graft.streaming.{Stage, Streaming}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,16 +23,17 @@ import org.apache.spark.sql.functions._
   * spec-covered.
   */
 object StreamingQueries {
-  /** Stable per-(query, dir) drain key, used to name each query's
-    * file-sink output/checkpoint dirs under java.io.tmpdir: a re-drain
-    * REPLACES the previous drain's dirs instead of accumulating new ones
-    * per call (Bench alone drains each streaming query 3×). Queries are
-    * sequential within a session per the driver contract, so name reuse
-    * never races a live query.
+  /** Stable per-(query, dir) drain dir under java.io.tmpdir, holding each
+    * query's output/checkpoint dirs: a re-drain REPLACES the previous
+    * drain's dirs instead of accumulating new ones per call (Bench alone
+    * drains each streaming query 3×). Queries run one at a time within a
+    * session, so name reuse never races a live query.
     */
-  private def drainName(q: String, dir: String): String =
-    q + "_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+  private def drainDir(q: String, dir: String): String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft-drain-${q}_" + java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString)
+      .toString
 
   /** Scope `spark.sql.shuffle.partitions` to 8 around a drain. The
     * stateful agg creates one state-store instance per shuffle partition,
@@ -76,9 +78,7 @@ object StreamingQueries {
   def streamedHourlyRollup(spark: SparkSession, dir: String): DataFrame = {
     val rolled = Streaming.windowedRollup(
       Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3))
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q79", dir)).toString
+    val base = drainDir("q79", dir)
     withDrainPartitions(spark) {
       Streaming.drainToFile(rolled, s"$base/out", s"$base/cp")
         .filter(col("event_type") =!= lit("__sentinel"))
@@ -123,9 +123,7 @@ object StreamingQueries {
     val rolled = Streaming.sessionWindowRollup(
       Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3),
         gap = "30 minutes")
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q80", dir)).toString
+    val base = drainDir("q80", dir)
     withDrainPartitions(spark) {
       // The sentinel filter runs on the drained BATCH output, not inside
       // the stream: a pre-sink filter on the grouping key is pushed down
@@ -168,9 +166,7 @@ object StreamingQueries {
         col("value"))
       .as[Streaming.Event]
     val sess = Streaming.statefulSessionize(src).toDF()
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q83", dir)).toString
+    val base = drainDir("q83", dir)
     withDrainPartitions(spark) {
       Streaming.drainToFile(sess, s"$base/out", s"$base/cp")
         .filter(col("user_id") =!= lit(Streaming.SentinelUserId))
@@ -216,9 +212,7 @@ object StreamingQueries {
         col("value"))
       .as[Streaming.Event]
     val sess = Streaming.twsSessionize(src).toDF()
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q89", dir)).toString
+    val base = drainDir("q89", dir)
     withDrainPartitions(spark) {
       Streaming.withRocksDBState(spark) {
         Streaming.drainToFile(sess, s"$base/out", s"$base/cp")
@@ -242,9 +236,7 @@ object StreamingQueries {
     val rolled = Streaming.windowedRollup(
       Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3),
       slide = "15 minutes")
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q84", dir)).toString
+    val base = drainDir("q84", dir)
     withDrainPartitions(spark) {
       Streaming.drainToFile(rolled, s"$base/out", s"$base/cp")
         .filter(col("event_type") =!= lit("__sentinel"))
@@ -294,9 +286,7 @@ object StreamingQueries {
   def streamedIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
     val joined = Streaming.errorContextJoin(
       Streaming.fileEventSource(spark, dir))
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q85", dir)).toString
+    val base = drainDir("q85", dir)
     withDrainPartitions(spark) {
       Streaming.drainToFile(joined, s"$base/out", s"$base/cp")
         .select(col("event_id"), col("user_id"),
@@ -332,9 +322,7 @@ object StreamingQueries {
   def streamedDedup(spark: SparkSession, dir: String): DataFrame = {
     val deduped = Streaming.dedupWithinWatermark(
       Streaming.fileEventSourceDuplicated(spark, dir), Seq("event_id"))
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q86", dir)).toString
+    val base = drainDir("q86", dir)
     withDrainPartitions(spark) {
       Streaming.drainToFile(deduped, s"$base/out", s"$base/cp")
         .select(col("event_id"), unix_micros(col("ts")).as("us"),
@@ -367,94 +355,61 @@ object StreamingQueries {
     * the exact post-merge table (events ∪ offset seed-only rows). The
     * sink's exactly-once contract (checkpointed AvailableNow +
     * idempotent per-key merge) is what makes re-drains reproducible.
+    *
+    * The seed season is test fixture, not the operation under test
+    * (its Spark build was about half of q87's recorded time), so it is
+    * staged once per events-fixture content through
+    * the drain family's one staging rule ([[Stage]]) and
+    * file-copied into each call's fresh season: every call still drains
+    * against its own season and checkpoint, a full recomputation, never
+    * a resume.
     */
-  /** q87's seed season, built ONCE per (JVM, fixture LISTING) into a
-    * template directory and FILE-COPIED into each call's fresh season.
-    * The seed is test fixture, not the operation under test (round-10
-    * verdict: ~half of q87's recorded time was this Spark seed build,
-    * not sink cost) — the memo moves the fixture build off the timer
-    * the same way q12's per-dir pair cache does, while each query call
-    * still drains against its own fresh season + checkpoint (a full
-    * recomputation, never a resume). The memo key carries the events
-    * fixture's listing fingerprint (same rule as PersistRegistry), so a
-    * rewritten fixture rebuilds the template instead of silently
-    * draining against a stale seed; the template path carries this
-    * JVM's pid so another process's computeIfAbsent rmr/rebuild can't
-    * race this one mid-copyTree.
-    */
-  // dir -> (fixture fingerprint, template path): keying by DIR (with the
-  // fingerprint as the entry's validity stamp, not part of the key) lets
-  // a fixture rewrite DELETE the superseded template instead of leaking
-  // one tmpdir tree per rewrite for the JVM's lifetime (ADVICE r12)
-  private[graft] val q87SeedTemplates =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val q87SweptDeadPids = new java.util.concurrent.atomic.AtomicBoolean
-
-  /** One-shot tmpdir hygiene: templates are pid-suffixed so other LIVE
-    * processes' trees are never touched, but a crashed/finished JVM's
-    * trees outlive it — sweep any graft-q87-seed-<pid>-* whose pid is
-    * no longer alive, once per JVM, off the hot path.
-    */
-  private def sweepDeadPidTemplates(): Unit =
-    if (q87SweptDeadPids.compareAndSet(false, true)) scala.util.Try {
-      val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val pat = java.util.regex.Pattern.compile("graft-q87-seed-(\\d+)-.*")
-      val it = java.nio.file.Files.list(tmp)
-      try it.forEach { p =>
-        val m = pat.matcher(p.getFileName.toString)
-        if (m.matches() &&
-            !ProcessHandle.of(m.group(1).toLong)
-              .map[Boolean](_.isAlive).orElse(false))
-          Streaming.rmr(p.toString)
-      } finally it.close()
+  def streamedUpsert(spark: SparkSession, dir: String): DataFrame = {
+    val base = drainDir("q87", dir)
+    // fresh season + checkpoint: each call is a full recomputation, and
+    // a leftover checkpoint would make the new drain a no-op resume
+    Streaming.rmr(base)
+    val season = s"$base/season"
+    copyTree(q87Seed(spark, dir), season)
+    val delta = Streaming.fileEventSource(spark, dir)
+      .select(col("event_id"), unix_micros(col("ts")).as("us"),
+        col("user_id"), col("event_type"), col("value"))
+    withDrainPartitions(spark) {
+      Streaming.upsertSink(delta, season, s"$base/cp",
+        keys = Seq("event_id"))
     }
-
-  /** Serializes template check-rebuild-install windows. A dedicated
-    * lock, NOT `q87SeedTemplates.compute`: the rebuild runs a Spark
-    * job, and a long action inside a CHM remapping function holds that
-    * bin's lock for the job's duration (stalling unrelated dirs that
-    * hash to the same bin) and violates compute's short-and-simple
-    * contract — any future path where the job re-entered this map
-    * would deadlock. The coarse lock gives the same serialization with
-    * none of that; builds are rare (one per fixture fingerprint) and
-    * queries are sequential per the driver contract, so coarseness
-    * costs nothing.
-    */
-  private val q87SeedLock = new Object
-
-  private def q87SeedTemplate(spark: SparkSession, dir: String): String = {
-    val fp = graft.ops.SessionLru.pathFingerprint(spark, s"$dir/events.parquet")
-    val key = dir + "|" + fp
-    q87SeedLock.synchronized {
-      val cur = q87SeedTemplates.get(dir)
-      if (cur != null && cur._1 == fp) cur._2
-      else {
-        // superseded template (fixture rewritten): remove the old tree
-        // NOW — nothing can be draining from it (this lock serializes
-        // template access, and seasons are file COPIES, never reads
-        // from the template at drain time)
-        if (cur != null) scala.util.Try(Streaming.rmr(cur._2))
-        sweepDeadPidTemplates()
-        val tpl = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          "graft-q87-seed-" + ProcessHandle.current().pid() + "-" +
-            drainName("q87seed", key)).toString
-        Streaming.rmr(tpl)
-        val ev = graft.Tables.events(spark, dir)
-          .select(col("event_id"), unix_micros(col("ts")).as("us"),
-            col("user_id"), col("event_type"), col("value"))
-        val stale = ev.filter(col("event_id") % 2 === 0)
-          .withColumn("value", lit(-1.0))
-        val seedOnly = ev.filter(col("event_id") % 97 === 0)
-          .withColumn("event_id", col("event_id") + lit(100000000L))
-          .withColumn("value", lit(-1.0))
-        graft.merge.MergeTable.write(stale.unionByName(seedOnly), tpl,
-          keys = Seq("event_id"), nBuckets = 16)
-        q87SeedTemplates.put(dir, (fp, tpl))
-        tpl
-      }
-    }
+    graft.merge.MergeTable.read(spark, season).orderBy(col("event_id"))
   }
+
+  /** q87's staged seed season: stale overlaps and offset seed-only rows,
+    * as a 16-bucket MergeTable. */
+  private[graft] def q87Seed(spark: SparkSession, dir: String): String =
+    Stage(spark, s"$dir/events.parquet", "q87-seed") { out =>
+      val ev = graft.Tables.events(spark, dir)
+        .select(col("event_id"), unix_micros(col("ts")).as("us"),
+          col("user_id"), col("event_type"), col("value"))
+      val stale = ev.filter(col("event_id") % 2 === 0)
+        .withColumn("value", lit(-1.0))
+      val seedOnly = ev.filter(col("event_id") % 97 === 0)
+        .withColumn("event_id", col("event_id") + lit(100000000L))
+        .withColumn("value", lit(-1.0))
+      graft.merge.MergeTable.write(stale.unionByName(seedOnly), out,
+        keys = Seq("event_id"), nBuckets = 16)
+    }
+
+  /** q92/q93's media corpus, staged through the same rule once per
+    * documents-fixture content, range-partitioned into `nFiles` files: the
+    * planted corruption ([[Multimodal.plantCorruption]]), or with `repair`
+    * pristine blobs for exactly the corrupt keys. */
+  private[graft] def blobCorpus(spark: SparkSession, dir: String, nFiles: Int,
+      repair: Boolean = false): String =
+    Stage(spark, s"$dir/documents.parquet",
+        (if (repair) "repair" else "corrupt") + nFiles) { out =>
+      val blobs = Multimodal.documentBlobs(spark, dir)
+      (if (repair) blobs.filter(r => Multimodal.plantedCorrupt(r.media_id))
+       else Multimodal.plantCorruption(blobs))
+        .toDF().repartitionByRange(nFiles, col("media_id")).write.parquet(out)
+    }
 
   private def copyTree(from: String, to: String): Unit = {
     import scala.jdk.CollectionConverters._
@@ -470,133 +425,6 @@ object StreamingQueries {
       else java.nio.file.Files.copy(p, t,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-  }
-
-  /** q92/q93's planted-corruption corpus, staged ONCE per (JVM, documents
-    * fixture, variant) into a template dir and FILE-COPIED into each
-    * call's fresh stream source — the q87 seed-template rule applied to
-    * the route queries' OTHER fixture build (round-10 precedent: the
-    * staged corpus is the INPUT the stream consumes, not the operation
-    * under test; measured r18: the per-call corrupt-map + range-partition
-    * + parquet write was ~0.7–0.9 s warm at sf0.1, ~9% of q93). Every
-    * drain still decodes, normalizes, routes and merges the copied corpus
-    * from scratch against a fresh checkpoint. Same staleness/hygiene
-    * rules as [[q87SeedTemplates]]: the documents fixture's listing
-    * fingerprint stamps validity (a rewrite rebuilds and deletes the
-    * superseded tree), templates are pid-suffixed, dead-pid trees are
-    * swept once per JVM.
-    */
-  // dir|variant -> (documents fixture fingerprint, template path)
-  private[graft] val blobSrcTemplates =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val blobSrcLock = new Object
-  private val blobSrcSweptDeadPids =
-    new java.util.concurrent.atomic.AtomicBoolean
-
-  private def sweepDeadPidBlobSrc(): Unit =
-    if (blobSrcSweptDeadPids.compareAndSet(false, true)) scala.util.Try {
-      val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val pat = java.util.regex.Pattern.compile("graft-qsrc-(\\d+)-.*")
-      val it = java.nio.file.Files.list(tmp)
-      try it.forEach { p =>
-        val m = pat.matcher(p.getFileName.toString)
-        if (m.matches() &&
-            !ProcessHandle.of(m.group(1).toLong)
-              .map[Boolean](_.isAlive).orElse(false))
-          Streaming.rmr(p.toString)
-      } finally it.close()
-    }
-
-  /** Acquire `variant`'s template (building via `build` on miss or
-    * supersede) and copy it into `dst`, all under ONE lock hold so a
-    * concurrent supersede-delete can never rmr the tree mid-copy (the
-    * q87 copy-under-lock rule). Builds are rare — one Spark job per
-    * (fixture fingerprint, variant) — and queries are sequential per the
-    * driver contract, so the coarse lock costs nothing.
-    *
-    * Returns the TEMPLATE path: its name embeds the fixture fingerprint
-    * and the JVM pid, so it uniquely identifies the staged bytes —
-    * callers key per-template metadata (the read-schema cache below) on
-    * it instead of re-deriving it from the copied files each call.
-    */
-  private def stageBlobSrc(spark: SparkSession, dir: String, variant: String,
-      dst: String)(build: String => Unit): String = {
-    val fp = graft.ops.SessionLru.pathFingerprint(
-      spark, s"$dir/documents.parquet")
-    val mapKey = dir + "|" + variant
-    blobSrcLock.synchronized {
-      val cur = blobSrcTemplates.get(mapKey)
-      val tpl =
-        if (cur != null && cur._1 == fp) cur._2
-        else {
-          if (cur != null) scala.util.Try(Streaming.rmr(cur._2))
-          sweepDeadPidBlobSrc()
-          val t = java.nio.file.Paths.get(
-            System.getProperty("java.io.tmpdir"),
-            "graft-qsrc-" + ProcessHandle.current().pid() + "-" +
-              drainName(variant, mapKey + "|" + fp)).toString
-          Streaming.rmr(t)
-          build(t)
-          blobSrcTemplates.put(mapKey, (fp, t))
-          t
-        }
-      copyTree(tpl, dst)
-      tpl
-    }
-  }
-
-  /** Read-schema per template, inferred ONCE per (JVM, template): the
-    * copied source dir holds byte-identical files, so re-running
-    * `spark.read.parquet(src).schema` on every call re-listed and
-    * re-footer-read the same bytes — a per-drain driver constant the
-    * r18 verdict told this round to shave (item 5). Keyed on the
-    * template path (pid + fixture fingerprint in the name ⇒ a fixture
-    * rewrite lands a NEW key); the schema describes the stream's INPUT,
-    * nothing any query computes.
-    */
-  private val blobSrcSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def blobSrcSchema(spark: SparkSession, tpl: String)
-      : org.apache.spark.sql.types.StructType = {
-    val hit = blobSrcSchemas.get(tpl)
-    if (hit != null) hit
-    else {
-      // read OUTSIDE the map (q87SeedLock rule: no Spark work inside a
-      // CHM remapping function); a racing duplicate read is harmless
-      val s = spark.read.parquet(tpl).schema
-      blobSrcSchemas.putIfAbsent(tpl, s)
-      s
-    }
-  }
-
-  def streamedUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q87", dir)).toString
-    // fresh season + checkpoint: each call is a full recomputation, and
-    // a leftover checkpoint would make the new drain a no-op resume
-    Streaming.rmr(base)
-    val season = s"$base/season"
-    // The season COPY runs inside q87SeedLock too (it is reentrant with
-    // q87SeedTemplate's own synchronized block): a supersede-delete in
-    // another thread (fixture rewritten between our template lookup and
-    // the copy) would otherwise rmr the template tree mid-copyTree and
-    // corrupt this season (ADVICE r13). The copy is local-FS file I/O of
-    // a sf-bounded seed — holding the coarse lock for it costs nothing
-    // under the sequential-driver contract and makes the race structural
-    // rather than informally excluded.
-    q87SeedLock.synchronized {
-      copyTree(q87SeedTemplate(spark, dir), season)
-    }
-    val delta = Streaming.fileEventSource(spark, dir)
-      .select(col("event_id"), unix_micros(col("ts")).as("us"),
-        col("user_id"), col("event_type"), col("value"))
-    withDrainPartitions(spark) {
-      Streaming.upsertSink(delta, season, s"$base/cp",
-        keys = Seq("event_id"))
-    }
-    graft.merge.MergeTable.read(spark, season).orderBy(col("event_id"))
   }
 
   val streamedUpsertSql: String =
@@ -616,15 +444,15 @@ object StreamingQueries {
     * production "updating datasets" pipeline actually runs: media
     * batches (with corruption riding along, same planted `media_id % 7`
     * rule as q90/q91) arrive as a stream, and EVERY micro-batch routes
-    * through the same [[graft.multimodal.Multimodal.quarantineRoute]]
-    * the batch loop uses — the lazy decode plan materialized exactly
-    * once by the route's normalization stage (r16), ok rows upsert
-    * the maintained bucketed MergeTable, error rows land in the keyed
-    * quarantine table, all inside `foreachBatch` on a checkpointed
-    * AvailableNow drain.
+    * through the same [[Multimodal.quarantineRoute]] the batch loop
+    * uses — the lazy decode plan materialized exactly once by the
+    * route's normalization stage, ok rows upsert the maintained
+    * bucketed MergeTable, error rows land in the keyed quarantine table,
+    * all inside [[Multimodal.quarantineDrain]], the checkpointed
+    * AvailableNow drain `PipelineMain quarantine` runs.
     *
-    * The corpus is staged as four range-partitioned files and streamed
-    * with `maxFilesPerTrigger = 1`, so the state the oracle checks is
+    * The corpus is staged ([[blobCorpus]]) as four range-partitioned
+    * files and drained one file per trigger, so the state the oracle checks is
     * the CUMULATIVE product of four independent routed micro-batches —
     * a hash match proves the incremental path converges to exactly the
     * batch cycle-1 state (no row lost, duplicated, or double-routed
@@ -635,43 +463,14 @@ object StreamingQueries {
     * BENCH_100X_r14.json for the batch route.
     */
   def streamedQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q92", dir)).toString
+    val base = drainDir("q92", dir)
     Streaming.rmr(base)
     val mainT = s"$base/media_meta"
     val quarT = s"$base/quarantine"
-    val src = s"$base/src"
-    val tpl = stageBlobSrc(spark, dir, "corrupt4", src) { tpl =>
-      graft.multimodal.Multimodal.documentBlobs(spark, dir)
-        .map { r =>
-          if (r.media_id % 7 == 0) r.copy(content = r.content.take(5)) else r
-        }
-        .toDF()
-        .repartitionByRange(4, col("media_id"))
-        .write.parquet(tpl)
-    }
-    val schema = blobSrcSchema(spark, tpl)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
+    // the stage never changes under its name, so the drain lists it as is
     withDrainPartitions(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // lazy decode straight into the route: its single
-          // materialization is the route's normalization stage (one
-          // staging pair per batch, not two — the codec pass still
-          // executes exactly once)
-          graft.multimodal.Multimodal.quarantineRoute(
-            graft.multimodal.Multimodal.decodeMetaTotal(
-              batch.as[graft.multimodal.Multimodal.MediaRow]).toDF(),
-            mainT, quarT, nBuckets = 16,
-            scratch = s"$base/scratch", seq = batchId)
-        }
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Multimodal.quarantineDrain(spark, blobCorpus(spark, dir, 4), mainT,
+        quarT, nBuckets = 16, s"$base/cp", s"$base/scratch")
     }
     MultimodalOps.quarantineSnapshot(spark, mainT, quarT, 1)
       .drop("cycle").orderBy(col("media_type"))
@@ -706,7 +505,8 @@ object StreamingQueries {
     * pipeline that quarantined the key is long stopped when its repair
     * flows through.
     *
-    * Two waves on ONE checkpoint:
+    * Two waves on ONE checkpoint, each a [[Multimodal.quarantineDrain]]
+    * over the staged corpora ([[blobCorpus]]) copied into one source dir:
     *  1. the full corpus with the planted `media_id % 7` corruption,
     *     3 files → an AvailableNow drain routes 3 micro-batches
     *     (batches 0–2): ok rows build the maintained table, corrupt
@@ -735,53 +535,22 @@ object StreamingQueries {
     * be idempotent.
     */
   def streamedRepair(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft-drain-" + drainName("q93", dir)).toString
+    val base = drainDir("q93", dir)
     Streaming.rmr(base)
     val mainT = s"$base/media_meta"
     val quarT = s"$base/quarantine"
     val src = s"$base/src"
-    val tpl = stageBlobSrc(spark, dir, "corrupt3", src) { tpl =>
-      graft.multimodal.Multimodal.documentBlobs(spark, dir)
-        .map { r =>
-          if (r.media_id % 7 == 0) r.copy(content = r.content.take(5)) else r
-        }
-        .toDF()
-        .repartitionByRange(3, col("media_id"))
-        .write.parquet(tpl)
-    }
-    val schema = blobSrcSchema(spark, tpl)
     def drain(): Unit = withDrainPartitions(spark) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // lazy decode straight into the route (see q92) — one staging
-          // pair per batch instead of two
-          graft.multimodal.Multimodal.quarantineRoute(
-            graft.multimodal.Multimodal.decodeMetaTotal(
-              batch.as[graft.multimodal.Multimodal.MediaRow]).toDF(),
-            mainT, quarT, nBuckets = 16,
-            scratch = s"$base/scratch", seq = batchId)
-        }
-        .option("checkpointLocation", s"$base/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Multimodal.quarantineDrain(spark, src, mainT, quarT, nBuckets = 16,
+        s"$base/cp", s"$base/scratch")
     }
+    copyTree(blobCorpus(spark, dir, 3), src)
     drain() // corruption wave: batches 0–2
     // the repair wave arrives AFTER the first drain stopped — copied in
-    // as new files (the repair template's part names never collide with
+    // as new files (the repair stage's part names never collide with
     // the corruption wave's), picked up by the restarted query from the
     // same checkpoint (seen-files log skips the corruption wave's files)
-    stageBlobSrc(spark, dir, "repair2", src) { tpl =>
-      graft.multimodal.Multimodal.documentBlobs(spark, dir)
-        .filter(_.media_id % 7 == 0).toDF()
-        .repartitionByRange(2, col("media_id"))
-        .write.parquet(tpl)
-    }
+    copyTree(blobCorpus(spark, dir, 2, repair = true), src)
     drain() // repair wave: batches 3–4 resolve across the restart
     MultimodalOps.quarantineSnapshot(spark, mainT, quarT, 1)
       .drop("cycle").orderBy(col("media_type"))

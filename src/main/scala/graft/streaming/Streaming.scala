@@ -33,11 +33,12 @@ object Streaming {
   /** File-based streaming source over the events schema — the
     * broker-free twin of the Kafka source (same frame shape downstream).
     *
-    * TEST/FIXTURE ONLY: it copies the single-file fixture through the
-    * driver's tmp dir to satisfy the file source's directory contract.
-    * Real deployments point `readStream.parquet` at the data's own
-    * directory (or use [[graft.ingest.Ingest.kafkaStreamSource]]) —
-    * never route production data through this driver-side copy.
+    * TEST/FIXTURE ONLY: the file source needs a directory, so the
+    * single-file fixture is staged into one through [[Stage]], the drain
+    * family's one staging rule (built once per fixture content, then
+    * reused by every call and every JVM). Real deployments point
+    * `readStream.parquet` at the data's own directory (or use
+    * [[graft.ingest.Ingest.kafkaStreamSource]]).
     */
   def fileEventSource(spark: SparkSession, dir: String): DataFrame =
     fileEventSource(spark, dir, sentinelHorizonHours = 0)
@@ -62,114 +63,41 @@ object Streaming {
     * 30 min here); 3 h is the safe default for this schema's operators.
     */
   def fileEventSource(spark: SparkSession, dir: String,
-      sentinelHorizonHours: Int): DataFrame = {
+      sentinelHorizonHours: Int): DataFrame =
+    eventStream(spark, stagedEvents(spark, dir, sentinelHorizonHours))
+
+  /** [[fileEventSource]] staging the fixture TWICE (two files, distinct
+    * names, ordered mtimes): every event arrives as a duplicate pair —
+    * the adversarial input for the streaming dedup gate (q86). Its own
+    * stage variant, so the single-copy flavors never see the extra file.
+    */
+  def fileEventSourceDuplicated(spark: SparkSession, dir: String): DataFrame =
+    eventStream(spark, stagedEvents(spark, dir, 0, duplicated = true))
+
+  /** The staged events dir of one source flavor. Each flavor is its own
+    * [[Stage]] variant: a sentinel file must never leak a far-future
+    * event into the plain stream. */
+  private[graft] def stagedEvents(spark: SparkSession, dir: String,
+      sentinelHorizonHours: Int, duplicated: Boolean = false): String = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The file stream source needs a directory; stage the single-file
-    // fixture into one (testdata is read-only).
     val src = java.nio.file.Paths.get(dir, "events.parquet")
-    // stage dir keyed by the md5 of the full path plus the sentinel
-    // variant: collision-proof, bounded length; the sentinel and
-    // plain flavors never share a dir (a stale sentinel file would leak
-    // a bogus far-future event into the plain stream). Staging is
-    // SKIPPED when the marker proves the staged copy derives from the
-    // fixture's current (size, mtime) — a regenerated fixture restages
-    // (write changes mtime), but the every-call copy + max-ts job +
-    // sentinel-write job that used to re-run per drain (3x per benched
-    // query) are gone.
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "#s" + sentinelHorizonHours).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val staged = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft-events-$key")
-    java.nio.file.Files.createDirectories(staged)
-    val dst = staged.resolve("events.parquet")
-    val extra = if (sentinelHorizonHours > 0)
-      Seq(staged.resolve("zz-sentinel.parquet")) else Seq.empty
-    val marker = stagedMarker(src, staged, dst +: extra).getOrElse {
-      // Marker content captured BEFORE the copy: a fixture regenerated
-      // mid-staging must leave a MISMATCHED marker (so the next call
-      // restages), never a marker describing bytes we did not stage.
-      val m = stagedMarkerContent(src)
-      java.nio.file.Files.copy(src, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val variant = if (duplicated) "events-dup" else s"events-s$sentinelHorizonHours"
+    Stage(spark, src.toString, variant) { out =>
+      val staged = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(out))
+      val dst = staged.resolve("events.parquet")
+      java.nio.file.Files.copy(src, dst)
+      if (duplicated)
+        java.nio.file.Files.copy(src, staged.resolve("events-replay.parquet"))
       if (sentinelHorizonHours > 0)
         stageSentinel(spark, spark.read.parquet(dst.toString), staged,
           sentinelHorizonHours)
-      writeStagedMarker(m, staged)
-      m
-    }
-    val schema = stagedSchema(spark, staged, dst, marker)
-    graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(staged.toString))
-  }
-
-  /** Read-schema of a staged events fixture, inferred once per (JVM,
-    * staged dir, fixture (size, mtime)): every drain query re-ran
-    * `spark.read.parquet(...).schema` over the identical staged copy —
-    * a per-call listing + footer read the r18 verdict told this round
-    * to shave (item 5). The cache key embeds the marker of the staged
-    * bytes — the one staging wrote or found, passed in rather than
-    * recomputed from the fixture, so a fixture regenerated after staging
-    * can never bind its new marker to the old staged copy's schema. A
-    * regenerated fixture restages under a new marker and re-infers; the
-    * schema describes the stream's input, nothing any query computes.
-    */
-  private val stagedSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def stagedSchema(spark: SparkSession, staged: java.nio.file.Path,
-      dst: java.nio.file.Path, marker: String)
-      : org.apache.spark.sql.types.StructType = {
-    val key = staged.toString + "|" + marker
-    val hit = stagedSchemas.get(key)
-    if (hit != null) hit
-    else {
-      // infer OUTSIDE the map (no Spark work inside a CHM remapping
-      // function); a racing duplicate inference is harmless
-      val s = spark.read.parquet(dst.toString).schema
-      stagedSchemas.putIfAbsent(key, s)
-      s
     }
   }
 
-  /** `staged`'s marker when it matches the fixture's current
-    * (size, mtime) and every staged file exists; None means restage. The
-    * marker is written AFTER staging completes, so a crash mid-staging
-    * restages.
-    * Underscore prefix keeps it invisible to the stream's file listing
-    * (Spark skips `_`/`.`-prefixed files, like `_SUCCESS`).
-    */
-  private def stagedMarkerContent(src: java.nio.file.Path): String =
-    // full-precision FileTime (nanos where the fs has them, via
-    // toString's ISO instant) — millis truncation let a same-size
-    // regeneration within one millisecond serve the stale staged copy
-    // (r17 ADVICE low)
-    java.nio.file.Files.size(src) + ":" +
-      java.nio.file.Files.getLastModifiedTime(src).toString
-
-  private def stagedMarker(src: java.nio.file.Path,
-      staged: java.nio.file.Path,
-      required: Seq[java.nio.file.Path]): Option[String] = {
-    val marker = staged.resolve("_staged_marker")
-    if (!java.nio.file.Files.exists(marker) ||
-        !required.forall(java.nio.file.Files.exists(_))) None
-    else scala.util.Try(new String(java.nio.file.Files.readAllBytes(marker),
-      "UTF-8")).toOption.filter(_ == stagedMarkerContent(src))
-  }
-
-  private def writeStagedMarker(content: String,
-      staged: java.nio.file.Path): Unit = {
-    // temp + ATOMIC_MOVE: concurrent JVMs share the tmp staging dir, and
-    // a direct write interleaving another JVM's copy could expose a
-    // marker describing bytes that were never fully staged (r17 ADVICE
-    // low). Unique temp name per JVM/thread so two writers never clobber
-    // each other's temp either.
-    val tmp = staged.resolve(s"_staged_marker.${java.util.UUID.randomUUID()}.tmp")
-    java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, staged.resolve("_staged_marker"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def eventStream(spark: SparkSession, staged: String): DataFrame =
+    graft.Tables.normalizeEventTs(spark.readStream
+      .schema(Stage.schema(spark, s"$staged/events.parquet")).parquet(staged))
 
   /** Write the sentinel row next to the staged fixture, in the fixture's
     * OWN raw ts shape (TIMESTAMP or legacy nanos-long — the sentinel must
@@ -202,8 +130,7 @@ object Streaming {
     val df = spark.createDataFrame(
       java.util.Arrays.asList(org.apache.spark.sql.Row(values: _*)),
       raw.schema)
-    // Leading "_" keeps the tmp dir invisible to the stream's file
-    // listing; only the copied zz-sentinel.parquet is ever picked up.
+    // the write goes through a tmp dir: the stage holds one sentinel file
     val tmpOut = staged.resolve("_sentinel_tmp")
     df.coalesce(1).write.mode("overwrite").parquet(tmpOut.toString)
     val part = java.nio.file.Files.list(tmpOut).iterator().asScala
@@ -211,41 +138,8 @@ object Streaming {
         n.startsWith("part-") && n.endsWith(".parquet") }
       .getOrElse(throw new java.io.FileNotFoundException(
         s"no part file in $tmpOut"))
-    java.nio.file.Files.copy(part, staged.resolve("zz-sentinel.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // recursive tmp cleanup (dir holds _SUCCESS + part + crc files)
-    java.nio.file.Files.walk(tmpOut).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.delete)
-  }
-
-  /** [[fileEventSource]] staging the fixture TWICE (two files, distinct
-    * names, ordered mtimes): every event arrives as a duplicate pair —
-    * the adversarial input for the streaming dedup gate (q86). Uses its
-    * own stage-dir key so the single-copy flavors never see the extra
-    * file. TEST/FIXTURE ONLY, like the base staging.
-    */
-  def fileEventSourceDuplicated(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = java.nio.file.Paths.get(dir, "events.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "#dup").getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val staged = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft-events-$key")
-    java.nio.file.Files.createDirectories(staged)
-    val dst1 = staged.resolve("events.parquet")
-    val dst2 = staged.resolve("events-replay.parquet")
-    val marker = stagedMarker(src, staged, Seq(dst1, dst2)).getOrElse {
-      val m = stagedMarkerContent(src) // pre-copy capture, as above
-      java.nio.file.Files.copy(src, dst1,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.copy(src, dst2,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      writeStagedMarker(m, staged)
-      m
-    }
-    val schema = stagedSchema(spark, staged, dst1, marker)
-    graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(staged.toString))
+    java.nio.file.Files.move(part, staged.resolve("zz-sentinel.parquet"))
+    rmr(tmpOut.toString)
   }
 
   /** D2: streaming dedup — exactly-one-row-per-key across micro-batches,
@@ -285,6 +179,46 @@ object Streaming {
       .select(col("user_id"), col("session_window.start").as("start"),
         col("session_window.end").as("end"), col("n_events"), col("total_value"))
 
+  /** Event time in epoch micros. Timestamp.getTime is millis; keep the
+    * full microsecond precision the column carries (the batch twin uses
+    * unix_micros). */
+  private def micros(t: Timestamp): Long =
+    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  private def sessionOut(userId: Long, s: SessionState): SessionOut =
+    SessionOut(userId, s.startUs, s.endUs, s.n, s.cents / 100.0)
+
+  /** Event time (ms) at which `s` closes if no later event arrives. */
+  private def deadlineMs(s: SessionState, gapMinutes: Int): Long =
+    s.endUs / 1000L + gapMinutes * 60L * 1000L
+
+  /** The session fold q83 and q89 share: one user's micro-batch, in
+    * (event time, event_id) order, folded into the open session (null
+    * when there is none). A gap STRICTLY greater than `gapMinutes` closes
+    * the open session; values accumulate as exact cents. Returns the
+    * sessions the batch closed, oldest first, and the session left open.
+    * Each state API keeps its own timeout or timer handling around it.
+    */
+  private[streaming] def foldSessions(userId: Long, open: SessionState,
+      rows: Iterator[Event], gapMinutes: Int): (List[SessionOut], SessionState) = {
+    val gapUs = gapMinutes * 60L * 1000000L
+    def cents(v: Double): Long = math.round(v * 100.0)
+    var closed = List.empty[SessionOut]
+    var cur = open
+    rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
+      val us = micros(e.ts)
+      cur = cur match {
+        case null => SessionState(us, us, 1, cents(e.value))
+        case s if us - s.endUs > gapUs =>
+          closed ::= sessionOut(userId, s)
+          SessionState(us, us, 1, cents(e.value))
+        case s => SessionState(s.startUs, math.max(s.endUs, us), s.n + 1,
+          s.cents + cents(e.value))
+      }
+    }
+    (closed.reverse, cur)
+  }
+
   /** Custom stateful sessionization with flatMapGroupsWithState — the
     * escape hatch for session semantics session_window can't express
     * (here: emit a session when 30 min of event-time silence passes,
@@ -296,45 +230,24 @@ object Streaming {
       Encoders.product[SessionState]
     implicit val outEnc: org.apache.spark.sql.Encoder[SessionOut] =
       Encoders.product[SessionOut]
-    val gapUs = gapMinutes * 60L * 1000000L
-    // Timestamp.getTime is millis; keep the full microsecond precision the
-    // event-time column carries (batch twin uses unix_micros).
-    def micros(t: Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
     events
       .withWatermark("ts", s"$gapMinutes minutes")
       .groupByKey(_.user_id)(org.apache.spark.sql.Encoders.scalaLong)
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          def out(s: SessionState): SessionOut =
-            SessionOut(userId, s.startUs, s.endUs, s.n, s.cents / 100.0)
-          def cents(v: Double): Long = math.round(v * 100.0)
           if (rows.isEmpty && state.hasTimedOut) {
             val s = state.get
             state.remove()
-            Iterator.single(out(s))
+            Iterator.single(sessionOut(userId, s))
           } else {
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption.orNull
-            rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-              val us = micros(e.ts)
-              cur match {
-                case null =>
-                  cur = SessionState(us, us, 1, cents(e.value))
-                case s if us - s.endUs > gapUs =>
-                  closed ::= out(s)
-                  cur = SessionState(us, us, 1, cents(e.value))
-                case s =>
-                  cur = SessionState(s.startUs, math.max(s.endUs, us), s.n + 1,
-                    s.cents + cents(e.value))
-              }
-            }
+            val (closed, cur) =
+              foldSessions(userId, state.getOption.orNull, rows, gapMinutes)
             if (cur != null) {
               state.update(cur)
-              state.setTimeoutTimestamp(cur.endUs / 1000L + gapMinutes * 60L * 1000L)
+              state.setTimeoutTimestamp(deadlineMs(cur, gapMinutes))
             }
-            closed.reverseIterator
+            closed.iterator
           }
       }
   }
@@ -343,25 +256,17 @@ object Streaming {
     * successor to flatMapGroupsWithState (named state variables, explicit
     * event-time timers, TTL support) and the API new state-heavy
     * pipelines should target. Semantics are IDENTICAL to
-    * [[statefulSessionize]]: strict-`>` gap closure within a batch,
-    * exact-cents value accumulation, the final session flushed when the
-    * watermark passes last-event + gap — so both share q83's oracle
-    * shape. REQUIRES the RocksDB state-store provider
-    * ([[withRocksDBState]]): transformWithState refuses the default
-    * heap-backed store.
+    * [[statefulSessionize]] — both run [[foldSessions]], and the final
+    * session is flushed when the watermark passes last-event + gap — so
+    * both share q83's oracle shape. REQUIRES the RocksDB state-store
+    * provider ([[withRocksDBState]]): transformWithState refuses the
+    * default heap-backed store.
     */
   class SessionProcessor(gapMinutes: Int)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, Event, SessionOut] {
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimeMode, TimerValues, ValueState}
     @transient private var state: ValueState[SessionState] = _
-    private val gapUs = gapMinutes * 60L * 1000000L
-    private val gapMs = gapMinutes * 60L * 1000L
-    private def micros(t: Timestamp): Long =
-      math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    private def deadlineMs(s: SessionState): Long = s.endUs / 1000L + gapMs
-    private def out(userId: Long, s: SessionState): SessionOut =
-      SessionOut(userId, s.startUs, s.endUs, s.n, s.cents / 100.0)
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       state = getHandle.getValueState[SessionState]("session",
@@ -369,30 +274,17 @@ object Streaming {
 
     override def handleInputRows(userId: Long, rows: Iterator[Event],
         timers: TimerValues): Iterator[SessionOut] = {
-      def cents(v: Double): Long = math.round(v * 100.0)
-      var closed = List.empty[SessionOut]
-      var cur = if (state.exists()) state.get() else null
-      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-        val us = micros(e.ts)
-        cur match {
-          case null => cur = SessionState(us, us, 1, cents(e.value))
-          case s if us - s.endUs > gapUs =>
-            closed ::= out(userId, s)
-            cur = SessionState(us, us, 1, cents(e.value))
-          case s =>
-            cur = SessionState(s.startUs, math.max(s.endUs, us), s.n + 1,
-              s.cents + cents(e.value))
-        }
-      }
+      val (closed, cur) = foldSessions(userId,
+        if (state.exists()) state.get() else null, rows, gapMinutes)
       if (cur != null) {
         state.update(cur)
         // registerTimer ADDS a timer (unlike fMGWS's setTimeoutTimestamp,
         // which replaces); drop any stale deadline before arming the
         // current one so superseded timers can't accumulate
         getHandle.listTimers().toSeq.foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(deadlineMs(cur))
+        getHandle.registerTimer(deadlineMs(cur, gapMinutes))
       }
-      closed.reverseIterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(userId: Long, timers: TimerValues,
@@ -402,9 +294,9 @@ object Streaming {
         val s = state.get()
         // belt-and-braces: only the CURRENT deadline may flush — a stale
         // timer racing a just-extended session must not emit it early
-        if (deadlineMs(s) <= expired.getExpiryTimeInMs) {
+        if (deadlineMs(s, gapMinutes) <= expired.getExpiryTimeInMs) {
           state.clear()
-          Iterator.single(out(userId, s))
+          Iterator.single(sessionOut(userId, s))
         } else Iterator.empty
       }
     }

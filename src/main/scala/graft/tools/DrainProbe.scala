@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
-import org.apache.spark.sql.DataFrame
+import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -28,8 +28,11 @@ import scala.collection.mutable
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *          sbt "runMain graft.tools.DrainProbe [repeats]"
-  * (session per [[graft.GraftSession]]; each drain runs under the same
-  * `StreamingQueries.withDrainPartitions` scope as the declared drains).
+  * (session per [[graft.GraftSession]]; each drain is
+  * [[graft.multimodal.Multimodal.quarantineDrain]] under the same
+  * `StreamingQueries.withDrainPartitions` scope as the declared drains,
+  * with tables sized by `MergeTable.bucketsFor`, like the CLI's). A
+  * bucket-count drill runs as `PipelineMain quarantine --buckets N`.
   * Prints one JSON line per run; the BUILD_NOTES R16 attribution table
   * is transcribed from this output.
   */
@@ -38,7 +41,6 @@ object DrainProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeats = args.headOption.map(_.toInt).getOrElse(1)
     val spark = GraftSession("graft-drain-probe")
-    import spark.implicits._
 
     (1 to repeats).foreach { run =>
       val phases = mutable.Map[String, Double]().withDefaultValue(0.0)
@@ -65,36 +67,20 @@ object DrainProbe {
       val mainT = s"$base/media_meta"
       val quarT = s"$base/quarantine"
       val src = s"$base/src"
-      val blobs = graft.multimodal.Multimodal.documentBlobs(spark, sfDir)
+      val blobs = Multimodal.documentBlobs(spark, sfDir)
       val fixtureSec = sec {
-        blobs.map { r =>
-          if (r.media_id % 7 == 0) r.copy(content = r.content.take(5)) else r
-        }.toDF().repartitionByRange(3, col("media_id")).write.parquet(src)
+        Multimodal.plantCorruption(blobs).toDF()
+          .repartitionByRange(3, col("media_id")).write.parquet(src)
       }
-      val schema = spark.read.parquet(src).schema
+      val nBuckets = graft.merge.MergeTable.bucketsFor(spark, mainT, 0L)
       def drain(): Double =
         graft.queries.StreamingQueries.withDrainPartitions(spark)(sec {
-          val q = spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              graft.multimodal.Multimodal.quarantineRoute(
-                graft.multimodal.Multimodal.decodeMetaTotal(
-                  batch.as[graft.multimodal.Multimodal.MediaRow]).toDF(),
-                mainT, quarT,
-                // SPARK_GRAFT_NBUCKETS: the r17 bucket-count drill runs
-                // this q93-shaped probe at production bucket counts
-                nBuckets = sys.env.getOrElse("SPARK_GRAFT_NBUCKETS", "16").toInt,
-                scratch = s"$base/scratch", seq = batchId, probe = probe)
-            }
-            .option("checkpointLocation", s"$base/cp")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+          Multimodal.quarantineDrain(spark, src, mainT, quarT, nBuckets,
+            s"$base/cp", s"$base/scratch", probe = probe)
         })
       val drain1Sec = drain()
       val repairSec = sec {
-        blobs.filter(_.media_id % 7 == 0).toDF()
+        blobs.filter(r => Multimodal.plantedCorrupt(r.media_id)).toDF()
           .repartitionByRange(2, col("media_id"))
           .write.mode("append").parquet(src)
       }

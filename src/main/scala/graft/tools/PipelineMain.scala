@@ -132,10 +132,9 @@ object PipelineMain {
   }
 
   /** Stage 3 (the engine extension beyond the reference's two jobs): the
-    * corruption-tolerant media ingest — a checkpointed AvailableNow drain
-    * of a blob parquet dir through [[graft.multimodal.Multimodal
-    * .decodeMetaTotal]] and [[graft.multimodal.Multimodal
-    * .quarantineRoute]]: ok rows upsert the maintained bucketed meta
+    * corruption-tolerant media ingest — [[graft.multimodal.Multimodal
+    * .quarantineDrain]], a checkpointed AvailableNow drain of a blob
+    * parquet dir through the decode and the quarantine route: ok rows upsert the maintained bucketed meta
     * table, corrupt rows land in the keyed quarantine table, and a blob
     * re-arriving clean resolves its quarantine row. Re-running the
     * command drains only unseen files (restart = catch-up), and a run
@@ -173,31 +172,10 @@ object PipelineMain {
         opts.get("table-bytes").map(_.toLong).getOrElse(0L)))
     val tmp = opts.getOrElse("tmp", mainT + ".quarantine-tmp")
     val crashAfter = opts.get("crash-after-batch").map(_.toLong)
-    val schema = org.apache.spark.sql.Encoders
-      .product[Multimodal.MediaRow].schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(blobs)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        // the lazy decode plan goes straight into the route — its one
-        // materialization is the route's own normalization stage, so the
-        // expensive codec pass still executes exactly once per batch
-        // (quarantineRoute's input contract; pre-r16 this staged the
-        // decoded batch to parquet first, a redundant write+read pair
-        // every micro-batch)
-        Multimodal.quarantineRoute(
-          Multimodal.decodeMetaTotal(
-            batch.as[Multimodal.MediaRow](
-              org.apache.spark.sql.Encoders.product[Multimodal.MediaRow]))
-            .toDF(),
-          mainT, quarT, nBuckets, scratch = s"$tmp/scratch", seq = id)
+    Multimodal.quarantineDrain(spark, blobs, mainT, quarT, nBuckets, cp,
+      scratch = s"$tmp/scratch", afterBatch = id =>
         if (crashAfter.contains(id))
-          throw new RuntimeException(s"injected crash after batch $id route")
-      }
-      .option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          throw new RuntimeException(s"injected crash after batch $id route"))
     opts.get("retire-horizon").map(_.toLong).foreach { horizon =>
       val anchor = lastCommittedBatch(spark, cp)
       if (anchor >= 0)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, StandardCopyOption}
 
 import graft.streaming.Streaming
 import org.apache.spark.sql.DataFrame
@@ -80,44 +80,6 @@ class EventTsFixtureSpec extends SparkTestBase {
       .as[(Long, Long)].collect().toMap
     assert(batchUs.nonEmpty)
     assert(streamUs == batchUs)
-  }
-
-  test("staging cache: unchanged fixture reuses the staged copy; a regenerated fixture restages") {
-    val dir = writeFixture("cache", micros = true)
-    val first = Streaming.drainToBatch(
-      Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3), "evfix_c1")
-      .filter(col("event_type") =!= "__sentinel")
-      .select("event_id").as[Long].collect().toSet
-    assert(first == Set(1L, 2L, 3L))
-    // unchanged fixture: the staged copy (including its sentinel) is
-    // reused — the marker matches, so a second source build must not
-    // restage (observed via the sentinel file's mtime staying put)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "#s3").getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val staged = Paths.get(System.getProperty("java.io.tmpdir"), s"graft-events-$key")
-    val sentinelMtime = Files.getLastModifiedTime(staged.resolve("zz-sentinel.parquet"))
-    Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3)
-    assert(Files.getLastModifiedTime(
-      staged.resolve("zz-sentinel.parquet")) == sentinelMtime)
-    // regenerate the fixture with DIFFERENT rows at the same path (new
-    // size/mtime): the next drain must see the new data, never the cache
-    val stage2 = Files.createTempDirectory("graft-evfix-stage-cache2")
-    Seq((10L, baseUs, 9L, "click", 1.0), (11L, baseUs + 1000000L, 9L, "view", 2.0))
-      .toDF("event_id", "us", "user_id", "event_type", "value")
-      .withColumn("ts", timestamp_micros(col("us")))
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .coalesce(1).write.mode("overwrite").parquet(stage2.toString)
-    scala.util.Using.resource(Files.list(stage2)) { listing =>
-      val part = listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      Files.copy(part, Paths.get(dir, "events.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val second = Streaming.drainToBatch(
-      Streaming.fileEventSource(spark, dir, sentinelHorizonHours = 3), "evfix_c2")
-      .filter(col("event_type") =!= "__sentinel")
-      .select("event_id").as[Long].collect().toSet
-    assert(second == Set(10L, 11L), s"stale staged fixture served: $second")
   }
 
   for ((label, micros) <- Seq(("timestamp[us]", true), ("nanos-as-long", false))) {
