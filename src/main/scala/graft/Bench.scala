@@ -75,10 +75,16 @@ object Bench {
     // delta per query as `cache_build`, so a nonzero entry flags "this
     // time includes N cache rebuilds" in the artifact itself.
     val cacheBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    // The warm run alone is recorded by graft.obs (per query: its scopes'
+    // jobs, task cpu, shuffle, planning, streaming durationMs and state
+    // peaks); the timed runs run with no listener registered.
+    val layers = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Map[String, Long]]]
     // returns the warm wall (-1 on error) and, when both timed runs
     // succeeded, the kept run's cost with its cache-miss delta
     def attempt(n: String): (Double, Option[(Cost, Long)]) = {
-      val w = runOnce(n).fold(-1.0)(_.wallSec)
+      val (warm, record) = graft.obs.Obs.record(spark)(graft.obs.Obs.scope(n)(runOnce(n)))
+      layers(n) = record
+      val w = warm.fold(-1.0)(_.wallSec)
       if (w < 0) return (w, None)
       errors.remove(n)
       // Counter sampled around EACH timed run separately, and the delta
@@ -174,6 +180,8 @@ object Bench {
     val loadJson = obj(perLoad.view.mapValues(fmt2))
     val retimedJson = obj(retimed)
     val cacheBuildJson = obj(cacheBuilds)
+    val layersJson = obj(layers.view.mapValues(r => obj(r.view.mapValues(
+      c => obj(c.filter(_._2 != 0L))))))
     val errJson = obj(errors.view.mapValues(js))
     val cpuJson = obj(perCpu.view.mapValues(fmt2))
     val gcJson = obj(perGc.view.mapValues(fmt2))
@@ -205,7 +213,7 @@ object Bench {
       s""""loadavg":${js(loadavgNow)},"load_before":$loadBefore,""" +
       s""""load_per_query":$loadJson,"load_max":${fmt2(loadMax)},""" +
       s""""load_threshold":${fmt2(loadThresh)},"retimed":$retimedJson,""" +
-      s""""cache_build":$cacheBuildJson,""" +
+      s""""cache_build":$cacheBuildJson,"layers":$layersJson,""" +
       s""""calib_before_s":${fmt3(calibBefore)},""" +
       s""""calib_after_s":${fmt3(calibAfter)},""" +
       s""""load_contaminated":$loadContaminated,"iterations":2,""" +

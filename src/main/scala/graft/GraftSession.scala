@@ -71,20 +71,4 @@ object GraftSession {
     Cost(wall, if (c0 < 0 || c1 < 0) -1.0 else (c1 - c0) / 1e9,
       (gcMillis - g0) / 1000.0)
   }
-
-  /** Wait for asynchronously delivered listener events to stop arriving:
-    * `snapshot` must read the same twice in a row, polled every 100 ms
-    * and capped at ~2 s. The listener bus's flush API is private to
-    * Spark, so this poll is the public way to let late events land.
-    */
-  def awaitListenerQuiet(snapshot: () => Any): Unit = {
-    var prev = snapshot()
-    var settled = 0
-    var waited = 0
-    while (settled < 2 && waited < 20) {
-      Thread.sleep(100); waited += 1
-      val cur = snapshot()
-      if (cur == prev) settled += 1 else { settled = 0; prev = cur }
-    }
-  }
 }

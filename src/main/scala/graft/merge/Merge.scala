@@ -5,6 +5,7 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream,
 import java.nio.charset.StandardCharsets
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
+import graft.obs.Obs
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.Text
@@ -193,7 +194,7 @@ object Merge {
 
   private[graft] def publishTgz(df: DataFrame, tmpDir: String, tgzPath: String,
       csvName: String, memberBytes: Long): Unit = {
-    df.write.mode("overwrite").option("header", "true").csv(tmpDir)
+    Obs.scope("parts_write")(df.write.mode("overwrite").option("header", "true").csv(tmpDir))
     val sc = df.sparkSession.sparkContext
     val tmp = new Path(tmpDir)
     val fs = FileSystem.get(tmp.toUri, sc.hadoopConfiguration)
@@ -226,24 +227,26 @@ object Merge {
     val total = pieces.map(_.len).sum
     val nMembers = ((total + memberBytes - 1) / memberBytes).toInt
     val conf = new SerializableConfiguration(sc.hadoopConfiguration)
-    sc.parallelize(0 until nMembers, nMembers).foreach { k =>
+    Obs.scope("deflate")(sc.parallelize(0 until nMembers, nMembers).foreach { k =>
       val out = new GZIPOutputStream(new BufferedOutputStream(
         members.getFileSystem(conf.value).create(new Path(members, f"$k%06d.gz"), true)), 65536)
       try writeRange(pieces, header, k * memberBytes, math.min(total, (k + 1) * memberBytes),
         conf.value, out)
       finally out.close()
+    })
+    Obs.scope("concat_swap") {
+      val outP = new Path(tgzPath)
+      val next = new Path(tgzPath + ".next")
+      val outFs = FileSystem.get(outP.toUri, sc.hadoopConfiguration)
+      Swap.recover(outFs, outP)
+      val out = outFs.create(next, true)
+      try (0 until nMembers).foreach { k =>
+        val in = fs.open(new Path(members, f"$k%06d.gz"))
+        try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false) finally in.close()
+      } finally out.close()
+      Swap.replace(outFs, outP, next)
+      fs.delete(tmp, true)
     }
-    val outP = new Path(tgzPath)
-    val next = new Path(tgzPath + ".next")
-    val outFs = FileSystem.get(outP.toUri, sc.hadoopConfiguration)
-    Swap.recover(outFs, outP)
-    val out = outFs.create(next, true)
-    try (0 until nMembers).foreach { k =>
-      val in = fs.open(new Path(members, f"$k%06d.gz"))
-      try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false) finally in.close()
-    } finally out.close()
-    Swap.replace(outFs, outP, next)
-    fs.delete(tmp, true)
   }
 
   /** A run of the tar stream. */

@@ -1,5 +1,6 @@
 package graft.merge
 
+import graft.obs.Obs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -437,15 +438,6 @@ object MergeTable {
     throw last
   }
 
-  /** `body`, reporting its wall nanos to `probe` under `phase`. */
-  private[graft] def timed[A](probe: (String, Long) => Unit, phase: String)(
-      body: => A): A = {
-    val t0 = System.nanoTime()
-    val r = body
-    probe(phase, System.nanoTime() - t0)
-    r
-  }
-
   /** The staged-rewrite tail of [[merge]] and [[deleteWhere]]: clear the
     * sibling `__staging` dir, `stage` the rewrite into it by bucket,
     * `verify` the staged bucket ids while the table is untouched, then
@@ -456,15 +448,14 @@ object MergeTable {
     */
   private def stagedRewrite(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, affected: Seq[Int],
-      absentRemoves: Boolean, probe: (String, Long) => Unit,
-      onBucketSwapped: Int => Unit)(stage: String => Unit)(
+      absentRemoves: Boolean, onBucketSwapped: Int => Unit)(stage: String => Unit)(
       verify: Set[Int] => Unit): Unit = {
     val staging = new org.apache.hadoop.fs.Path(p.toString + "__staging")
     if (fs.exists(staging)) fs.delete(staging, true)
-    timed(probe, "stage_write") { stage(staging.toString) }
+    Obs.scope("stage_write") { stage(staging.toString) }
     verify(if (!fs.exists(staging)) Set.empty[Int]
       else bucketNames(fs, staging).map(bucketIdOf).toSet)
-    timed(probe, "swap") {
+    Obs.scope("swap") {
       affected.foreach { b =>
         val name = s"$BucketCol=$b"
         Swap.replace(fs, new org.apache.hadoop.fs.Path(p, name),
@@ -512,22 +503,20 @@ object MergeTable {
 
   /** Test seam: `onBucketSwapped(b)` runs after bucket `b`'s swap
     * completes — specs use it to observe (or kill) the merge between
-    * swaps. Production callers use the 4-arg overload. `probe` is the
-    * perf-attribution seam (tools/DrainProbe), no-op by default.
+    * swaps. Production callers use the 4-arg overload.
     *
     * `knownAffected`, when provided, MUST be exactly the delta's
     * distinct bucket set under this table's (keys, nBuckets) — derived
     * with [[bucketColumn]], e.g. observed for free on a staging write
     * the caller already performs. The merge then skips its own
     * distinct-buckets job (one fewer Spark job per merge — measurable
-    * in a per-micro-batch loop, tools/DrainProbe). A WRONG set breaks
+    * in a per-micro-batch loop). A WRONG set breaks
     * the merge the same way stale bucketing would (missed or unpruned
     * buckets), which is why the only sanctioned derivation is
     * [[bucketColumn]] + the same delta rows.
     */
   private[graft] def merge(delta: DataFrame, path: String, keys: Seq[String],
       nBuckets: Int, onBucketSwapped: Int => Unit,
-      probe: (String, Long) => Unit = (_, _) => (),
       knownAffected: Option[Seq[Int]] = None): Seq[Int] = {
     val spark = delta.sparkSession
     val (fs, p) = fsOf(spark, path)
@@ -535,11 +524,11 @@ object MergeTable {
     // replacements live in the sibling `__staging` dir, never inside p
     Swap.recoverAll(fs, p)
     val created = !fs.exists(p)
-    if (created) timed(probe, "create") { write(delta, path, keys, nBuckets) }
+    if (created) Obs.scope("create") { write(delta, path, keys, nBuckets) }
     else checkMeta(fs, p, keys, nBuckets)
     // bounded by nBuckets rows; on the create path only the return value
     val affected = knownAffected.getOrElse(
-      timed(probe, "affected") { bucketIds(delta, keys, nBuckets).toSeq }).sorted
+      Obs.scope("affected") { bucketIds(delta, keys, nBuckets).toSeq }).sorted
     if (created || affected.isEmpty) return affected
     val d = delta.withColumn(BucketCol, bucketColumn(keys, nBuckets))
     // partition-pruned base read: only affected bucket dirs are scanned
@@ -554,13 +543,13 @@ object MergeTable {
     // Pre-r16 this ran mergeDeterministic's own keys-exchange and THEN a
     // bucket repartition: two full shuffles of the merged rows per merge
     // — the dominant per-micro-batch cost in the drain attribution
-    // (tools/DrainProbe, BUILD_NOTES R16). The bucket shuffle also lands
+    // (BUILD_NOTES R16). The bucket shuffle also lands
     // each bucket in one task → one file per bucket dir, which IS the
     // table's intended layout (partitionBy alone would write one file
     // per (task, bucket) pair — 256 tiny files from a 16-task merge
     // touching 16 buckets, re-read and re-planned by every later merge).
     val merged = rewritePlan(base, d, keys)
-    stagedRewrite(fs, p, affected, absentRemoves = false, probe,
+    stagedRewrite(fs, p, affected, absentRemoves = false,
         onBucketSwapped)(merged.write.partitionBy(BucketCol).parquet(_)) {
       staged =>
         // Guard against a WRONG `knownAffected` subset: a delta row hashing
@@ -670,8 +659,7 @@ object MergeTable {
     // rows handed to the writer, so a commit-side bucket loss (the
     // anomaly class the guard exists for) cannot hide from it.
     val keptObs = org.apache.spark.sql.Observation()
-    stagedRewrite(fs, p, affected, absentRemoves = true, (_, _) => (),
-        _ => ())(kept.observe(keptObs,
+    stagedRewrite(fs, p, affected, absentRemoves = true, _ => ())(kept.observe(keptObs,
         collect_set(col(BucketCol)).as("kept_buckets"))
       .repartition(col(BucketCol)).write.partitionBy(BucketCol).parquet(_)) {
       staged =>

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.obs.Obs
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -364,16 +365,19 @@ object Multimodal {
     rows.mapPartitions { it =>
       // per-partition (per-batch) decoder setup happens ONCE here
       it.map { r =>
-        val m = r.media_type match {
-          case "image" => ImageCodec.decodeMeta(r.content)
-          case "audio" => AudioCodec.decodeMeta(r.content)
-          case "video" => VideoCodec.decodeMeta(r.content)
-          case t => throw new IllegalArgumentException(s"unknown media type $t")
-        }
+        val m = decodeOne(r.media_type, r.content)
         DecodedRow(r.media_id, r.media_type, m.n_bytes, m.format, m.width,
           m.height, m.n_frames)
       }
     }
+  }
+
+  /** The header read of one blob by its media type's codec. */
+  def decodeOne(mediaType: String, bytes: Array[Byte]): MediaMeta = mediaType match {
+    case "image" => ImageCodec.decodeMeta(bytes)
+    case "audio" => AudioCodec.decodeMeta(bytes)
+    case "video" => VideoCodec.decodeMeta(bytes)
+    case t => throw new IllegalArgumentException(s"unknown media type $t")
   }
 
   /** [[DecodedRow]] with failure as data: meta fields are None and
@@ -396,12 +400,7 @@ object Multimodal {
     rows.mapPartitions { it =>
       it.map { r =>
         try {
-          val m = r.media_type match {
-            case "image" => ImageCodec.decodeMeta(r.content)
-            case "audio" => AudioCodec.decodeMeta(r.content)
-            case "video" => VideoCodec.decodeMeta(r.content)
-            case t => throw new IllegalArgumentException(s"unknown media type $t")
-          }
+          val m = decodeOne(r.media_type, r.content)
           DecodedTryRow(r.media_id, r.media_type, m.n_bytes, Some(m.format),
             Some(m.width), Some(m.height), Some(m.n_frames), None)
         } catch { case scala.util.control.NonFatal(e) =>
@@ -495,12 +494,6 @@ object Multimodal {
   def quarantineRoute(decoded: DataFrame, mainTable: String,
       quarTable: String, nBuckets: Int, scratch: String,
       seq: Long = 0L,
-      // perf-attribution seam (tools/DrainProbe): called with (phase,
-      // elapsed nanos) after each of the route's eager stages —
-      // default is a no-op, zero cost in the production path. The
-      // main_merge phase OVERLAPS the quarantine-chain phases (see
-      // below), so per-phase wall times can sum past the route's wall.
-      probe: (String, Long) => Unit = (_, _) => (),
       // crash-drill seam (specs only): called with "main_merge" /
       // "quar_chain" at the START of each overlapped chain, in that
       // chain's thread. A spec throws from it to plant a crash with a
@@ -508,8 +501,6 @@ object Multimodal {
       // unreachable any other way now that the chains run concurrently.
       crashSeam: String => Unit = _ => ()): Unit = {
     val spark = decoded.sparkSession
-    def timed[A](phase: String)(body: => A): A =
-      graft.merge.MergeTable.timed(probe, phase)(body)
     def exists(path: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -534,11 +525,10 @@ object Multimodal {
     // null), and the creation guard still holds: an empty delta never
     // creates a table.
     def mergeUnlessVacuous(delta: DataFrame, table: String,
-        tag: String, buckets: Seq[Int]): Seq[Int] =
+        buckets: Seq[Int]): Seq[Int] =
       if (exists(table) || buckets.nonEmpty)
         graft.merge.MergeTable.merge(delta, table,
           keys = Seq("media_id"), nBuckets = nBuckets, _ => (),
-          probe = (ph, ns) => probe(s"$tag.$ph", ns),
           knownAffected = Some(buckets))
       else Nil
     val bucketCol =
@@ -586,7 +576,7 @@ object Multimodal {
     // q_buckets observation below, which also covers resolved rows
     // (an err-side set here would be a strict subset and go unread).
     val normObs = org.apache.spark.sql.Observation()
-    timed("norm_stage") {
+    Obs.scope("norm_stage") {
       norm0.observe(normObs,
           collect_set(when(col("error").isNull, bucketCol)).as("ok_buckets"))
         .write.mode("overwrite").parquet(scratch + "__norm")
@@ -620,8 +610,8 @@ object Multimodal {
     // hides the shorter under the longer.
     val mainChain: () => Unit = () => {
       crashSeam("main_merge")
-      timed("main_merge") {
-        mergeUnlessVacuous(ok.drop("error"), mainTable, "main", okObserved)
+      Obs.scope("main_merge") {
+        mergeUnlessVacuous(ok.drop("error"), mainTable, okObserved)
       }
     }
     val quarChain: () => Unit = () => {
@@ -654,7 +644,7 @@ object Multimodal {
       val qdelta = newQuar.unionByName(resolved)
         .withColumn("routed_seq", lit(seq))
       val qObs = org.apache.spark.sql.Observation()
-      timed("qdelta_stage") {
+      Obs.scope("qdelta_stage") {
         qdelta.observe(qObs, collect_set(bucketCol).as("q_buckets"),
             collect_set(when(col("status") === lit("resolved"), bucketCol))
               .as("resolved_buckets"))
@@ -668,16 +658,16 @@ object Multimodal {
       // hint contract — an over-wide hint costs a few extra dirs in the
       // find scan, an under-wide one would strand tombstones). Replays
       // re-add the same ids: the union is idempotent.
-      timed("sidecar") {
+      Obs.scope("sidecar") {
         val resolvedBuckets = observedBuckets(qObs, "resolved_buckets",
           spark.read.schema(qdelta.schema).parquet(scratch)
             .filter(col("status") === lit("resolved"))).toSet
         if (resolvedBuckets.nonEmpty)
           addResolvedBuckets(spark, quarTable, resolvedBuckets)
       }
-      timed("quar_merge") {
+      Obs.scope("quar_merge") {
         mergeUnlessVacuous(
-          spark.read.schema(qdelta.schema).parquet(scratch), quarTable, "quar",
+          spark.read.schema(qdelta.schema).parquet(scratch), quarTable,
           observedBuckets(qObs, "q_buckets",
             spark.read.schema(qdelta.schema).parquet(scratch)))
         // Stamp a table the route just CREATED with an empty sidecar:
@@ -722,7 +712,7 @@ object Multimodal {
     // merges are eager — collect, staged write, renames), so the dirs
     // are dead weight now; removing them keeps a long-running drain's
     // disk footprint at O(tables), not O(tables + batches-ever-routed)
-    timed("cleanup") {
+    Obs.scope("cleanup") {
       Seq(scratch + "__norm", scratch).foreach { s =>
         val sp = new org.apache.hadoop.fs.Path(s)
         sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
@@ -730,28 +720,27 @@ object Multimodal {
     }
   }
 
-  /** The one quarantine drain, behind `PipelineMain quarantine`, q92, q93
-    * and DrainProbe: a checkpointed AvailableNow drain of the blob
+  /** The one quarantine drain, behind `PipelineMain quarantine`, q92 and
+    * q93: a checkpointed AvailableNow drain of the blob
     * parquet dir `src`, one file per micro-batch, each batch's lazy
     * decode plan ([[decodeMetaTotal]]) going straight into
     * [[quarantineRoute]], whose normalization stage is its one
     * materialization. Blobs are read with the [[MediaRow]] schema (the
     * file source makes every field nullable either way), so no schema is
     * inferred. `afterBatch(id)` runs after batch `id`'s route and before
-    * its checkpoint commit — the restart drills' crash seam; `probe` is
-    * the route's phase seam. The caller owns the conf scope.
+    * its checkpoint commit — the restart drills' crash seam. The caller
+    * owns the conf scope.
     */
   def quarantineDrain(spark: SparkSession, src: String, mainT: String,
       quarT: String, nBuckets: Int, checkpoint: String, scratch: String,
-      afterBatch: Long => Unit = _ => (),
-      probe: (String, Long) => Unit = (_, _) => ()): Unit = {
+      afterBatch: Long => Unit = _ => ()): Unit = {
     val enc = org.apache.spark.sql.Encoders.product[MediaRow]
     spark.readStream.schema(enc.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         quarantineRoute(decodeMetaTotal(batch.as(enc)).toDF(), mainT, quarT,
-          nBuckets, scratch, seq = id, probe = probe)
+          nBuckets, scratch, seq = id)
         afterBatch(id)
       }
       .option("checkpointLocation", checkpoint)
@@ -897,7 +886,7 @@ object Multimodal {
   def plantedVideoHeight(len: Int, first: Int): Int = 64 + (len * 31 + first) % 513
   def plantedVideoFrames(len: Int): Int = len % 24 + 1
 
-  /** The planted-corruption rule of q90–q93 and DrainProbe: every
+  /** The planted-corruption rule of q90–q93: every
     * `media_id % 7 == 0` blob is truncated to its first 5 bytes, too short
     * for any container's header. The oracles state the same rule in SQL
     * (`doc_id % 7 = 0`) as its independent twin. */

@@ -53,7 +53,7 @@ object StreamingQueries {
     // disable it themselves): every per-batch job here is a BOUNDED
     // merge/stage over one micro-batch, where AQE's per-stage
     // re-planning is pure latency (~0.2 s × jobs × batches — measured
-    // 9.5 → 7.6 s on the q93 shape, tools/DrainProbe, BUILD_NOTES R16)
+    // 9.5 → 7.6 s on the q93 shape, BUILD_NOTES R16)
     // and its payoffs (skew joins, coalescing huge shuffles) cannot
     // apply. Deployment code (PipelineMain) inherits the session conf
     // unchanged.

@@ -20,6 +20,8 @@ import scala.jdk.CollectionConverters._
   *  - a rewritten fixture has a new name, so its stage is rebuilt and never
   *    mixed with the old bytes, and the superseded dirs of the same
   *    (fixture, variant) are removed once the new one is in place;
+  *  - each stage records its fixture's path, and every build removes the
+  *    stages whose fixture no longer exists (a spec's deleted temp dir);
   *  - a build that dies part-way leaves only its private dot-named sibling,
   *    which is removed on the way out and never accepted; a build that
   *    loses the rename race to another JVM discards its own copy.
@@ -40,6 +42,7 @@ private[graft] object Stage {
       val tmp = privateName(target)
       try {
         build(tmp.toString)
+        Files.writeString(tmp.resolve(FixtureRecord), fixture)
         Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
       } catch {
         // lost the race: the winner's stage is complete by construction
@@ -50,9 +53,18 @@ private[graft] object Stage {
         // keep the stage and other JVMs' builds of the same fingerprint
         .filterNot(n => n == name || n.startsWith("." + name + "."))
         .foreach(n => discard(target.resolveSibling(n)))
+      // a stage with no record predates the record; its next use rebuilds it
+      scala.util.Using.resource(Files.list(root))(_.iterator.asScala.toList)
+        .filter(_.getFileName.toString.startsWith("graft-stage-"))
+        .filterNot(p => scala.util.Try(Files.exists(Paths.get(
+          Files.readString(p.resolve(FixtureRecord))))).getOrElse(false))
+        .foreach(discard)
     }
     target.toString
   }
+
+  /** The file in a stage naming its fixture (file sources skip dot names). */
+  private val FixtureRecord = ".fixture"
 
   /** Where the stage of `(fixture, variant)` for the fixture's current
     * content lives (whether or not it is built yet). */

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   *    ~equal-sized deltas under two touch patterns — SKEWED (keys
   *    confined to ~5% of buckets) and UNIFORM (all buckets), the two
   *    ends the verdict names;
-  *  - per merge: wall, process-CPU seconds, the merge probe's own
-  *    phase split (affected / stage_write / swap), touched-bucket
+  *  - per merge: wall, process-CPU seconds, the merge's own phase
+  *    split as `graft.obs` records it (stage_write / swap), touched-bucket
   *    count, and the touched dirs' on-disk bytes before the merge —
   *    the O(delta + touched-bucket bytes) claim is checked against
   *    exactly those bytes.
@@ -77,15 +77,12 @@ object BucketScale {
             val deltaRows = delta.count()
             val touched = MergeTable.bucketIds(delta, keys, nB).toSeq.sorted
             val preBytes = dirBytes(path, touched)
-            val phases = scala.collection.mutable.Map[String, Double]()
-              .withDefaultValue(0.0)
-            val c = GraftSession.cost {
+            val (c, layers) = graft.obs.Obs.record(spark)(GraftSession.cost {
               MergeTable.merge(delta, path, keys, nB, _ => (),
-                probe = (ph, ns) => phases(ph) += ns / 1e9,
                 knownAffected = Some(touched))
-            }
-            val ph = phases.toSeq.sortBy(-_._2)
-              .map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")
+            })
+            val ph = layers.toSeq.map { case (k, v) => k -> v("wall_ms") / 1e3 }
+              .sortBy(-_._2).map { case (k, v) => f""""$k":$v%.2f""" }.mkString(",")
             println(f"""{"probe":"bucket_scale","nB":$nB,""" +
               f""""pattern":"$pattern","batch":$batch,""" +
               f""""delta_rows":$deltaRows,"touched":${touched.size},""" +

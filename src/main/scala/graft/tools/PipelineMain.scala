@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.ingest.Ingest
 import graft.merge.Merge
+import graft.obs.Obs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -117,7 +118,7 @@ object PipelineMain {
     val csvName = opts.getOrElse("csv-name",
       new org.apache.hadoop.fs.Path(outTgz).getName.stripSuffix(".tgz") + ".csv")
     val tmpDir = opts.getOrElse("tmp", outTgz + ".publish-tmp")
-    val delta = Merge.readCsv(spark, deltaDir)
+    val delta = Obs.scope("delta_read")(Merge.readCsv(spark, deltaDir))
     val seasonPath = new org.apache.hadoop.fs.Path(seasonTgz)
     val fs = seasonPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a run killed mid-publish can leave the season only at `.old`;
@@ -125,8 +126,9 @@ object PipelineMain {
     graft.merge.Swap.recover(fs, seasonPath)
     // day 0 merges into an empty season: the delta's own duplicate keys
     // meet the same winner rule as on every later day
-    val season =
-      if (fs.exists(seasonPath)) Merge.readSeasonTgz(spark, seasonTgz) else delta.limit(0)
+    val season = if (fs.exists(seasonPath)) {
+      Obs.scope("season_read")(Merge.readSeasonTgz(spark, seasonTgz))
+    } else delta.limit(0)
     Merge.publishTgz(Merge.mergeDeterministic(season, delta)
       .orderBy(Merge.dedupKeys.map(col): _*), tmpDir, outTgz, csvName)
   }

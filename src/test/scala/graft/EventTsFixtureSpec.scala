@@ -52,6 +52,7 @@ class EventTsFixtureSpec extends SparkTestBase {
       Files.copy(part, dir.resolve("events.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
+    Streaming.rmr(stage.toString)
     dir.toString
   }
 
@@ -84,14 +85,18 @@ class EventTsFixtureSpec extends SparkTestBase {
 
   for ((label, micros) <- Seq(("timestamp[us]", true), ("nanos-as-long", false))) {
     test(s"Tables.events normalizes a $label fixture") {
-      assertNormalized(Tables.events(spark, writeFixture(s"b$micros", micros)))
+      val dir = writeFixture(s"b$micros", micros)
+      assertNormalized(Tables.events(spark, dir))
+      Streaming.rmr(dir)
     }
 
     test(s"fileEventSource normalizes a $label fixture") {
-      val streamed = Streaming.fileEventSource(spark, writeFixture(s"s$micros", micros))
+      val dir = writeFixture(s"s$micros", micros)
+      val streamed = Streaming.fileEventSource(spark, dir)
       assert(streamed.schema("ts").dataType == TimestampType)
       assertNormalized(
         Streaming.drainToBatch(streamed, s"evfix_$micros"))
+      Streaming.rmr(dir)
     }
   }
 }

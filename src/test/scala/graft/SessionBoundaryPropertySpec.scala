@@ -69,6 +69,7 @@ class SessionBoundaryPropertySpec extends SparkTestBase {
       Files.copy(part, dir.resolve("events.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
+    Streaming.rmr(stage.toString)
     dir.toString
   }
 
@@ -113,6 +114,7 @@ class SessionBoundaryPropertySpec extends SparkTestBase {
       val batch = batchSessions(dir)
       assert(streamed.nonEmpty, s"seed $seed produced no sessions")
       assert(streamed == batch, s"seed $seed: streamed != batch")
+      Streaming.rmr(dir)
     }
   }
 }

@@ -20,6 +20,8 @@ import scala.jdk.CollectionConverters._
   *  4. a build that dies part-way, or that loses the rename race to
   *     another build, leaves nothing a later call would accept.
   *
+  * And a deleted fixture's stages are removed by the next build.
+  *
   * Plus the fingerprint's precision: a same-size rewrite whose mtime
   * differs only below the millisecond must restage q87's seed.
   */
@@ -115,6 +117,7 @@ class StageSpec extends SparkTestBase {
       assert(k.staged(b) == k.expected(idsB), "stale stage served")
       assert(Stage.dirsFor(fixture, k.variant) == Seq(Paths.get(b)),
         "a superseded or private dir was left behind")
+      Streaming.rmr(dir.toString)
     }
 
     test(s"${k.name}: dying or losing build leaves nothing accepted") {
@@ -147,7 +150,24 @@ class StageSpec extends SparkTestBase {
       assert(k.staged(got) == k.expected(idsB))
       assert(Stage.dirsFor(fixture, k.variant) == Seq(target),
         "the losing build or the superseded stage was left behind")
+      Streaming.rmr(dir.toString)
     }
+  }
+
+  test("a deleted fixture's stages are removed by the next build") {
+    val gone = Files.createTempDirectory("graft-stagespec-gone")
+    val fixture = gone.resolve("events.parquet").toString
+    events(gone, idsA)
+    Streaming.stagedEvents(spark, gone.toString, 3)
+    StreamingQueries.q87Seed(spark, gone.toString)
+    assert(Stage.dirsFor(fixture, "events-s3").nonEmpty)
+    Streaming.rmr(gone.toString)
+    val other = Files.createTempDirectory("graft-stagespec-other")
+    events(other, idsB)
+    Streaming.stagedEvents(spark, other.toString, 3)
+    assert(Stage.dirsFor(fixture, "events-s3").isEmpty &&
+      Stage.dirsFor(fixture, "q87-seed").isEmpty, "a deleted fixture's stage was kept")
+    Streaming.rmr(other.toString)
   }
 
   test("q87 seed restages after a same-size sub-ms rewrite") {
@@ -173,5 +193,6 @@ class StageSpec extends SparkTestBase {
       s"filesystem dropped the sub-millisecond mtime: $mtime")
     assert(upsert() == Map(2L -> 2.0, 3L -> 3.0, 194L -> 19.4,
       100000194L -> -1.0), "q87 drained against the stale seed")
+    Streaming.rmr(dir.toString)
   }
 }
