@@ -58,7 +58,8 @@ object Bench {
     //     a bounded per-query and whole-run retry budget;
     //  3. the contamination flag derives from the run's own expected
     //     footprint (cpus + margin) instead of a hard-coded constant,
-    //     and trips if ANY sampled window exceeded it.
+    //     and trips if ANY sampled window exceeded it, or if the host
+    //     calibration drifted across the sweep (`calibDriftBound`).
     val loadThresh = nCpus.toDouble + 4.0
     val loadBefore = load1()
     var loadMax = loadBefore
@@ -114,7 +115,8 @@ object Bench {
     // identical code within one day — and neither loadavg (local only)
     // nor cpu-seconds (which inflate with the clock) can see it. Two
     // artifacts whose calib values differ are comparable only after
-    // scaling; a calib drift inside one run flags the run itself.
+    // scaling; a calib drift inside one run flags the run itself (the
+    // `calibDriftBound` check below).
     def calibOnce(): Double = {
       var x = 0x9E3779B97F4A7C15L
       var s = 0L
@@ -164,7 +166,16 @@ object Bench {
       n -> best
     }
     val calibAfter = calib()
-    val loadContaminated = loadMax > loadThresh
+    // The drift is |after - before| over the faster sample. Sweeps on the
+    // 4-core host with no other sign of contamination drifted 0.3-8%, so
+    // a drift above 10% means the host's speed moved under the sweep, and
+    // the run is flagged like one whose load exceeded the threshold.
+    val calibDriftBound = 0.10
+    val calibDrift = {
+      val lo = math.min(calibBefore, calibAfter)
+      if (lo > 0) math.abs(calibAfter - calibBefore) / lo else 0.0
+    }
+    val loadContaminated = loadMax > loadThresh || calibDrift > calibDriftBound
     val loadavgNow = loadavg().map(_.mkString(" ")).getOrElse("unknown")
     def js(s: String): String = JsonEscape(s)
     // Locale.ROOT: scala's "%.2f".format uses the JVM default locale —
@@ -216,6 +227,7 @@ object Bench {
       s""""cache_build":$cacheBuildJson,"layers":$layersJson,""" +
       s""""calib_before_s":${fmt3(calibBefore)},""" +
       s""""calib_after_s":${fmt3(calibAfter)},""" +
+      s""""calib_drift":${fmt3(calibDrift)},""" +
       s""""load_contaminated":$loadContaminated,"iterations":2,""" +
       s""""action":"noop_write","sf":"$sfDir"}"""
     val compactLine = s"""{"metric":"total_compact","value":$total,"unit":"sec",""" +
@@ -224,6 +236,7 @@ object Bench {
       s""""n_queries":${names.size},"n_errors":${errors.size},""" +
       s""""loadavg":${js(loadavgNow)},"load_max":${fmt2(loadMax)},""" +
       s""""n_retimed":${retimed.size},""" +
+      s""""calib_drift":${fmt3(calibDrift)},""" +
       s""""load_contaminated":$loadContaminated,""" +
       s""""action":"noop_write","sf":"$sfDir"}"""
     // Parse-proof the artifact lines IN-PROCESS before anything reads

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** The one session rule and the one cost timer every graft main uses.
   *
   *  - A session that already exists (a main called in-JVM, as the
-  *    pipeline tests do) is returned unchanged; no conf is re-applied.
+  *    pipeline tests do) is returned with its SQL and Spark conf
+  *    unchanged; no conf is re-applied.
   *  - Otherwise a `spark.master` already in the SparkConf wins — that is
   *    where spark-submit's `--master` and `-Dspark.master` put it — and
   *    the session keeps its cluster defaults. A master set in code would
@@ -18,10 +19,13 @@ import scala.jdk.CollectionConverters._
   *    The testdata tables are single parquet files well under the 128m
   *    default split size, which would serialize each scan on one core;
   *    a cluster keeps its own split size.
+  *  - Either way the SparkContext's Hadoop conf serves `file:` through
+  *    the fork-free local filesystem ([[graft.fs.ForkFree.install]]),
+  *    which sets two `fs.*` keys there and nothing else.
   */
 object GraftSession {
-  def apply(appName: String): SparkSession =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+  def apply(appName: String): SparkSession = {
+    val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .getOrElse {
         val conf = new SparkConf() // loads spark.* system properties
         val local = !conf.contains("spark.master")
@@ -32,6 +36,9 @@ object GraftSession {
         if (local) spark.sparkContext.setLogLevel("WARN")
         spark
       }
+    graft.fs.ForkFree.install(spark.sparkContext.hadoopConfiguration)
+    spark
+  }
 
   /** `conf` unchanged when it carries a master; else the local harness. */
   private[graft] def resolve(conf: SparkConf, cpusEnv: Option[String]): SparkConf =

@@ -354,13 +354,19 @@ private[sources] class KafkaLogReaderFactory extends PartitionReaderFactory {
     new KafkaLogPartitionReader(partition.asInstanceOf[LogRange])
 }
 
-/** Streams one offset range off the segment files: walks segments in base
-  * order, skips lines below `start`, stops at `end`. Runs on executors;
-  * opens one segment at a time. */
+/** Streams one offset range off the segment files: starts at the segment
+  * that holds `start` (the last one whose base offset, read from its file
+  * name, is at or below it), skips that segment's lines below `start`,
+  * walks on in base order and stops at `end`. Segments wholly before the
+  * range are never opened. Runs on executors; opens one segment at a
+  * time. */
 private[sources] class KafkaLogPartitionReader(range: LogRange)
     extends PartitionReader[InternalRow] {
-  private val segs = KafkaLog.listSegments(
-    Paths.get(range.root, range.topic, s"p${range.partition}")).iterator
+  private val segs = {
+    val all = KafkaLog.listSegments(
+      Paths.get(range.root, range.topic, s"p${range.partition}"))
+    all.drop(all.lastIndexWhere(_._1 <= range.start).max(0)).iterator
+  }
   private val b64 = Base64.getDecoder
   private val topicUtf8 = UTF8String.fromString(range.topic)
   private var reader: BufferedReader = _
@@ -373,8 +379,7 @@ private[sources] class KafkaLogPartitionReader(range: LogRange)
       if (reader == null) {
         if (!segs.hasNext) return false
         val (base, path) = segs.next()
-        // segment bases are cumulative; a segment wholly before the range
-        // still advances the offset cursor via its base
+        // a segment's base is the offset of its first line
         reader = Files.newBufferedReader(path, UTF_8)
         offset = base
       }

@@ -34,7 +34,11 @@ import org.apache.spark.sql.functions.col
   * }}}
   *
   * The stages are public methods so tests (PipelineE2ESpec) drive the
-  * SAME code the command line runs, not parallel plumbing.
+  * SAME code the command line runs, not parallel plumbing. Each stage
+  * first installs the fork-free `file:` filesystem in the session's
+  * Hadoop conf ([[graft.fs.ForkFree]]), so a session its caller built
+  * writes checkpoints, sink logs and outputs without a child process
+  * per file operation.
   */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
@@ -91,6 +95,7 @@ object PipelineMain {
     * both).
     */
   def ingest(spark: SparkSession, opts: Map[String, String]): Unit = {
+    graft.fs.ForkFree.install(spark.sparkContext.hadoopConfiguration)
     val transformed = Ingest.transform(Ingest.kafkaStreamSource(spark,
       servers = req(opts, "servers"),
       topic = req(opts, "topic"),
@@ -110,6 +115,7 @@ object PipelineMain {
     * byte-reproducible.
     */
   def mergePublish(spark: SparkSession, opts: Map[String, String]): Unit = {
+    graft.fs.ForkFree.install(spark.sparkContext.hadoopConfiguration)
     val seasonTgz = req(opts, "season")
     val deltaDir = req(opts, "delta")
     // "publish", not "out": `run` shares one opts map across both
@@ -157,6 +163,7 @@ object PipelineMain {
     * exactly-once window.
     */
   def quarantine(spark: SparkSession, opts: Map[String, String]): Unit = {
+    graft.fs.ForkFree.install(spark.sparkContext.hadoopConfiguration)
     import graft.multimodal.Multimodal
     val blobs = req(opts, "blobs")
     val mainT = req(opts, "main")

@@ -28,6 +28,9 @@ class ExtensionsSpec extends AnyFunSuite {
         .config("spark.sql.shuffle.partitions", "2")
         .config("spark.ui.enabled", "false")
         .getOrCreate()
+      // set up like every graft session: this may be the JVM's first
+      // SparkContext, and its first `file:` FileSystem is cached for all
+      graft.fs.ForkFree.install(spark.sparkContext.hadoopConfiguration)
       val r = spark.sql(
         "SELECT long_dot_product(array(2L, 3L), array(5L, 7L)) AS d")
         .collect()(0).getLong(0)

@@ -34,4 +34,13 @@ class GraftSessionSpec extends SparkTestBase {
     assert(harnessKeys.map(k => k -> spark.conf.get(k)) == before)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
+
+  test("an existing session's Hadoop conf gains the fork-free file: classes") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.AbstractFileSystem.file.impl")
+    keys.foreach(hc.unset)
+    assert(GraftSession("graft-test-main") eq spark)
+    assert(keys.map(hc.get) == Seq(classOf[graft.fs.ForkFreeLocalFileSystem].getName,
+      classOf[graft.fs.ForkFreeLocalFs].getName))
+  }
 }

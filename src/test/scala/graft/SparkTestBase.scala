@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (lazy, UTC, quiet). */
+/** One shared local session per suite (lazy, UTC, quiet). Like every
+  * graft session ([[graft.GraftSession]]) it serves `file:` through the
+  * fork-free filesystem, installed before any suite touches a file, so the
+  * `file:` FileSystem the JVM caches is the fork-free one. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -15,6 +18,7 @@ trait SparkTestBase extends AnyFunSuite {
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.fs.ForkFree.install(s.sparkContext.hadoopConfiguration)
     s.sparkContext.setLogLevel("WARN")
     s
   }

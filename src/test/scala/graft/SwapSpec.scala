@@ -10,7 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The replace protocol on the local filesystem: no Spark, just the
   * renames and the states a killed writer leaves behind. */
 class SwapSpec extends AnyFunSuite {
-  private val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+  // the local filesystem every graft session serves (graft.fs.ForkFree)
+  private val fs = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    graft.fs.ForkFree.install(conf)
+    FileSystem.getLocal(conf)
+  }
 
   private def dir(): JPath = Files.createTempDirectory("graft-swap")
   private def write(p: JPath, s: String): JPath = {
