@@ -152,9 +152,8 @@ object MergeTable {
   }
 
   /** The table's persisted bucketing — `(nBuckets, keys)` from `_meta`,
-    * None for tables predating it. Public so lifecycle callers that own
-    * only the table PATH (e.g. the quarantine retention's sidecar
-    * maintenance) can derive bucket ids with the table's own layout via
+    * None for tables predating it. Public so callers that own only the
+    * table PATH can derive bucket ids with the table's own layout via
     * [[bucketColumn]] instead of threading write-time parameters
     * through every call site.
     */
@@ -240,23 +239,13 @@ object MergeTable {
     * buckets exist the table's schema is still returned (empty frame) —
     * schema comes from a metadata-only `limit(0)` over the live dirs.
     *
-    * CONTRACT: `buckets` must have been derived with the table's
-    * PERSISTED bucketing (`_meta`) — ids computed with a different
-    * nBuckets or key set silently prune away matching rows. Callers that
-    * derive ids themselves should use the validated overload below,
-    * which cross-checks their bucketing against `_meta` the way the
-    * write path's checkMeta does.
-    */
-  def readBuckets(spark: SparkSession, path: String,
-      buckets: Set[Int]): DataFrame =
-    readPruned(spark, path, Some(buckets))
-
-  /** [[readBuckets]] with the caller's bucketing validated against the
-    * table's persisted `_meta` — the read-side twin of checkMeta. The
-    * write path fails loudly on mismatched bucketing; without this check
-    * a pruned READ with stale bucketing would not fail at all, just
-    * silently miss rows, which is strictly worse. Tables predating
-    * `_meta` (none in-repo) validate vacuously.
+    * `keys`/`nBuckets` are the bucketing the caller derived `buckets`
+    * with, validated against the table's persisted `_meta` — the
+    * read-side twin of checkMeta. The write path fails loudly on
+    * mismatched bucketing; without this check a pruned READ with stale
+    * bucketing would not fail at all, just silently miss rows, which is
+    * strictly worse. Tables predating `_meta` (none in-repo) validate
+    * vacuously.
     */
   def readBuckets(spark: SparkSession, path: String, buckets: Set[Int],
       keys: Seq[String], nBuckets: Int): DataFrame = {
@@ -278,16 +267,6 @@ object MergeTable {
   def bucketIds(df: DataFrame, keys: Seq[String], nBuckets: Int): Set[Int] =
     df.select(bucketColumn(keys, nBuckets).as(BucketCol)).distinct()
       .collect().map(_.getInt(0)).toSet
-
-  /** Ids of every bucket dir currently present (live or stranded `.old`
-    * backup) — one fs listing, no Spark job. For callers seeding a
-    * conservative candidate-bucket superset (e.g. the quarantine
-    * retention sidecar adopting a table that predates it).
-    */
-  def presentBucketIds(spark: SparkSession, path: String): Set[Int] = {
-    val (fs, p) = fsOf(spark, path)
-    if (!fs.exists(p)) Set.empty else bucketNames(fs, p).map(bucketIdOf).toSet
-  }
 
   /** Bucket dir names (live and `.old`) in one listing of `dir`. */
   private def bucketNames(fs: org.apache.hadoop.fs.FileSystem,
@@ -592,44 +571,21 @@ object MergeTable {
     * Idempotent: re-running the same delete matches nothing. Cost: the
     * REWRITE is O(matching-bucket bytes), but the FIND phase (locating
     * matches — one bounded aggregate, ≤ nBuckets rows collected) reads
-    * every live bucket once by default: the predicate is arbitrary, so
-    * no bucket can be ruled out a priori. Parquet footer/row-group
-    * statistics pushdown mitigates for stat-friendly predicates (the
-    * retention caller's `routed_seq < N` skips whole row groups).
-    * A caller that KNOWS which buckets can hold matching rows passes
-    * `candidateBuckets` (the 4-arg overload) and the find reads only
-    * those dirs — O(candidate buckets), the find-side twin of
-    * [[merge]]'s `knownAffected`.
+    * every live bucket once: the predicate is arbitrary, so no bucket
+    * can be ruled out a priori. Parquet footer/row-group statistics
+    * pushdown mitigates for stat-friendly predicates (the retention
+    * caller's `routed_seq < N` skips whole row groups).
     * Returns the number of rows deleted.
     */
   def deleteWhere(spark: SparkSession, path: String,
-      predicate: Column): Long =
-    deleteWhere(spark, path, predicate, candidateBuckets = None)
-
-  /** [[deleteWhere]] with a pruned FIND phase: only the `candidateBuckets`
-    * dirs are scanned for matching rows. CONTRACT — mirroring
-    * [[merge]]'s `knownAffected`: the set must contain EVERY bucket that
-    * can hold a matching row (a superset is fine; `None` falls back to
-    * the table-wide scan). A bucket wrongly omitted is never scanned, so
-    * its matching rows are silently KEPT — for idempotent retention that
-    * is a deferred delete, not data loss, but the only sanctioned
-    * derivations are (a) ids recorded at write time with the table's own
-    * [[bucketColumn]] (e.g. the quarantine route's resolved-buckets
-    * sidecar) or (b) [[bucketIds]] over the candidate key set of a
-    * bucket-keyed predicate. The rewrite phase is unchanged (affected ⊆
-    * candidates by construction).
-    */
-  def deleteWhere(spark: SparkSession, path: String, predicate: Column,
-      candidateBuckets: Option[Set[Int]]): Long = {
+      predicate: Column): Long = {
     val (fs, p) = fsOf(spark, path)
     Swap.recoverAll(fs, p)
     if (!fs.exists(p)) return 0L
     val (nBuckets, keys) = readMeta(fs, p).getOrElse(throw new
         IllegalStateException(s"MergeTable.deleteWhere: no _meta at $path"))
-    if (candidateBuckets.exists(_.isEmpty)) return 0L
-    // one bounded job: rows to delete → (count, distinct buckets);
-    // pruned to the candidate dirs when the caller supplied them
-    val hit = readPruned(spark, path, candidateBuckets).filter(predicate)
+    // one bounded job: rows to delete → (count, distinct buckets)
+    val hit = read(spark, path).filter(predicate)
       .select(bucketColumn(keys, nBuckets).as(BucketCol))
       .agg(count(lit(1)).as("n"), collect_set(col(BucketCol)).as("bs"))
       .collect()(0)

@@ -590,7 +590,7 @@ object Multimodal {
     val quarExists = exists(quarTable)
     // The main-table merge and the quarantine chain OVERLAP from here
     // (r17 BUILD_NOTES addendum #7, shipped r18): they write DISJOINT
-    // tables (main vs quarantine + its sidecar, each with its own
+    // tables (main vs quarantine, each with its own
     // `__staging` dir), both read only the immutable `scratch__norm`
     // stage, and the quarantine chain's only former dependency on the
     // main merge — the resolved-side bucket pruning — uses the
@@ -604,7 +604,7 @@ object Multimodal {
     //    delta-wins to the same state.
     //  - main committed / quar not: ok ∩ newQuar = ∅ by error-wins
     //    normalization, so the replayed quarantine delta is the same
-    //    frame; the sidecar union stays a superset (hint contract).
+    //    frame.
     // The drain floor was two SEQUENTIAL staged rewrites (~0.5-0.8 s
     // main + ~1.0-1.5 s quarantine chain at sf0.1); overlapping them
     // hides the shorter under the longer.
@@ -645,42 +645,14 @@ object Multimodal {
         .withColumn("routed_seq", lit(seq))
       val qObs = org.apache.spark.sql.Observation()
       Obs.scope("qdelta_stage") {
-        qdelta.observe(qObs, collect_set(bucketCol).as("q_buckets"),
-            collect_set(when(col("status") === lit("resolved"), bucketCol))
-              .as("resolved_buckets"))
+        qdelta.observe(qObs, collect_set(bucketCol).as("q_buckets"))
           .write.mode("overwrite").parquet(scratch)
-      }
-      // Record which buckets gained `resolved` tombstones — the sidecar
-      // [[quarantineRetire]] prunes its find phase with. Rides the qdelta
-      // write as a second observed aggregate (zero extra jobs), and is
-      // unioned in BEFORE the quarantine merge so a crash between the two
-      // leaves the sidecar a SUPERSET of on-disk resolved buckets (the
-      // hint contract — an over-wide hint costs a few extra dirs in the
-      // find scan, an under-wide one would strand tombstones). Replays
-      // re-add the same ids: the union is idempotent.
-      Obs.scope("sidecar") {
-        val resolvedBuckets = observedBuckets(qObs, "resolved_buckets",
-          spark.read.schema(qdelta.schema).parquet(scratch)
-            .filter(col("status") === lit("resolved"))).toSet
-        if (resolvedBuckets.nonEmpty)
-          addResolvedBuckets(spark, quarTable, resolvedBuckets)
       }
       Obs.scope("quar_merge") {
         mergeUnlessVacuous(
           spark.read.schema(qdelta.schema).parquet(scratch), quarTable,
           observedBuckets(qObs, "q_buckets",
             spark.read.schema(qdelta.schema).parquet(scratch)))
-        // Stamp a table the route just CREATED with an empty sidecar:
-        // "sidecar present" then unambiguously means "every resolved row
-        // ever merged is recorded", so addResolvedBuckets never has to
-        // fall back to the conservative all-buckets seed for this table.
-        // A freshly created table holds no resolved rows (resolution
-        // requires the table to have existed at batch start). Crash
-        // between merge and stamp leaves sidecar-absent = the safe
-        // pre-sidecar fallback, a perf nit only.
-        if (!quarExists && exists(quarTable) &&
-            readResolvedBuckets(spark, quarTable).isEmpty)
-          writeResolvedBuckets(spark, quarTable, Set.empty)
       }
     }
     // Run the shorter main merge on a named thread, the quarantine chain
@@ -777,88 +749,9 @@ object Multimodal {
     * state the route starts from). Returns rows retired.
     */
   def quarantineRetire(spark: SparkSession, quarTable: String,
-      retireBefore: Long): Long = {
-    val p = new org.apache.hadoop.fs.Path(quarTable)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    // Pruned find: only buckets the route ever recorded `resolved`
-    // tombstones into can hold retirable rows — the sidecar is a
-    // superset of those by its write ordering, so the pruned find sees
-    // every match. Tables predating the sidecar (or a torn sidecar
-    // write, which reads as absent) fall back to the table-wide scan.
-    val hint = readResolvedBuckets(spark, quarTable)
-    val retired = graft.merge.MergeTable.deleteWhere(spark, quarTable,
-      col("status") === lit("resolved") && col("routed_seq") < lit(retireBefore),
-      candidateBuckets = hint)
-    // Tighten the sidecar to the buckets that STILL hold resolved rows
-    // (young tombstones inside the horizon): without this the set only
-    // ever grows and the prune decays to a full scan. One pruned
-    // aggregate over the previous hint set — retention runs rarely, and
-    // the recompute is the same O(hint buckets) the find just paid. An
-    // all-retired table was deleted outright (sidecar went with it).
-    if (retired > 0 && hint.isDefined && fs.exists(p)) {
-      graft.merge.MergeTable.meta(spark, quarTable).foreach {
-        case (nBuckets, keys) =>
-          val remaining = graft.merge.MergeTable.bucketIds(
-            graft.merge.MergeTable.readBuckets(spark, quarTable, hint.get,
-                keys, nBuckets)
-              .filter(col("status") === lit("resolved")),
-            keys, nBuckets)
-          writeResolvedBuckets(spark, quarTable, remaining)
-      }
-    }
-    retired
-  }
-
-  /** Sidecar recording which quarantine buckets may hold `resolved`
-    * tombstones (`_resolved_buckets` inside the table dir — removed
-    * with the table, absent until the first resolution). Maintained by
-    * the route (superset union before each quarantine merge) and
-    * consumed + tightened by [[quarantineRetire]]'s pruned find. Written
-    * and read through [[graft.merge.Swap]]'s atomic small-file pair, so a
-    * crash mid-write leaves the old sidecar, never a torn subset (an
-    * absent one reads as "no hint" — full-scan fallback).
-    */
-  private val ResolvedBucketsFile = "_resolved_buckets"
-
-  private def sidecarFs(spark: SparkSession, quarTable: String) = {
-    val p = new org.apache.hadoop.fs.Path(quarTable, ResolvedBucketsFile)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private[graft] def readResolvedBuckets(spark: SparkSession,
-      quarTable: String): Option[Set[Int]] = {
-    val (fs, f) = sidecarFs(spark, quarTable)
-    // unreadable sidecar = no hint (full-scan fallback) — the sidecar is
-    // a pure optimization, never load-bearing for correctness
-    try graft.merge.Swap.readText(fs, f).map(
-      _.split(",", -1).toSeq.filter(_.nonEmpty).map(_.trim.toInt).toSet)
-    catch { case _: Exception => None }
-  }
-
-  private def writeResolvedBuckets(spark: SparkSession, quarTable: String,
-      buckets: Set[Int]): Unit = {
-    val (fs, f) = sidecarFs(spark, quarTable)
-    graft.merge.Swap.writeText(fs, f, buckets.toSeq.sorted.mkString(","))
-  }
-
-  private def addResolvedBuckets(spark: SparkSession, quarTable: String,
-      add: Set[Int]): Unit = {
-    // An absent sidecar on an EXISTING table means the table predates
-    // the sidecar (or its creation-time stamp was lost to a crash) — it
-    // may hold resolved rows in unrecorded buckets, so seeding with only
-    // `add` would make the retire hint UNDER-wide and strand those
-    // tombstones forever. Seed with every bucket dir present instead
-    // (one fs listing): a guaranteed superset, tightened by the first
-    // retire that deletes anything. Tables the route creates itself are
-    // stamped with an empty sidecar at creation, so they never pay the
-    // wide seed.
-    val existing = readResolvedBuckets(spark, quarTable)
-    val prev = existing.getOrElse(
-      graft.merge.MergeTable.presentBucketIds(spark, quarTable))
-    if (existing.isEmpty || !add.subsetOf(prev))
-      writeResolvedBuckets(spark, quarTable, prev ++ add)
-  }
+      retireBefore: Long): Long =
+    graft.merge.MergeTable.deleteWhere(spark, quarTable,
+      col("status") === lit("resolved") && col("routed_seq") < lit(retireBefore))
 
   /** Planted image dimensions for [[documentBlobs]] — derived from the
     * document text so the SQL oracle can predict what a REAL decode of

@@ -44,17 +44,33 @@ object PipelineMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, usage)
     val cmd = args.head
+    val (flags, stage) = commands.getOrElse(cmd,
+      throw new IllegalArgumentException(s"unknown command '$cmd'\n$usage"))
     val opts = parseOpts(args.tail)
-    val spark = graft.GraftSession("graft-pipeline")
-    cmd match {
-      case "ingest" => ingest(spark, opts)
-      case "merge" => mergePublish(spark, opts)
-      case "run" => ingest(spark, opts); mergePublish(spark, opts)
-      case "quarantine" => quarantine(spark, opts)
-      case other => throw new IllegalArgumentException(
-        s"unknown command '$other'\n$usage")
-    }
+    // every stage ignores keys it does not read, so a misspelled flag
+    // would silently change what runs (a mistyped --publish republishes
+    // over --season in place): reject it before any session exists
+    val unread = opts.keySet -- flags
+    if (unread.nonEmpty) throw new IllegalArgumentException(
+      s"$cmd does not read ${unread.toSeq.sorted.map("--" + _).mkString(", ")}" +
+        s"\n$usage")
+    stage(graft.GraftSession("graft-pipeline"), opts)
   }
+
+  private val ingestFlags = Set("servers", "topic", "out", "checkpoint",
+    "format", "min-partitions", "max-offsets", "typed")
+  private val mergeFlags = Set("season", "delta", "publish", "csv-name", "tmp")
+
+  /** Each command's flag set and stage; `run` reads both stages' flags. */
+  private val commands: Map[String,
+      (Set[String], (SparkSession, Map[String, String]) => Unit)] = Map(
+    "ingest" -> (ingestFlags -> ingest _),
+    "merge" -> (mergeFlags -> mergePublish _),
+    "run" -> ((ingestFlags ++ mergeFlags) ->
+      ((spark, opts) => { ingest(spark, opts); mergePublish(spark, opts) })),
+    "quarantine" -> (Set("blobs", "main", "quar", "checkpoint", "buckets",
+      "table-bytes", "retire-horizon", "tmp", "crash-after-batch") ->
+      quarantine _))
 
   val usage: String =
     """usage: PipelineMain <ingest|merge|run|quarantine> [--key value ...]

@@ -678,7 +678,7 @@ class MergeSpec extends SparkTestBase {
     MergeTable.write(base, path, Seq("k"), nBuckets = 8)
     val want = MergeTable.bucketIds(
       (1L to 10L).toDF("k"), Seq("k"), 8)
-    val got = MergeTable.readBuckets(spark, path, want)
+    val got = MergeTable.readBuckets(spark, path, want, Seq("k"), 8)
     // the pruned read sees every key that hashes into the chosen
     // buckets — in particular all of 1..10 — and nothing from others
     val keys = got.select("k").collect().map(_.getLong(0)).toSet
@@ -691,14 +691,12 @@ class MergeSpec extends SparkTestBase {
     assert(got.inputFiles.length < MergeTable.read(spark, path)
       .inputFiles.length)
     // requesting only absent buckets yields schema, zero rows
-    val empty = MergeTable.readBuckets(spark, path, Set(997))
+    val empty = MergeTable.readBuckets(spark, path, Set(997), Seq("k"), 8)
     assert(empty.schema == got.schema && empty.count() == 0L)
-    // the validated overload (r15 ADVICE): bucketing cross-checked
-    // against _meta. The write path fails loudly on a mismatch; a
-    // pruned READ with stale bucketing would not fail at all — it would
-    // silently miss matching rows, which is strictly worse.
-    assert(MergeTable.readBuckets(spark, path, want, Seq("k"), 8)
-      .select("k").collect().map(_.getLong(0)).toSet == expected)
+    // bucketing is cross-checked against _meta (r15 ADVICE). The write
+    // path fails loudly on a mismatch; a pruned READ with stale
+    // bucketing would not fail at all — it would silently miss matching
+    // rows, which is strictly worse.
     val staleN = intercept[IllegalArgumentException] {
       MergeTable.readBuckets(spark, path, want, Seq("k"), 16)
     }
@@ -1093,61 +1091,6 @@ class MergeSpec extends SparkTestBase {
       .filter(col("v").startsWith("NEW")).count() == 61L)
   }
 
-  test("MergeTable.deleteWhere(candidateBuckets) prunes the find phase: " +
-      "a covering hint equals the unpruned delete, an under-wide hint " +
-      "really skips unlisted buckets") {
-    import graft.merge.MergeTable
-    val dir = Files.createTempDirectory("graft-mtdwc").toString
-    val rows = (1L to 400L).map { i =>
-      (i, if (i % 4 == 0) "old" else "new")
-    }
-    def fresh(name: String): String = {
-      val p = s"$dir/$name"
-      MergeTable.write(rows.toDF("k", "tag"), p, Seq("k"), nBuckets = 16)
-      p
-    }
-    val pred = col("tag") === "old"
-    val matchBuckets = rows.filter(_._2 == "old").map(_._1)
-      .toDF("k").select(MergeTable.bucketColumn(Seq("k"), 16).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    // control: unpruned
-    val ctl = fresh("ctl")
-    val wantDeleted = MergeTable.deleteWhere(spark, ctl, pred)
-    val wantLeft = MergeTable.read(spark, ctl).orderBy("k").collect().toSeq
-    // exact hint and a superset hint both equal the control
-    Seq("exact" -> matchBuckets,
-        "superset" -> (matchBuckets ++ Set(0, 1, 2, 3))).foreach {
-      case (label, hint) =>
-        val p = fresh(label)
-        assert(MergeTable.deleteWhere(spark, p, pred, Some(hint))
-          == wantDeleted, s"[$label] deleted count")
-        assert(MergeTable.read(spark, p).orderBy("k").collect().toSeq
-          == wantLeft, s"[$label] surviving rows")
-    }
-    // an EMPTY hint is a zero-cost no-op
-    val e = fresh("empty")
-    assert(MergeTable.deleteWhere(spark, e, pred, Some(Set.empty)) == 0L)
-    assert(MergeTable.read(spark, e).count() == 400L)
-    // an under-wide hint must actually SKIP the unlisted buckets (the
-    // documented contract — this is the proof the find is pruned, not
-    // just filtered after a full read): rows in the omitted bucket
-    // survive, everything in the listed buckets is deleted
-    val omitted = matchBuckets.head
-    val u = fresh("under")
-    val partial =
-      MergeTable.deleteWhere(spark, u, pred, Some(matchBuckets - omitted))
-    assert(partial < wantDeleted, "the omitted bucket's rows must be kept")
-    val leftTags = MergeTable.read(spark, u)
-      .withColumn("b", MergeTable.bucketColumn(Seq("k"), 16))
-      .collect().map(r => (r.getAs[Int]("b"), r.getAs[String]("tag")))
-    assert(leftTags.count { case (b, t) => t == "old" && b == omitted } ==
-      wantDeleted - partial, "every surviving 'old' row sits in the omitted bucket")
-    assert(!leftTags.exists { case (b, t) => t == "old" && b != omitted },
-      "listed buckets must be fully retired")
-    scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(dir)))
-  }
-
   test("MergeTable.deleteWhere recovers a bucket stranded in .old by a " +
       "crashed writer, and its pruned read takes the .old fallback") {
     import graft.merge.MergeTable
@@ -1164,7 +1107,8 @@ class MergeSpec extends SparkTestBase {
       .stripSuffix(".old").toInt
     // a PRUNED read targeting the stranded bucket must fall back to .old
     // without mutating (same contract as the full read)
-    val pruned = MergeTable.readBuckets(spark, path, Set(strandedBucket))
+    val pruned =
+      MergeTable.readBuckets(spark, path, Set(strandedBucket), Seq("k"), 4)
     assert(pruned.count() > 0, "pruned read must see the .old fallback")
     assert(bak.exists() && !live.exists(), "reader must not repair")
     // the next WRITER (deleteWhere) recovers first, then deletes — the

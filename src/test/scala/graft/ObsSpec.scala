@@ -37,7 +37,7 @@ class ObsSpec extends SparkTestBase {
         crashSeam = _ => bothStarted.await(60, TimeUnit.SECONDS))
     }
     assert(layers.keySet == Set("norm_stage", "main_merge", "main_merge.stage_write",
-      "main_merge.swap", "qdelta_stage", "sidecar", "quar_merge", "quar_merge.stage_write",
+      "main_merge.swap", "qdelta_stage", "quar_merge", "quar_merge.stage_write",
       "quar_merge.swap", "cleanup"))
     // a staged rewrite writes every row of the buckets its delta touches:
     // counted under the wrong chain, a table's rows would not add up

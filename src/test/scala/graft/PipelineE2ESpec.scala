@@ -263,6 +263,33 @@ class PipelineE2ESpec extends SparkTestBase {
     assert(Merge.readSeasonTgz(spark, s"$dir/shots-2025.tgz").count() == 2)
   }
 
+  test("PipelineMain rejects a flag its command does not read, before " +
+      "touching the season") {
+    // merge publishes over --season when --publish is absent, so a
+    // misspelled --publish must fail rather than republish in place
+    import graft.tools.PipelineMain
+    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-flag").toString
+    val tgz = s"$dir/shots-2025.tgz"
+    Merge.publishTgz(Ingest.transform(Seq(("k0", envelopeJson("g1",
+      "Cleveland", "Boston", "1st Q, 10:00.0 remaining<br>Donovan Mitchell " +
+        "made 2-pointer from 8 ft<br>Cleveland leads 2-0"))).toDF("key", "value")),
+      s"$dir/t0", tgz, "shots-2025.csv")
+    Ingest.writeCsv(Ingest.transform(Seq(("k2", envelopeJson("g2", "LA Lakers",
+      "Miami", "4th Q, 0:01.2 remaining<br>LeBron James made 3-pointer from " +
+        "30 ft<br>LA Lakers now leads 101-99"))).toDF("key", "value")),
+      s"$dir/ongoing")
+    val before = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(tgz))
+    val e = intercept[IllegalArgumentException] {
+      PipelineMain.main(Array("merge", "--season", tgz,
+        "--delta", s"$dir/ongoing", "--pubish", s"$dir/out.tgz"))
+    }
+    assert(e.getMessage.contains("--pubish"))
+    assert(java.util.Arrays.equals(before,
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(tgz))),
+      "the season must be byte-identical after the rejected command")
+    assert(!new java.io.File(s"$dir/out.tgz").exists)
+  }
+
   test("mergePublish recovers a season stranded at .old by a killed publish " +
       "instead of bootstrapping from the delta alone") {
     import graft.tools.PipelineMain

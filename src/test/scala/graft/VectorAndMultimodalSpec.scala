@@ -1004,95 +1004,50 @@ class VectorAndMultimodalSpec extends SparkTestBase {
       .deleteDirectory(new java.io.File(base)))
   }
 
-  test("resolved-buckets sidecar: stamped at creation, superset of the " +
-      "resolved rows' buckets, tightened by retire, and retire equals " +
-      "the full-scan fallback without it") {
-    // r16 verdict item 4: quarantineRetire's find phase prunes to the
-    // buckets the route recorded resolved tombstones into — and the
-    // pruned retire must equal the unpruned one bit for bit.
+  test("a quarantine table carrying an older release's _resolved_buckets " +
+      "file routes and retires exactly like one without it") {
+    // Older releases kept a `_resolved_buckets` file inside the
+    // quarantine table dir as a retire-time bucket hint. Nothing reads it
+    // now: a table that still carries one (here a stale, under-wide
+    // listing of one bucket) must route, retire and drop out exactly like
+    // its twin without the file.
     import spark.implicits._
     import graft.merge.MergeTable
-    import org.apache.spark.sql.functions.col
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val base =
-      java.nio.file.Files.createTempDirectory("graft-qsidecar-").toString
+      java.nio.file.Files.createTempDirectory("graft-qstale-").toString
     try {
-      val mainT = s"$base/main"; val quarT = s"$base/quar"
-      def stage(rows: Seq[Multimodal.MediaRow], p: String) = {
+      def route(rows: Seq[Multimodal.MediaRow], seq: Long, t: String): Unit = {
+        val d = s"$base/d$seq-$t"
         Multimodal.decodeMetaTotal(rows.toDS()).toDF()
-          .write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
+          .write.mode("overwrite").parquet(d)
+        Multimodal.quarantineRoute(spark.read.parquet(d), s"$base/main-$t",
+          s"$base/quar-$t", 8, s"$base/s$seq-$t", seq = seq)
       }
-      def route(rows: Seq[Multimodal.MediaRow], seq: Long,
-          quar: String = quarT): Unit =
-        Multimodal.quarantineRoute(stage(rows, s"$base/d$seq-${quar.hashCode}"),
-          mainT, quar, 8, s"$base/s$seq-${quar.hashCode}", seq = seq)
-      def resolvedBucketsOnDisk(quar: String): Set[Int] =
-        MergeTable.read(spark, quar)
-          .filter(col("status") === "resolved")
-          .select(MergeTable.bucketColumn(Seq("media_id"), 8).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSet
-      // seq 1: corruption only → table created, sidecar stamped EMPTY
-      val keys = (1L to 20L)
-      route(keys.map(i =>
-        Multimodal.MediaRow(i, "image", png.take(5))), 1L)
-      assert(Multimodal.readResolvedBuckets(spark, quarT)
-        .contains(Set.empty[Int]),
-        "a route-created table must carry an empty sidecar, not none")
-      // pick a key that sits ALONE in its bucket, so retiring its
-      // tombstone must remove a bucket from the sidecar (strict shrink)
-      val keyBucket = keys.toDF("media_id")
-        .select(col("media_id"),
-          MergeTable.bucketColumn(Seq("media_id"), 8).as("b"))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val lone = keys.find(k =>
-        keyBucket.values.count(_ == keyBucket(k)) == 1).get
-      // seq 2: repair the lone key → sidecar covers its bucket
-      route(Seq(Multimodal.MediaRow(lone, "image", png)), 2L)
-      val sc2 = Multimodal.readResolvedBuckets(spark, quarT).get
-      assert(resolvedBucketsOnDisk(quarT).subsetOf(sc2),
-        "sidecar must be a superset of the on-disk resolved buckets")
-      // seq 3: repair the rest
-      route(keys.filterNot(_ == lone)
-        .map(i => Multimodal.MediaRow(i, "image", png)), 3L)
-      val scPre = Multimodal.readResolvedBuckets(spark, quarT).get
-      assert(resolvedBucketsOnDisk(quarT) == scPre,
-        "with every key repaired the sidecar is exactly the resolved buckets")
-      // pruned retire (horizon drops seq-2 tombstones) equals the
-      // full-scan fallback run on a sidecar-less CLONE of the table
-      val clone = s"$base/quar-clone"
-      org.apache.commons.io.FileUtils.copyDirectory(
-        new java.io.File(quarT), new java.io.File(clone))
-      new java.io.File(clone, "_resolved_buckets").delete()
-      assert(Multimodal.readResolvedBuckets(spark, clone).isEmpty)
-      val prunedN = Multimodal.quarantineRetire(spark, quarT, 3L)
-      val fullN = Multimodal.quarantineRetire(spark, clone, 3L)
-      assert(prunedN == fullN && prunedN == 1L,
-        s"pruned ($prunedN) and full-scan ($fullN) retire must agree")
-      assert(MergeTable.read(spark, quarT).orderBy("media_id")
-          .collect().toSeq ==
-        MergeTable.read(spark, clone).orderBy("media_id").collect().toSeq,
-        "surviving rows must be identical either way")
-      // retire TIGHTENED the sidecar to buckets still holding resolved
-      val sc3 = Multimodal.readResolvedBuckets(spark, quarT).get
-      assert(sc3 == resolvedBucketsOnDisk(quarT),
-        "post-retire sidecar must be exactly the still-resolved buckets")
-      assert(sc3 == scPre - keyBucket(lone),
-        "tighten must drop exactly the lone key's now-empty bucket")
-      // pre-sidecar ADOPTION: the clone (no sidecar) gets its next
-      // resolution recorded with the conservative all-present seed — a
-      // superset wide enough to cover any unrecorded older tombstones
-      route(Seq(Multimodal.MediaRow(99L, "image", png.take(5))), 4L,
-        quar = clone)
-      route(Seq(Multimodal.MediaRow(99L, "image", png)), 5L, quar = clone)
-      val adopted = Multimodal.readResolvedBuckets(spark, clone).get
-      assert(resolvedBucketsOnDisk(clone).subsetOf(adopted),
-        "adopted sidecar must cover all resolved rows, old and new")
-      val allResolved = MergeTable.read(spark, clone)
-        .filter(col("status") === "resolved").count()
-      assert(Multimodal.quarantineRetire(spark, clone, 100L) == allResolved,
-        "hinted retire on the adopted table must catch every tombstone — " +
-          "including ones that predate its sidecar")
+      def rows(t: String) = MergeTable.read(spark, s"$base/quar-$t")
+        .orderBy("media_id").collect().toSeq
+      val keys = 1L to 20L
+      Seq("stale", "twin").foreach { t =>
+        route(keys.map(i => Multimodal.MediaRow(i, "image", png.take(5))), 1L, t)
+      }
+      val stale = new java.io.File(s"$base/quar-stale", "_resolved_buckets")
+      java.nio.file.Files.write(stale.toPath, "0".getBytes("UTF-8"))
+      // a repair wave in two batches, then retire the older half
+      Seq("stale", "twin").foreach { t =>
+        route(keys.take(10).map(i => Multimodal.MediaRow(i, "image", png)), 2L, t)
+        route(keys.drop(10).map(i => Multimodal.MediaRow(i, "image", png)), 3L, t)
+      }
+      assert(rows("stale") == rows("twin"))
+      assert(Seq("stale", "twin").map(t =>
+        Multimodal.quarantineRetire(spark, s"$base/quar-$t", 3L)) == Seq(10L, 10L))
+      assert(rows("stale") == rows("twin") && rows("stale").size == 10)
+      assert(stale.exists)
+      // every row is a tombstone now: both tables go, the stale file too
+      assert(Seq("stale", "twin").map(t =>
+        Multimodal.quarantineRetire(spark, s"$base/quar-$t", 100L)) == Seq(10L, 10L))
+      assert(!new java.io.File(s"$base/quar-stale").exists &&
+        !new java.io.File(s"$base/quar-twin").exists,
+        "an all-retired table must be deleted outright, stale file included")
     } finally scala.util.Try(org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(base)))
   }
