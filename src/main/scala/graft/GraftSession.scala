@@ -53,6 +53,18 @@ object GraftSession {
         .set("spark.sql.files.maxPartitionBytes", "16m")
     }
 
+  /** Run `body` with each of `settings` set in the session conf, then put
+    * every key back as it was: its previous value, or unset if it had
+    * none. Restored on failure too. */
+  def withConf[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** What a block cost: wall, process-CPU and JVM GC seconds. `cpuSec` is
     * -1 when the JVM exposes no process-CPU counter. Local executors run
     * in this JVM, so process CPU covers the whole job's work there.

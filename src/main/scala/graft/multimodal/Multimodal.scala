@@ -790,29 +790,20 @@ object Multimodal {
       r.copy(content = r.content.take(5)) else r)(
       org.apache.spark.sql.Encoders.product[MediaRow])
 
-  /** Generated blob corpora as PARQUET, one dir per (input dir,
-    * fingerprint); eviction deletes the temp layout. Disk-backed rather
-    * than `persist()`-backed ([[graft.ops.PersistRegistry]]) because the
-    * corpus is INPUT data, not an intermediate: a production pipeline
-    * reads media blobs from a table, and a memory-cache entry both
-    * competes with genuine intermediates for executor memory and is
-    * re-paid (full codec ENCODE of every blob) whenever the cache
-    * churns. The parquet copy is written once per session/dir and every
-    * later read is a plain columnar scan.
+  /** The generated blob corpus of `dir`'s documents, staged as PARQUET
+    * once per documents-fixture content ([[graft.streaming.Stage]]).
+    * Disk-backed rather than `persist()`-backed
+    * ([[graft.ops.PersistRegistry]]) because the corpus is INPUT data,
+    * not an intermediate: a production pipeline reads media blobs from a
+    * table, and a memory-cache entry both competes with genuine
+    * intermediates for executor memory and is re-paid (full codec ENCODE
+    * of every blob) whenever the cache churns. Every read is a plain
+    * columnar scan of the stage.
     */
-  private val blobCache = new graft.ops.SessionLru[String](4,
-    st => scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(st).getParentFile)),
-    releaseOnRaceLoss = true)
-
   def documentBlobs(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    val fp = graft.ops.SessionLru.pathFingerprint(spark, s"$dir/documents.parquet")
-    val path = blobCache.getOrBuild(spark, "blobs:" + dir, fp) {
-      val out = java.nio.file.Files.createTempDirectory("graft-blobs")
-        .toString + "/blobs"
-      generateBlobs(spark, dir).toDF().write.mode("overwrite").parquet(out)
-      out
+    val path = graft.streaming.Stage(spark, s"$dir/documents.parquet", "blobs") {
+      out => generateBlobs(spark, dir).write.parquet(out)
     }
     // read straight off the columnar copy: for wide binary rows a
     // compressed parquet scan beats a MEMORY_AND_DISK row cache (the

@@ -166,15 +166,6 @@ object ClusterOps {
         coalesce(col("root"), col("doc_id")).as("cluster_id"))
   }
 
-  /** Folded incremental state dirs, one per input dir, fingerprinted so a
-    * rewritten corpus refolds; eviction deletes the temp state. Bounded by
-    * the same cap as the label cache. */
-  private val incrStateCache = new graft.ops.SessionLru[String](
-    LabelCacheMax,
-    st => scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(st))),
-    releaseOnRaceLoss = true)
-
   /** q71: the incremental "updating datasets" clustering under the oracle
     * gate. Folds the corpus in two halves through the streaming sink's
     * per-batch fold ([[graft.streaming.Streaming.clusterBatch]] — LSH
@@ -186,15 +177,14 @@ object ClusterOps {
     * synthetic splits.
     */
   def incrementalClusters(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.ops.SessionLru.pathFingerprint(spark, s"$dir/documents.parquet")
-    val state = incrStateCache.getOrBuild(spark, dir, fp) {
-      val st = java.nio.file.Files.createTempDirectory("graft-incr").toString
+    // the folded state is staged once per documents-fixture content
+    val state = graft.streaming.Stage(spark, s"$dir/documents.parquet",
+        "q71-fold") { st =>
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       graft.streaming.Streaming.clusterBatch(
         docs.filter(col("doc_id") % 2 === 0), 0L, st, clusterJaccard, nBuckets = 16)
       graft.streaming.Streaming.clusterBatch(
         docs.filter(col("doc_id") % 2 === 1), 1L, st, clusterJaccard, nBuckets = 16)
-      st
     }
     graft.streaming.Streaming.clusterMembership(spark, state)
       .orderBy(col("doc_id"))

@@ -25,18 +25,11 @@ object KafkaLogQueries {
 
   val Partitions = 4
 
-  /** Produced-log fixtures, one per (dir, fingerprint), built once per
-    * session and deleted on eviction (same disk-backed pattern as the
-    * multimodal blob corpus — the log is INPUT data, not an
-    * intermediate). */
-  private val logCache = new graft.ops.SessionLru[String](4,
-    root => scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(root))),
-    releaseOnRaceLoss = true)
-
-  /** Build (once per session/dir) the orders log: partition by
-    * `o_orderkey % 4`, offset order = orderkey order within a partition,
-    * several segments per partition so scans cross segment boundaries.
+  /** The orders log of `dir`, staged once per orders-fixture content
+    * ([[graft.streaming.Stage]], the log is INPUT data, not an
+    * intermediate): partition by `o_orderkey % 4`, offset order =
+    * orderkey order within a partition, several segments per partition so
+    * scans cross segment boundaries.
     *
     * The PRODUCER side of the fixture (a real deployment's producer is
     * the upstream service; the engine under test is the reader) writes
@@ -48,13 +41,11 @@ object KafkaLogQueries {
     * driver-side build (same sort, same ~4-segment roll). The only
     * driver collect left is the per-partition COUNT (≤ `Partitions`
     * rows, metadata-scale) that sizes the segment rolls. Executors
-    * write the local tmp root directly — valid in the `local[*]`
+    * write the local build dir directly — valid in the `local[*]`
     * harness this fixture exists for; a cluster deployment's producer
     * is not Spark at all. */
-  private[graft] def ordersLog(spark: SparkSession, dir: String): String = {
-    val fp = graft.ops.SessionLru.pathFingerprint(spark, s"$dir/orders.parquet")
-    logCache.getOrBuild(spark, "kafkalog:" + dir, fp) {
-      val root = java.nio.file.Files.createTempDirectory("graft-kafkalog").toString
+  private[graft] def ordersLog(spark: SparkSession, dir: String): String =
+    graft.streaming.Stage(spark, s"$dir/orders.parquet", "kafkalog") { root =>
       val nParts = Partitions
       val recs = Tables.orders(spark, dir)
         .select(col("o_orderkey"),
@@ -90,9 +81,7 @@ object KafkaLogQueries {
           }
           flush()
         }
-      root
     }
-  }
 
   private val valueSchema: StructType = new StructType()
     .add("orderkey", StringType).add("custkey", StringType)

@@ -33,22 +33,13 @@ object LayoutOps {
   val PartLo = 20L
   val PartHi = 150L
 
-  /** Z-ordered lineitem copies, one per input dir, fingerprinted so a
-    * rewritten table re-clusters; eviction deletes the temp layout. */
-  private val zCache = new graft.ops.SessionLru[String](4,
-    st => scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(st).getParentFile)),
-    releaseOnRaceLoss = true)
-
-  /** Build (once per session/dir) and return the Z-ordered lineitem copy.
-    * The write is the one-time layout cost a deployment pays at ingest or
-    * compaction time; every later box query amortizes it.
+  /** The Z-ordered lineitem copy of `dir`, staged once per
+    * lineitem-fixture content ([[graft.streaming.Stage]]). The write is
+    * the one-time layout cost a deployment pays at ingest or compaction
+    * time; every later box query amortizes it.
     */
-  private[graft] def zorderedLineitem(spark: SparkSession, dir: String): String = {
-    val fp = graft.ops.SessionLru.pathFingerprint(spark, s"$dir/lineitem.parquet")
-    zCache.getOrBuild(spark, "zlineitem:" + dir, fp) {
-      val out = java.nio.file.Files.createTempDirectory("graft-zorder")
-        .toString + "/lineitem"
+  private[graft] def zorderedLineitem(spark: SparkSession, dir: String): String =
+    graft.streaming.Stage(spark, s"$dir/lineitem.parquet", "zorder") { out =>
       // Timestamp encoding note: l_shipdate reads as TIMESTAMP_NTZ, which
       // parquet stores as int64 micros WITH min/max statistics. (A
       // session-zoned TimestampType column would hit Spark's legacy INT96
@@ -57,9 +48,7 @@ object LayoutOps {
       // against silently regressing into that.)
       graft.ops.ScaleOps.writeZOrdered(Tables.lineitem(spark, dir), out,
         ZFiles, Seq("l_shipdate", "l_partkey"))
-      out
     }
-  }
 
   /** q72: 2-D box scan over the Z-ordered layout. Result is identical to
     * the same box over the plain table (the oracle's side) — the layout

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.multimodal.Multimodal
 import graft.streaming.{Stage, Streaming}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,10 +46,7 @@ object StreamingQueries {
     * around start() is safe, and it is restored before any other query
     * plans.
     */
-  private[graft] def withDrainPartitions[A](spark: SparkSession)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+  private[graft] def withDrainPartitions[A](spark: SparkSession)(body: => A): A =
     // AQE off for the drain's foreachBatch jobs too (streaming plans
     // disable it themselves): every per-batch job here is a BOUNDED
     // merge/stage over one micro-batch, where AQE's per-stage
@@ -57,12 +55,8 @@ object StreamingQueries {
     // and its payoffs (skew joins, coalescing huge shuffles) cannot
     // apply. Deployment code (PipelineMain) inherits the session conf
     // unchanged.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
+    graft.GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** q79: hourly event-type rollup computed BY THE STREAMING ENGINE.
     * Append output mode through a parquet file sink, like q80/q83/q84:
@@ -368,7 +362,7 @@ object StreamingQueries {
     val base = drainDir("q87", dir)
     // fresh season + checkpoint: each call is a full recomputation, and
     // a leftover checkpoint would make the new drain a no-op resume
-    Streaming.rmr(base)
+    FileUtils.deleteDirectory(new java.io.File(base))
     val season = s"$base/season"
     copyTree(q87Seed(spark, dir), season)
     val delta = Streaming.fileEventSource(spark, dir)
@@ -464,7 +458,7 @@ object StreamingQueries {
     */
   def streamedQuarantine(spark: SparkSession, dir: String): DataFrame = {
     val base = drainDir("q92", dir)
-    Streaming.rmr(base)
+    FileUtils.deleteDirectory(new java.io.File(base))
     val mainT = s"$base/media_meta"
     val quarT = s"$base/quarantine"
     // the stage never changes under its name, so the drain lists it as is
@@ -536,7 +530,7 @@ object StreamingQueries {
     */
   def streamedRepair(spark: SparkSession, dir: String): DataFrame = {
     val base = drainDir("q93", dir)
-    Streaming.rmr(base)
+    FileUtils.deleteDirectory(new java.io.File(base))
     val mainT = s"$base/media_meta"
     val quarT = s"$base/quarantine"
     val src = s"$base/src"

@@ -244,12 +244,11 @@ private[sources] class KafkaLogScan(conf: LogConf) extends Scan {
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
       val ends = KafkaLog.endOffsets(conf.root, conf.topic)
+      // batch latest = empty scan (nothing after the end)
       val ranges = ends.toSeq.sortBy(_._1).map { case (p, end) =>
-        LogRange(conf.root, conf.topic, p, 0L, if (conf.startEarliest) end else end)
+        LogRange(conf.root, conf.topic, p, if (conf.startEarliest) 0L else end, end)
       }
-      // batch latest = empty scan (nothing after the end); keep earliest
-      val base = if (conf.startEarliest) ranges else ranges.map(r => r.copy(start = r.end))
-      KafkaLog.splitRanges(base.filter(r => r.end > r.start),
+      KafkaLog.splitRanges(ranges.filter(r => r.end > r.start),
         conf.minPartitions).toArray
     }
     override def createReaderFactory(): PartitionReaderFactory = new KafkaLogReaderFactory

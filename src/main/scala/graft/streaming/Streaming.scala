@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -139,7 +140,7 @@ object Streaming {
       .getOrElse(throw new java.io.FileNotFoundException(
         s"no part file in $tmpOut"))
     java.nio.file.Files.move(part, staged.resolve("zz-sentinel.parquet"))
-    rmr(tmpOut.toString)
+    FileUtils.deleteDirectory(tmpOut.toFile)
   }
 
   /** D2: streaming dedup — exactly-one-row-per-key across micro-batches,
@@ -700,7 +701,8 @@ object Streaming {
     */
   def drainToFile(streamed: DataFrame, outDir: String,
       checkpoint: String): DataFrame = {
-    rmr(outDir); rmr(checkpoint)
+    FileUtils.deleteDirectory(new java.io.File(outDir))
+    FileUtils.deleteDirectory(new java.io.File(checkpoint))
     val q = streamed.writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)
@@ -709,20 +711,6 @@ object Streaming {
       .start()
     q.awaitTermination()
     streamed.sparkSession.read.parquet(outDir)
-  }
-
-  /** Recursive local-filesystem delete, shared by every drain that must
-    * start from a clean output/checkpoint dir (a leftover checkpoint
-    * turns a fresh drain into a no-op resume). Driver-local tmp paths
-    * only — production season/sink paths go through the Hadoop FS API.
-    */
-  private[graft] def rmr(p: String): Unit = {
-    val d = java.nio.file.Paths.get(p)
-    if (java.nio.file.Files.exists(d)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
   }
 
   /** The RocksDB state-store provider bundled with the Spark 4
@@ -748,25 +736,11 @@ object Streaming {
     * `StreamingQueries.withDrainPartitions`); streams already running
     * keep the provider they started with.
     */
-  def withRocksDBState[A](spark: SparkSession)(body: => A): A = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val chgKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevChg = spark.conf.getOption(chgKey)
-    spark.conf.set(provKey, RocksDBProvider)
-    spark.conf.set(chgKey, "true")
-    try body finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-      prevChg match {
-        case Some(v) => spark.conf.set(chgKey, v)
-        case None => spark.conf.unset(chgKey)
-      }
-    }
-  }
+  def withRocksDBState[A](spark: SparkSession)(body: => A): A =
+    graft.GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" -> RocksDBProvider,
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+        "true")(body)
 
   /** Drain a streaming frame to an in-memory table and return the result —
     * AvailableNow semantics, used by tests and local verification.

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, StandardCopyOption}
 
 import graft.streaming.Streaming
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
@@ -52,7 +53,7 @@ class EventTsFixtureSpec extends SparkTestBase {
       Files.copy(part, dir.resolve("events.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    Streaming.rmr(stage.toString)
+    FileUtils.deleteDirectory(stage.toFile)
     dir.toString
   }
 
@@ -87,7 +88,7 @@ class EventTsFixtureSpec extends SparkTestBase {
     test(s"Tables.events normalizes a $label fixture") {
       val dir = writeFixture(s"b$micros", micros)
       assertNormalized(Tables.events(spark, dir))
-      Streaming.rmr(dir)
+      FileUtils.deleteDirectory(new java.io.File(dir))
     }
 
     test(s"fileEventSource normalizes a $label fixture") {
@@ -96,7 +97,7 @@ class EventTsFixtureSpec extends SparkTestBase {
       assert(streamed.schema("ts").dataType == TimestampType)
       assertNormalized(
         Streaming.drainToBatch(streamed, s"evfix_$micros"))
-      Streaming.rmr(dir)
+      FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 }

@@ -6,7 +6,7 @@ import java.util.concurrent.{CountDownLatch, CyclicBarrier, TimeUnit}
 import graft.merge.MergeTable
 import graft.multimodal.Multimodal
 import graft.obs.{Obs, Recorder}
-import graft.streaming.Streaming
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ListenerCounts
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
@@ -50,7 +50,7 @@ class ObsSpec extends SparkTestBase {
       rowsIn(mainT, (1L to 16L).filterNot(corrupt2)))
     assert(layers("quar_merge.stage_write")("output_records") ==
       rowsIn(quarT, corrupt2.toSeq :+ 4L)) // 4: resolved
-    Streaming.rmr(base)
+    FileUtils.deleteDirectory(new java.io.File(base))
   }
 
   test("a drain's progress counts in the scope that started it, after it closed") {
@@ -86,7 +86,7 @@ class ObsSpec extends SparkTestBase {
     assert(layers("drain")("input_rows") == 100L)
     assert(!layers("after").contains("batches"))
     assert(layers("after")("exec_ns") > 0L, "the count's SQL execution was not filed")
-    Streaming.rmr(base)
+    FileUtils.deleteDirectory(new java.io.File(base))
   }
 
   test("with no recorder a scope registers nothing and sets no property") {

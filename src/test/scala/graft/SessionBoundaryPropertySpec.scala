@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, StandardCopyOption}
 
 import graft.streaming.Streaming
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -69,7 +70,7 @@ class SessionBoundaryPropertySpec extends SparkTestBase {
       Files.copy(part, dir.resolve("events.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    Streaming.rmr(stage.toString)
+    FileUtils.deleteDirectory(stage.toFile)
     dir.toString
   }
 
@@ -114,7 +115,7 @@ class SessionBoundaryPropertySpec extends SparkTestBase {
       val batch = batchSessions(dir)
       assert(streamed.nonEmpty, s"seed $seed produced no sessions")
       assert(streamed == batch, s"seed $seed: streamed != batch")
-      Streaming.rmr(dir)
+      FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 }

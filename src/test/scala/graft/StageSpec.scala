@@ -3,15 +3,21 @@ package graft
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 
-import graft.queries.StreamingQueries
+import graft.ingest.Ingest
+import graft.multimodal.Multimodal
+import graft.queries.{ClusterOps, KafkaLogQueries, LayoutOps, StreamingQueries}
+import graft.sources.KafkaLog
 import graft.streaming.{Stage, Streaming}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-/** Pins the drain family's one staging rule ([[Stage]]) over every stage
-  * kind: the sentinel-closed events source, q86's duplicated events, q87's
-  * seed season and q92's planted-corruption corpus. For each kind:
+/** Pins the one staging rule for derived fixtures ([[Stage]]) over every
+  * stage kind: the sentinel-closed events source, q86's duplicated events,
+  * q87's seed season, q92's planted-corruption corpus, the media blob
+  * corpus, q72's z-ordered lineitem, q78's kafka-log topic and q71's folded
+  * cluster state. For each kind:
   *
   *  1. an unchanged fixture reuses its stage and runs no build (the stage
   *     dir and every file in it keep their identity and mtime);
@@ -20,7 +26,8 @@ import scala.jdk.CollectionConverters._
   *  4. a build that dies part-way, or that loses the rename race to
   *     another build, leaves nothing a later call would accept.
   *
-  * And a deleted fixture's stages are removed by the next build.
+  * And a deleted fixture's stages are removed by the next build, and a
+  * stage another graft build wrote is never served.
   *
   * Plus the fingerprint's precision: a same-size rewrite whose mtime
   * differs only below the millisecond must restage q87's seed.
@@ -41,7 +48,7 @@ class StageSpec extends SparkTestBase {
         .findFirst().get()
       Files.copy(part, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
     }
-    Streaming.rmr(stage.toString)
+    FileUtils.deleteDirectory(stage.toFile)
   }
 
   private def writeEvents(dir: Path, rows: Seq[(Long, Double)]): Unit =
@@ -58,6 +65,17 @@ class StageSpec extends SparkTestBase {
       .withColumn("n_chars", length(col("text"))),
       dir, "documents.parquet")
 
+  private def writeLineitem(dir: Path, ids: Seq[Long]): Unit =
+    writeSingleFile(ids.map(id => (id, id % 50, baseUs + id * 86400000000L))
+      .toDF("l_orderkey", "l_partkey", "us")
+      .withColumn("l_shipdate", timestamp_micros(col("us")).cast("timestamp_ntz"))
+      .drop("us"), dir, "lineitem.parquet")
+
+  private def writeOrders(dir: Path, ids: Seq[Long]): Unit =
+    writeSingleFile(ids.map(id => (id, id * 10, "O", id.toDouble))
+      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"),
+      dir, "orders.parquet")
+
   private def column(path: String, name: String): Seq[Long] =
     spark.read.parquet(path).select(name).as[Long].collect().toSeq.sorted
 
@@ -70,6 +88,14 @@ class StageSpec extends SparkTestBase {
 
   private val events = (dir: Path, ids: Seq[Long]) =>
     writeEvents(dir, ids.map(id => id -> id.toDouble))
+
+  /** A kind whose production call stages as a side effect: run it, then
+    * name the stage it used. */
+  private def via(fixture: String, variant: String)(run: String => Any)
+      : String => String = { d =>
+    run(d)
+    Stage.path(spark, s"$d/$fixture", variant).toString
+  }
 
   private val kinds = Seq(
     Kind("events+sentinel", "events.parquet", "events-s3", events,
@@ -86,6 +112,22 @@ class StageSpec extends SparkTestBase {
         ids.filter(_ % 97 == 0).map(_ + 100000000L)).sorted),
     Kind("q92 corpus", "documents.parquet", "corrupt4", writeDocuments,
       StreamingQueries.blobCorpus(spark, _, 4), column(_, "media_id"),
+      _.sorted),
+    Kind("blob corpus", "documents.parquet", "blobs", writeDocuments,
+      via("documents.parquet", "blobs")(Multimodal.documentBlobs(spark, _)),
+      column(_, "media_id"), _.sorted),
+    Kind("q72 z-order", "lineitem.parquet", "zorder", writeLineitem,
+      LayoutOps.zorderedLineitem(spark, _), column(_, "l_orderkey"), _.sorted),
+    Kind("q78 kafka-log", "orders.parquet", "kafkalog", writeOrders,
+      KafkaLogQueries.ordersLog(spark, _),
+      Ingest.kafkaBatchSource(spark, _, "orders", format = KafkaLog.Format)
+        .select(col("key").cast("string").cast("long")).as[Long]
+        .collect().toSeq.sorted,
+      _.sorted),
+    Kind("q71 fold", "documents.parquet", "q71-fold", writeDocuments,
+      via("documents.parquet", "q71-fold")(ClusterOps.incrementalClusters(spark, _)),
+      p => Streaming.clusterMembership(spark, p).select("doc_id").as[Long]
+        .collect().toSeq.sorted,
       _.sorted))
 
   private val idsA = Seq(1L, 4L, 7L, 97L)
@@ -117,7 +159,7 @@ class StageSpec extends SparkTestBase {
       assert(k.staged(b) == k.expected(idsB), "stale stage served")
       assert(Stage.dirsFor(fixture, k.variant) == Seq(Paths.get(b)),
         "a superseded or private dir was left behind")
-      Streaming.rmr(dir.toString)
+      FileUtils.deleteDirectory(dir.toFile)
     }
 
     test(s"${k.name}: dying or losing build leaves nothing accepted") {
@@ -150,7 +192,7 @@ class StageSpec extends SparkTestBase {
       assert(k.staged(got) == k.expected(idsB))
       assert(Stage.dirsFor(fixture, k.variant) == Seq(target),
         "the losing build or the superseded stage was left behind")
-      Streaming.rmr(dir.toString)
+      FileUtils.deleteDirectory(dir.toFile)
     }
   }
 
@@ -161,13 +203,46 @@ class StageSpec extends SparkTestBase {
     Streaming.stagedEvents(spark, gone.toString, 3)
     StreamingQueries.q87Seed(spark, gone.toString)
     assert(Stage.dirsFor(fixture, "events-s3").nonEmpty)
-    Streaming.rmr(gone.toString)
+    FileUtils.deleteDirectory(gone.toFile)
     val other = Files.createTempDirectory("graft-stagespec-other")
     events(other, idsB)
     Streaming.stagedEvents(spark, other.toString, 3)
     assert(Stage.dirsFor(fixture, "events-s3").isEmpty &&
       Stage.dirsFor(fixture, "q87-seed").isEmpty, "a deleted fixture's stage was kept")
-    Streaming.rmr(other.toString)
+    FileUtils.deleteDirectory(other.toFile)
+  }
+
+  test("a deleted documents fixture's blob corpus is removed by the next build") {
+    val gone = Files.createTempDirectory("graft-stagespec-gone")
+    writeDocuments(gone, idsA)
+    val corpus = Paths.get(new java.net.URI(
+      Multimodal.documentBlobs(spark, gone.toString).inputFiles.head)).getParent
+    FileUtils.deleteDirectory(gone.toFile)
+    val other = Files.createTempDirectory("graft-stagespec-other")
+    events(other, idsB)
+    Streaming.stagedEvents(spark, other.toString, 3)
+    assert(!Files.exists(corpus), s"$corpus outlived its fixture")
+    FileUtils.deleteDirectory(other.toFile)
+  }
+
+  test("a stage another graft build wrote is rebuilt, and swept") {
+    val dir = Files.createTempDirectory("graft-stagespec-build")
+    val fixture = dir.resolve("events.parquet").toString
+    events(dir, idsA)
+    // the name a stage had before the build's identity joined it: variant,
+    // fixture and fingerprint only
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    val planted = Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft-stage-events-s3-${md5(fixture)}-" +
+        md5(ops.SessionLru.pathFingerprint(spark, fixture)))
+    writeEvents(Files.createDirectories(planted), Seq(666L -> 0.0))
+    Files.writeString(planted.resolve(".fixture"), fixture)
+    val got = Streaming.stagedEvents(spark, dir.toString, 3)
+    assert(column(got, "event_id") == (idsA :+ -1L).sorted,
+      "a stage another build wrote was served")
+    assert(!Files.exists(planted), "a stage another build wrote was left behind")
+    FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("q87 seed restages after a same-size sub-ms rewrite") {
@@ -193,6 +268,6 @@ class StageSpec extends SparkTestBase {
       s"filesystem dropped the sub-millisecond mtime: $mtime")
     assert(upsert() == Map(2L -> 2.0, 3L -> 3.0, 194L -> 19.4,
       100000194L -> -1.0), "q87 drained against the stale seed")
-    Streaming.rmr(dir.toString)
+    FileUtils.deleteDirectory(dir.toFile)
   }
 }
