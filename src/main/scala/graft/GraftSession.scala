@@ -19,9 +19,12 @@ import scala.jdk.CollectionConverters._
   *    The testdata tables are single parquet files well under the 128m
   *    default split size, which would serialize each scan on one core;
   *    a cluster keeps its own split size.
-  *  - Either way the SparkContext's Hadoop conf serves `file:` through
-  *    the fork-free local filesystem ([[graft.fs.ForkFree.install]]),
-  *    which sets two `fs.*` keys there and nothing else.
+  *  - Either way `file:` is served by the fork-free local filesystem
+  *    ([[graft.fs.ForkFree.install]]): two `fs.*` keys in the
+  *    SparkContext's Hadoop conf, and a stock `file:` FileSystem that the
+  *    JVM cached earlier (Spark's event-log writer caches one while the
+  *    SparkContext starts) is dropped from Hadoop's cache. No other conf
+  *    is touched.
   */
 object GraftSession {
   def apply(appName: String): SparkSession = {

@@ -6,7 +6,7 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, FileStatus, FileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
@@ -38,22 +38,44 @@ import org.apache.hadoop.io.nativeio.NativeIO
   * [[ForkFree.install]] names both classes in a Hadoop `Configuration`.
   * FileContext builds a new AbstractFileSystem on every call, so every
   * checkpoint and sink-log write after the install uses it. FileSystems
-  * are cached per JVM by scheme and user: if a `file:` FileSystem was
-  * created before the install (for example by a parquet writer on a
-  * fresh `Configuration`), the FileSystem-API paths keep that cached
-  * class for the life of the JVM, and only the FileContext paths switch.
+  * are cached per JVM by scheme and user, and the conf is not part of the
+  * key: a `file:` FileSystem created before the install (by a parquet
+  * writer on a fresh `Configuration`, or by Spark's event-log writer while
+  * the SparkContext starts) would keep serving the FileSystem API. So the
+  * install also drops a stock `file:` instance from that cache, and the
+  * next `FileSystem.get` builds the fork-free one.
   */
 object ForkFree {
   private val FileImpl = "fs.file.impl"
   private val AbstractFileImpl = "fs.AbstractFileSystem.file.impl"
+  private val Root = URI.create("file:///")
   // Hadoop's own choices; anything else in the conf is a caller's choice
   // and is kept
   private val stock = Set("", classOf[LocalFileSystem].getName,
     "org.apache.hadoop.fs.local.LocalFs")
+  /** The `file:` classes a JVM caches when no conf chose one: Hadoop's
+    * `LocalFileSystem`, and the scheme's service-loaded default (with no
+    * conf, `getFileSystemClass` skips `fs.file.impl`), which in Spark's
+    * distribution is Hive's `ProxyLocalFileSystem`. */
+  private lazy val stockFs: Set[Class[_]] =
+    Set(classOf[LocalFileSystem], FileSystem.getFileSystemClass("file", null))
 
   /** Points `conf`'s `file:` scheme at the fork-free classes, unless the
     * conf already names a non-Hadoop class there. Idempotent: a conf that
-    * already names them is not written to. */
+    * already names them is not written to.
+    *
+    * When `conf` then names [[ForkFreeLocalFileSystem]], a stock `file:`
+    * FileSystem cached for the current user is closed, which is Hadoop's
+    * way to drop it from the cache, and the fork-free one is cached in
+    * its place. A cached instance of any other class (a caller's own) is
+    * kept, and a conf naming a caller's class never looks up the cache.
+    * Closing a local FileSystem also deletes the paths registered with
+    * its `deleteOnExit` at once instead of at JVM exit: graft registers
+    * none, and in Spark's jars only Hive code does (`spark-hive`'s
+    * `HiveTempPath`, Hive's own session and operators), which graft does
+    * not run. Code that still holds the closed instance keeps working
+    * through it.
+    */
   def install(conf: Configuration): Unit = {
     def swap(key: String, cls: Class[_]): Unit = {
       val cur = Option(conf.get(key)).getOrElse("").trim
@@ -61,6 +83,13 @@ object ForkFree {
     }
     swap(FileImpl, classOf[ForkFreeLocalFileSystem])
     swap(AbstractFileImpl, classOf[ForkFreeLocalFs])
+    if (conf.get(FileImpl).trim == classOf[ForkFreeLocalFileSystem].getName) {
+      val cached = FileSystem.get(Root, conf)
+      if (stockFs(cached.getClass)) {
+        cached.close()
+        FileSystem.get(Root, conf)
+      }
+    }
   }
 
   /** The POSIX set for the low nine mode bits, e.g. 0644 → rw-r--r--. */

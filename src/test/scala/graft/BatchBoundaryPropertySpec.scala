@@ -36,7 +36,7 @@ class BatchBoundaryPropertySpec extends SparkTestBase {
     g.apply(Gen.Parameters.default, Seed(seed)).get
 
   private def writeParquet(df: DataFrame, dir: Path, name: String): Unit = {
-    val stage = Files.createTempDirectory(s"graft-bbprop-$name")
+    val stage = tempDir(s"graft-bbprop-$name")
     df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     scala.util.Using.resource(Files.list(stage)) { listing =>
       val part = listing.filter(_.getFileName.toString.endsWith(".parquet"))
@@ -80,7 +80,7 @@ class BatchBoundaryPropertySpec extends SparkTestBase {
           err +: ctx
         }
       }
-      val dir = Files.createTempDirectory(s"graft-bbprop-iv-$seed")
+      val dir = tempDir(s"graft-bbprop-iv-$seed")
       writeParquet(
         rows.toDF("event_id", "us", "user_id", "event_type", "value")
           .withColumn("ts", timestamp_micros(col("us")))
@@ -138,7 +138,7 @@ class BatchBoundaryPropertySpec extends SparkTestBase {
         // an event BEFORE the user's first order: must be dropped
         eid += 1; events += ((eid, u.toLong, 19999L * dayUs))
       }
-      val dir = Files.createTempDirectory(s"graft-bbprop-asof-$seed")
+      val dir = tempDir(s"graft-bbprop-asof-$seed")
       writeParquet(
         events.toSeq.toDF("event_id", "user_id", "us")
           .withColumn("ts", timestamp_micros(col("us")))

@@ -32,7 +32,7 @@ class EventTsFixtureSpec extends SparkTestBase {
 
   /** Write a single-file events.parquet under its own sf-style dir. */
   private def writeFixture(name: String, micros: Boolean): String = {
-    val dir = Files.createTempDirectory(s"graft-evfix-$name")
+    val dir = tempDir(s"graft-evfix-$name")
     val df =
       if (micros)
         rows.toDF("event_id", "us", "user_id", "event_type", "value")
@@ -45,7 +45,7 @@ class EventTsFixtureSpec extends SparkTestBase {
         rows.toDF("event_id", "us", "user_id", "event_type", "value")
           .withColumn("ts", col("us") * 1000L)
           .select("event_id", "ts", "user_id", "event_type", "value")
-    val stage = Files.createTempDirectory(s"graft-evfix-stage-$name")
+    val stage = tempDir(s"graft-evfix-stage-$name")
     df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
     scala.util.Using.resource(Files.list(stage)) { listing =>
       val part = listing.filter(_.getFileName.toString.endsWith(".parquet"))

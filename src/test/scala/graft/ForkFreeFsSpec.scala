@@ -17,7 +17,9 @@ import org.apache.hadoop.fs.permission.FsPermission
 /** `graft.fs.ForkFree` keeps the stock local filesystem's contract: the
   * same permission bits and `.crc` companions through both APIs, the same
   * link-status answers, FileContext's overwriting rename, and checkpoints
-  * that move between the two filesystems in either direction. */
+  * that move between the two filesystems in either direction. Its install
+  * replaces a stock `file:` FileSystem the JVM cached first and keeps a
+  * caller's own class, cached or named. */
 class ForkFreeFsSpec extends SparkTestBase {
   private val root = URI.create("file:///")
 
@@ -67,7 +69,7 @@ class ForkFreeFsSpec extends SparkTestBase {
   test("files and dirs get the stock permission bits under the same umask, with .crc companions") {
     for (umask <- Seq("022", "077", "002")) {
       val tree = Seq(false, true).map { forkFree =>
-        val d = Files.createTempDirectory("graft-fsperm")
+        val d = tempDir("graft-fsperm")
         val c = conf(umask, forkFree)
         val fs = fileSystem(c, forkFree)
         val base = new Path(d.toUri)
@@ -98,7 +100,7 @@ class ForkFreeFsSpec extends SparkTestBase {
     val c = conf("022", forkFree = false)
     val stock = fileSystem(c, forkFree = false)
     val ours = fileSystem(c, forkFree = true)
-    val d = Files.createTempDirectory("graft-fslink")
+    val d = tempDir("graft-fslink")
     val file = Files.write(d.resolve("f"), "abc".getBytes(UTF_8))
     val sub = Files.createDirectory(d.resolve("sub"))
     def shape(s: org.apache.hadoop.fs.FileStatus) =
@@ -128,7 +130,7 @@ class ForkFreeFsSpec extends SparkTestBase {
 
   test("FileContext rename with OVERWRITE replaces the target and moves its .crc") {
     val fc = FileContext.getFileContext(root, conf("022", forkFree = true))
-    val d = new Path(Files.createTempDirectory("graft-fsrename").toUri)
+    val d = new Path(tempDir("graft-fsrename").toUri)
     def put(name: String, s: String): Path = {
       val p = new Path(d, name)
       write(fc.create(p, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE)), s)
@@ -144,7 +146,7 @@ class ForkFreeFsSpec extends SparkTestBase {
   }
 
   test("a checkpoint written by the stock filesystem resumes under the fork-free one") {
-    val dir = Files.createTempDirectory("graft-fsckpt").toString
+    val dir = tempDir("graft-fsckpt").toString
     val topic = s"$dir/log"
     KafkaLog.createTopic(topic, "shots", 2)
     def produce(from: Int, n: Int): Unit = (0 until 2).foreach { p =>
@@ -177,4 +179,72 @@ class ForkFreeFsSpec extends SparkTestBase {
     val commits = new java.io.File(s"$dir/ckpt/commits").list().filter(_.forall(_.isDigit))
     assert(commits.map(_.toInt).sorted.toSeq == (0 until 3), "two stock batches, then one")
   }
+
+  /** The shared session's Hadoop conf, which names the fork-free classes. */
+  private def sessionConf: Configuration = spark.sparkContext.hadoopConfiguration
+
+  /** Plants a stock `file:` FileSystem in the JVM's cache, as a writer on a
+    * fresh `Configuration` does before any session installs graft.fs. */
+  private def plantStock(): FileSystem = {
+    FileSystem.get(root, sessionConf).close()
+    val stock = FileSystem.get(root, new Configuration())
+    assert(!stock.isInstanceOf[ForkFreeLocalFileSystem])
+    assert(FileSystem.get(root, sessionConf) eq stock, "the cache ignores the conf")
+    stock
+  }
+
+  /** Leaves the fork-free instance cached, as the shared session does. */
+  private def restoreCache(): Unit = {
+    val cached = FileSystem.get(root, sessionConf)
+    if (!cached.isInstanceOf[ForkFreeLocalFileSystem]) cached.close()
+    assert(FileSystem.get(root, sessionConf).isInstanceOf[ForkFreeLocalFileSystem])
+  }
+
+  test("install replaces a stock file: FileSystem the JVM cached before it, once") {
+    try {
+      val stock = plantStock()
+      ForkFree.install(sessionConf)
+      val served = FileSystem.get(root, sessionConf)
+      assert(served.getClass == classOf[ForkFreeLocalFileSystem])
+      // the cache serves it whatever conf asks, and a second install keeps it
+      assert(FileSystem.get(root, new Configuration()) eq served)
+      ForkFree.install(sessionConf)
+      assert(FileSystem.get(root, sessionConf) eq served)
+      val d = new Path(tempDir("graft-fsevict").toUri)
+      val forks = ProcessStarts.during {
+        write(FileSystem.get(root, new Configuration()).create(new Path(d, "a/f")), "x")
+      }
+      assert(!forks.exists(c => Set("chmod", "readlink")(ProcessStarts.program(c))),
+        forks.take(3).mkString("; "))
+      // code still holding the dropped instance keeps working
+      assert(stock.exists(new Path(d, "a/f")))
+    } finally restoreCache()
+  }
+
+  test("install with a caller's file: class leaves the cached FileSystem alone") {
+    try {
+      val stock = plantStock()
+      val own = new Configuration()
+      own.set("fs.file.impl", "com.example.OwnFileSystem")
+      ForkFree.install(own)
+      assert(FileSystem.get(root, sessionConf) eq stock)
+    } finally restoreCache()
+  }
+
+  test("install keeps a cached file: FileSystem of a caller's own class") {
+    try {
+      FileSystem.get(root, sessionConf).close()
+      val c = new Configuration()
+      c.set("fs.file.impl", classOf[ForkFreeFsSpec.OwnLocalFileSystem].getName)
+      val own = FileSystem.get(root, c)
+      assert(own.getClass == classOf[ForkFreeFsSpec.OwnLocalFileSystem])
+      ForkFree.install(sessionConf)
+      assert(FileSystem.get(root, sessionConf) eq own)
+    } finally restoreCache()
+  }
+}
+
+object ForkFreeFsSpec {
+  /** A caller's own `file:` class: a subclass of Hadoop's stock one. */
+  class OwnLocalFileSystem extends LocalFileSystem
 }

@@ -94,7 +94,7 @@ class IntervalJoinBoundaryPropertySpec extends SparkTestBase {
     * with qualifying tail rows of each earlier chunk moved one file later
     * — late arrivals inside the watermark. Returns the stream dir. */
   private def writeFixture(events: Seq[Ev], seed: Long): Path = {
-    val dir = Files.createTempDirectory(s"graft-ivprop-$seed")
+    val dir = tempDir(s"graft-ivprop-$seed")
     val sorted = events.sortBy(e => (e.us, e.id))
     val chunkSize = math.max(1, (sorted.size + 2) / 3)
     val chunks = sorted.grouped(chunkSize).toList.padTo(3, Seq.empty[Ev])
@@ -114,7 +114,7 @@ class IntervalJoinBoundaryPropertySpec extends SparkTestBase {
     }
     chunks.zipWithIndex.foreach { case (chunk, k) =>
       if (chunk.nonEmpty) {
-        val stage = Files.createTempDirectory(s"graft-ivprop-stage-$seed-$k")
+        val stage = tempDir(s"graft-ivprop-stage-$seed-$k")
         chunk.toSeq.map(e => (e.id, e.us, e.user, e.typ, e.value))
           .toDF("event_id", "us", "user_id", "event_type", "value")
           .withColumn("ts", timestamp_micros(col("us")))

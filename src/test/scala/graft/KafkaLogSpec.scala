@@ -40,7 +40,7 @@ class KafkaLogSpec extends SparkTestBase {
   }
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("batch read via Ingest.kafkaBatchSource: envelope schema, offsets, parity with in-memory twin") {
     val root = tmp("klog")

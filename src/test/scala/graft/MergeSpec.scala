@@ -49,7 +49,7 @@ class MergeSpec extends SparkTestBase {
   }
 
   test("tgz publish → readSeasonTgz round-trip") {
-    val dir = Files.createTempDirectory("graft-tgz").toString
+    val dir = tempDir("graft-tgz").toString
     val df = Merge.mergeDeterministic(season, delta)
     Merge.publishTgz(df, s"$dir/tmp", s"$dir/shots-2025.tgz", "shots-2025.csv")
     val back = Merge.readSeasonTgz(spark, s"$dir/shots-2025.tgz")
@@ -79,7 +79,7 @@ class MergeSpec extends SparkTestBase {
 
   test("readSeasonTgz contract: malformed UTF-8 reads back U+FFFD, AppleDouble " +
       "members are skipped, CRLF parses as LF") {
-    val dir = Files.createTempDirectory("graft-tgz-read").toString
+    val dir = tempDir("graft-tgz-read").toString
     val csv = "game_id,time_remaining,quarter,player\ng1,11:30.0,1,Jok\nG2,5:00.0,2,Ab\n"
     val utf8 = csv.getBytes("UTF-8")
     // "Ab" becomes "A<0xFF>b": a byte that is never valid UTF-8
@@ -105,7 +105,7 @@ class MergeSpec extends SparkTestBase {
 
   test("readSeasonTgz keeps file order across blocks and ranges: CRLF " +
       "endings, a line longer than a block") {
-    val dir = Files.createTempDirectory("graft-tgz-blocks").toString
+    val dir = tempDir("graft-tgz-blocks").toString
     val long = "x" * (600 << 10)
     val want = (1 to 20000).map(i => Seq(s"g$i", f"$i%05d", s"${i % 4}",
       if (i == 7000) long else s"p$i"))
@@ -119,7 +119,7 @@ class MergeSpec extends SparkTestBase {
 
   test("readSeasonTgz contract: a tgz with no .csv member fails with " +
       "FileNotFoundException") {
-    val dir = Files.createTempDirectory("graft-tgz-nocsv").toString
+    val dir = tempDir("graft-tgz-nocsv").toString
     writeTgz(s"$dir/none.tgz", "README.txt" -> "no season here\n".getBytes("UTF-8"),
       "._shots.csv" -> Array[Byte](0, 5, 22, 7))
     val err = intercept[Exception] {
@@ -134,7 +134,7 @@ class MergeSpec extends SparkTestBase {
 
   test("publishTgz is byte-identical to publishing the coalesce(1) frame, " +
       "for 1, 4 and 0 partitions and a header-only result") {
-    val dir = Files.createTempDirectory("graft-tgz-bytes").toString
+    val dir = tempDir("graft-tgz-bytes").toString
     var n = 0
     def publish(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
       n += 1
@@ -172,7 +172,7 @@ class MergeSpec extends SparkTestBase {
   test("an empty day-0 publish is one header-only member, gzip and tar " +
       "headers fixed") {
     import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
-    val dir = Files.createTempDirectory("graft-tgz-day0").toString
+    val dir = tempDir("graft-tgz-day0").toString
     // day 0 with an empty delta: mergePublish's bootstrap frame
     val delta0 = season.filter(lit(false))
     Merge.publishTgz(delta0.dropDuplicates(Merge.dedupKeys)
@@ -193,7 +193,7 @@ class MergeSpec extends SparkTestBase {
 
   test("readSeasonTgz opens the literal path: `_` and `.` names and a `[x]` " +
       "directory read back the season's rows") {
-    val dir = Files.createTempDirectory("graft-tgz-names").toString
+    val dir = tempDir("graft-tgz-names").toString
     Merge.publishTgz(Merge.mergeDeterministic(season, delta)
       .orderBy(Merge.dedupKeys.map(col): _*), s"$dir/tmp", s"$dir/season.tgz", "season.csv")
     val want = rows(Merge.readSeasonTgz(spark, s"$dir/season.tgz"))
@@ -209,7 +209,7 @@ class MergeSpec extends SparkTestBase {
   test("day 0 picks the winner rule's variant of a duplicated key, whatever " +
       "the delta's file order") {
     import graft.tools.PipelineMain
-    val dir = Files.createTempDirectory("graft-day0-winner").toString
+    val dir = tempDir("graft-day0-winner").toString
     val header = "game_id,time_remaining,quarter,payload\n"
     val variants = Seq("g1,11:30.0,1,b\ng2,5:00.0,2,x\n", "g1,11:30.0,1,a\ng3,2:00.0,4,y\n")
     def publish(order: Seq[String], name: String): Array[Byte] = {
@@ -259,7 +259,7 @@ class MergeSpec extends SparkTestBase {
   test("mergePublish decodes the season member once: one completed stage " +
       "runs the decode RDD") {
     import graft.tools.PipelineMain
-    val dir = Files.createTempDirectory("graft-decode-once").toString
+    val dir = tempDir("graft-decode-once").toString
     val wide = (1 to 2000).map(i => (s"g${i % 7}", f"$i%05d", s"${i % 4}", s"p$i"))
       .toDF("game_id", "time_remaining", "quarter", "payload")
     Merge.publishTgz(wide.coalesce(1), s"$dir/t0", s"$dir/season.tgz", "season.csv")
@@ -305,7 +305,7 @@ class MergeSpec extends SparkTestBase {
 
   test("chunked publish: the members gunzip to the single-stream tar, cut " +
       "at fixed offsets") {
-    val dir = Files.createTempDirectory("graft-tgz-chunks").toString
+    val dir = tempDir("graft-tgz-chunks").toString
     val wide = wideRows.toDF("game_id", "time_remaining", "quarter", "payload")
     Merge.publishTgz(wide.coalesce(1), s"$dir/tmp", s"$dir/out.tgz", "shots-2025.csv", chunk)
     val got = Files.readAllBytes(java.nio.file.Paths.get(s"$dir/out.tgz"))
@@ -318,7 +318,7 @@ class MergeSpec extends SparkTestBase {
 
   test("chunked publish: the same rows publish the same bytes at 3, 5 and 1 " +
       "partitions") {
-    val dir = Files.createTempDirectory("graft-tgz-chunk-parts").toString
+    val dir = tempDir("graft-tgz-chunk-parts").toString
     val wide = wideRows.toDF("game_id", "time_remaining", "quarter", "payload")
     def publish(name: String, df: org.apache.spark.sql.DataFrame): Array[Byte] = {
       Merge.publishTgz(df, s"$dir/tmp-$name", s"$dir/$name.tgz", "shots-2025.csv", chunk)
@@ -334,7 +334,7 @@ class MergeSpec extends SparkTestBase {
   test("chunked publish reads back through readSeasonTgz, tar -xzf and " +
       "Python's tarfile") {
     import scala.sys.process._
-    val dir = Files.createTempDirectory("graft-tgz-chunk-read").toString
+    val dir = tempDir("graft-tgz-chunk-read").toString
     val wide = wideRows.toDF("game_id", "time_remaining", "quarter", "payload")
     Merge.publishTgz(wide.repartitionByRange(3, col("time_remaining"))
       .sortWithinPartitions("time_remaining"), s"$dir/tmp", s"$dir/out.tgz",
@@ -356,7 +356,7 @@ class MergeSpec extends SparkTestBase {
 
   test("MergeTable: pruned merge equals full merge, untouched dirs untouched") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mt").toString + "/t"
+    val path = tempDir("graft-mt").toString + "/t"
     val base = (1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 16)
     def listing: Map[String, Set[(String, Long)]] =
@@ -394,7 +394,7 @@ class MergeSpec extends SparkTestBase {
 
   test("MergeTable reads a bucket stranded in .old without mutating; merge repairs it") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtc").toString + "/t"
+    val path = tempDir("graft-mtc").toString + "/t"
     val base = (1L to 200L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 4)
     // simulate dying between the two per-dir renames: one bucket exists
@@ -420,7 +420,7 @@ class MergeSpec extends SparkTestBase {
 
   test("MergeTable: reader at every bucket-swap boundary sees old-or-new, never mixed") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtr").toString + "/t"
+    val path = tempDir("graft-mtr").toString + "/t"
     val base = (1L to 400L).map(i => (i, s"old$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 8)
     // every key updated, so every bucket is affected and the merge walks
@@ -447,7 +447,7 @@ class MergeSpec extends SparkTestBase {
 
   test("MergeTable: merge killed between bucket swaps recovers and converges on retry") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtk").toString + "/t"
+    val path = tempDir("graft-mtk").toString + "/t"
     val base = (1L to 400L).map(i => (i, s"old$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 8)
     val delta = (1L to 400L).map(i => (i, s"new$i")).toDF("k", "v")
@@ -494,7 +494,7 @@ class MergeSpec extends SparkTestBase {
     val rng = new scala.util.Random(2026)
     (1 to 2).foreach { round =>
       val nb = 2 + rng.nextInt(7)
-      val path = Files.createTempDirectory("graft-mtfz").toString + "/t"
+      val path = tempDir("graft-mtfz").toString + "/t"
       var ref = (1L to 100L).map(i => i -> s"v0_$i").toMap
       MergeTable.write(ref.toSeq.toDF("k", "v"), path, Seq("k"), nb)
       (1 to 5).foreach { step =>
@@ -549,7 +549,7 @@ class MergeSpec extends SparkTestBase {
 
   test("MergeTable: _meta pins bucketing — mismatched nBuckets/keys fail loudly") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtm").toString + "/t"
+    val path = tempDir("graft-mtm").toString + "/t"
     val base = (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 8)
     assert(new java.io.File(path, "_meta").exists(), "_meta written at creation")
@@ -576,7 +576,7 @@ class MergeSpec extends SparkTestBase {
     // a column literally named "a,b" must round-trip as ONE key — an
     // unescaped comma-join would re-read it as two keys and fail every
     // later identical-parameter merge
-    val path = Files.createTempDirectory("graft-mtc").toString + "/t"
+    val path = tempDir("graft-mtc").toString + "/t"
     val base = (1L to 20L).map(i => (i, s"v$i")).toDF("a,b", "v")
     MergeTable.write(base, path, Seq("a,b"), nBuckets = 4)
     MergeTable.merge(Seq((1L, "NEW")).toDF("a,b", "v"), path,
@@ -595,7 +595,7 @@ class MergeSpec extends SparkTestBase {
 
   test("MergeTable.readRetrying survives a swap completing under a deferred scan") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtrr").toString + "/t"
+    val path = tempDir("graft-mtrr").toString + "/t"
     val base = (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 4)
     // strand one bucket in .old so the reader's listing chooses the backup
@@ -624,7 +624,7 @@ class MergeSpec extends SparkTestBase {
     // visible to reads (dot-prefix / name filters) and both must be
     // cleaned by the next writer call.
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mttrash").toString + "/t"
+    val path = tempDir("graft-mttrash").toString + "/t"
     val rows = (1L to 80L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(rows, path, Seq("k"), nBuckets = 4)
     // simulate the two crash leftovers
@@ -651,7 +651,7 @@ class MergeSpec extends SparkTestBase {
 
   test("MergeTable read prefers live over a stale .old; merge drops the backup") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mts").toString + "/t"
+    val path = tempDir("graft-mts").toString + "/t"
     val base = (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 4)
     // crash window: after next->live but before the backup delete — both
@@ -673,7 +673,7 @@ class MergeSpec extends SparkTestBase {
   test("MergeTable.readBuckets prunes to the requested bucket dirs and " +
       "returns a typed empty frame when none exist") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtrb").toString + "/t"
+    val path = tempDir("graft-mtrb").toString + "/t"
     val base = (1L to 200L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 8)
     val want = MergeTable.bucketIds(
@@ -751,8 +751,8 @@ class MergeSpec extends SparkTestBase {
     // derivation (bucketColumn over the same delta) is exactly what the
     // self-computed path does.
     import graft.merge.MergeTable
-    val pathA = Files.createTempDirectory("graft-mtka").toString + "/t"
-    val pathB = Files.createTempDirectory("graft-mtkb").toString + "/t"
+    val pathA = tempDir("graft-mtka").toString + "/t"
+    val pathB = tempDir("graft-mtkb").toString + "/t"
     val seed = (1L to 120L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(seed, pathA, Seq("k"), 8)
     MergeTable.write(seed, pathB, Seq("k"), 8)
@@ -776,7 +776,7 @@ class MergeSpec extends SparkTestBase {
   test("MergeTable.deleteWhere retires matching rows bucket-pruned, " +
       "keeps NULL-predicate rows, and drops an all-deleted table") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtdw").toString + "/t"
+    val path = tempDir("graft-mtdw").toString + "/t"
     // tag: "old" (delete), "new" (keep), null (predicate NULL → keep)
     val rows = (1L to 300L).map { i =>
       (i, if (i % 3 == 0) null else if (i % 3 == 1) "old" else "new")
@@ -814,7 +814,7 @@ class MergeSpec extends SparkTestBase {
     // buckets, and a delete that rewrote every bucket would be O(table)
     // maintenance while returning the same row counts.
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtdwp").toString + "/t"
+    val path = tempDir("graft-mtdwp").toString + "/t"
     // keys 1..1000; delete targets three specific keys → ≤ 3 buckets
     val base = (1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(base, path, Seq("k"), nBuckets = 16)
@@ -855,7 +855,7 @@ class MergeSpec extends SparkTestBase {
       ("null-guard", col("tag").isNull || col("k") % 5 === 0),
       ("all", lit(true)))
     preds.foreach { case (label, p) =>
-      val path = Files.createTempDirectory(s"graft-mtdwr").toString + "/t"
+      val path = tempDir(s"graft-mtdwr").toString + "/t"
       val n = 50 + rng.nextInt(200)
       val rows = (1L to n.toLong).map { i =>
         (i, rng.nextInt(4) match {
@@ -900,7 +900,7 @@ class MergeSpec extends SparkTestBase {
     //    version, so intra-thread monotonicity is the contract;
     //    cross-bucket mixes of versions are documented and allowed).
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtsoak").toString + "/t"
+    val path = tempDir("graft-mtsoak").toString + "/t"
     val nKeys = 240L
     val rng = new scala.util.Random(1717)
     val seed = (1L to nKeys).map(i => (i, 0L)).toDF("k", "seq")
@@ -989,7 +989,7 @@ class MergeSpec extends SparkTestBase {
     //    holds the immediately-previous state, so per-thread
     //    present -> absent is one-way).
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtdwsoak").toString + "/t"
+    val path = tempDir("graft-mtdwsoak").toString + "/t"
     val keepRows = (1L to 150L).map(i => (i, "keep"))
     MergeTable.write(keepRows.toDF("k", "tag"), path, Seq("k"), nBuckets = 8)
     // fixture sanity: keep rows must pin all 8 buckets
@@ -1063,7 +1063,7 @@ class MergeSpec extends SparkTestBase {
     // guard must fire BEFORE the first rename, so the table still holds
     // exactly its pre-merge contents afterwards.
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtkg").toString + "/t"
+    val path = tempDir("graft-mtkg").toString + "/t"
     val seed = (1L to 120L).map(i => (i, s"v$i")).toDF("k", "v")
     MergeTable.write(seed, path, Seq("k"), nBuckets = 8)
     val before = MergeTable.read(spark, path).orderBy("k").collect().toSeq
@@ -1094,7 +1094,7 @@ class MergeSpec extends SparkTestBase {
   test("MergeTable.deleteWhere recovers a bucket stranded in .old by a " +
       "crashed writer, and its pruned read takes the .old fallback") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-mtdwc").toString + "/t"
+    val path = tempDir("graft-mtdwc").toString + "/t"
     val rows = (1L to 120L).map(i => (i, if (i % 2 == 0) "del" else "keep"))
     MergeTable.write(rows.toDF("k", "tag"), path, Seq("k"), nBuckets = 4)
     // simulate the crash window a writer can leave: one bucket's swap
@@ -1152,7 +1152,7 @@ class MergeSpec extends SparkTestBase {
   test("MergeTable.bucketsFor: an absent table follows suggestBuckets, " +
       "an existing table's _meta wins over a disagreeing estimate") {
     import graft.merge.MergeTable
-    val path = Files.createTempDirectory("graft-bf").toString + "/t"
+    val path = tempDir("graft-bf").toString + "/t"
     val GiB = 1024L * 1024 * 1024
     assert(MergeTable.bucketsFor(spark, path, 0L) == 16)
     assert(MergeTable.bucketsFor(spark, path, 32 * GiB) == 256)

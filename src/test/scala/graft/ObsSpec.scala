@@ -18,7 +18,7 @@ class ObsSpec extends SparkTestBase {
   import spark.implicits._
 
   test("the route's overlapping chains file their jobs under their own scopes") {
-    val base = Files.createTempDirectory("graft-obsspec-route").toString
+    val base = tempDir("graft-obsspec-route").toString
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     def batch(ids: Seq[Long], corrupt: Set[Long], p: String) = {
       Multimodal.decodeMetaTotal(ids.map(id => Multimodal.MediaRow(id, "image",
@@ -54,7 +54,7 @@ class ObsSpec extends SparkTestBase {
   }
 
   test("a drain's progress counts in the scope that started it, after it closed") {
-    val base = Files.createTempDirectory("graft-obsspec-drain").toString
+    val base = tempDir("graft-obsspec-drain").toString
     spark.range(0, 100).select((col("id") % 7).as("k")).repartition(2)
       .write.parquet(s"$base/src")
     // holds every progress event until the scope has closed; it was added

@@ -38,7 +38,7 @@ class PipelineE2ESpec extends SparkTestBase {
   }
 
   test("ingest -> delta csv -> merge with season tgz -> republish") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe").toString
+    val dir = tempDir("graft-pipe").toString
 
     // day-1 season: one already-known play, packaged as the tgz artifact
     val day1 = Ingest.transform(Seq(
@@ -84,7 +84,7 @@ class PipelineE2ESpec extends SparkTestBase {
     // two-stage drive is killed MID-INGEST (after batch 0 committed,
     // during batch 1), restarted from its checkpoint, and must publish a
     // season tgz BYTE-identical to an uninterrupted run's.
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-k").toString
+    val dir = tempDir("graft-pipe-k").toString
     val day1 = Seq(
       ("k0", envelopeJson("g1", "Cleveland", "Boston",
         "1st Q, 10:00.0 remaining<br>Donovan Mitchell made 2-pointer from 8 ft<br>Cleveland leads 2-0")),
@@ -172,7 +172,7 @@ class PipelineE2ESpec extends SparkTestBase {
     // the DAG — topic → transform → ongoing/ CSV → tgz merge → publish —
     // executes with no stand-in frames anywhere.
     import graft.sources.KafkaLog
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-klog").toString
+    val dir = tempDir("graft-pipe-klog").toString
     val root = s"$dir/log"
     KafkaLog.createTopic(root, "shots", 2)
     def rec(i: Int, json: String) = KafkaLog.Record(s"k$i", json, 1700000000000L + i)
@@ -236,7 +236,7 @@ class PipelineE2ESpec extends SparkTestBase {
     // spark-submit it builds the cluster session the same way.
     import graft.sources.KafkaLog
     import graft.tools.PipelineMain
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-cli").toString
+    val dir = tempDir("graft-pipe-cli").toString
     val root = s"$dir/log"
     KafkaLog.createTopic(root, "shots", 1)
     KafkaLog.produce(root, "shots", 0, Seq(
@@ -268,7 +268,7 @@ class PipelineE2ESpec extends SparkTestBase {
     // merge publishes over --season when --publish is absent, so a
     // misspelled --publish must fail rather than republish in place
     import graft.tools.PipelineMain
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-flag").toString
+    val dir = tempDir("graft-pipe-flag").toString
     val tgz = s"$dir/shots-2025.tgz"
     Merge.publishTgz(Ingest.transform(Seq(("k0", envelopeJson("g1",
       "Cleveland", "Boston", "1st Q, 10:00.0 remaining<br>Donovan Mitchell " +
@@ -293,7 +293,7 @@ class PipelineE2ESpec extends SparkTestBase {
   test("mergePublish recovers a season stranded at .old by a killed publish " +
       "instead of bootstrapping from the delta alone") {
     import graft.tools.PipelineMain
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-torn").toString
+    val dir = tempDir("graft-pipe-torn").toString
     val tgz = s"$dir/shots-2025.tgz"
     val play = "1st Q, 10:00.0 remaining<br>Donovan Mitchell made 2-pointer " +
       "from 8 ft<br>Cleveland leads 2-0"
@@ -333,7 +333,7 @@ class PipelineE2ESpec extends SparkTestBase {
   }
 
   test("streaming flavor: envelope file stream -> transform -> csv sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-s").toString
+    val dir = tempDir("graft-pipe-s").toString
     Seq(("k1", envelopeJson("g9", "Utah", "Chicago",
       "3rd Q, 2:15.0 remaining<br>Lauri Markkanen made 3-pointer from 24 ft<br>Utah leads 70-60")))
       .toDF("key", "value").write.parquet(s"$dir/in")
@@ -357,7 +357,7 @@ class PipelineE2ESpec extends SparkTestBase {
     // byte-identity reference.
     import graft.sources.KafkaLog
     import graft.tools.PipelineMain
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-typed").toString
+    val dir = tempDir("graft-pipe-typed").toString
     val root = s"$dir/log"
     KafkaLog.createTopic(root, "shots", 1)
     KafkaLog.produce(root, "shots", 0, Seq(KafkaLog.Record("k0",
@@ -418,7 +418,7 @@ class PipelineE2ESpec extends SparkTestBase {
     // boundary, (4) a retention run ages the resolved tombstones out.
     import graft.multimodal.Multimodal
     import graft.tools.PipelineMain
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe-q").toString
+    val dir = tempDir("graft-pipe-q").toString
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val wav = Multimodal.AudioCodec.encode(nSamples = 77,
       sampleRateHz = 8200, seed = 3)
@@ -514,8 +514,7 @@ class PipelineE2ESpec extends SparkTestBase {
     import graft.merge.MergeTable
     val rng = new scala.util.Random(4117)
     val png = Multimodal.ImageCodec.encode(16, 8, seed = 3, "png")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-pipe-soak").toString
+    val dir = tempDir("graft-pipe-soak").toString
     val mainT = s"$dir/meta"; val quarT = s"$dir/quar"
     var refMain = Set.empty[Long]
     var refQuar = Map.empty[Long, String]
@@ -664,8 +663,7 @@ class PipelineE2ESpec extends SparkTestBase {
       if (corrupt) r.copy(content = r.content.take(5)) else r
     }
     (1 to 2).foreach { round =>
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-pipe-fz").toString
+      val dir = tempDir("graft-pipe-fz").toString
       var refMain = Set.empty[Long]
       var refQuar = Map.empty[Long, (String, Long)] // id -> (status, seq)
       var nWaves = 0

@@ -219,7 +219,7 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("curated corpus publishes partitioned by lang, compacts, reads back identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpus").toString
+    val dir = tempDir("graft-corpus").toString
     val out = s"$dir/corpus"
     val curated = PipelineOps.stratifiedSample(spark, sf)
     curated.write.partitionBy("lang").parquet(out)

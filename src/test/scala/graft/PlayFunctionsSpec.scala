@@ -213,7 +213,7 @@ class PlayFunctionsSpec extends SparkTestBase {
       .toDF("key", "value")
     val (out, obs) = Ingest.observedTransform(env)
     out.write.mode("overwrite")
-      .parquet(java.nio.file.Files.createTempDirectory("graft-obs").toString + "/out")
+      .parquet(tempDir("graft-obs").toString + "/out")
     val m = obs.get
     assert(m("rows_total") == 3L)
     assert(m("rows_malformed_json") == 1L)

@@ -171,7 +171,7 @@ class PropertySpec extends SparkTestBase {
       val docs = sample(Gen.listOfN(30, docGen), seed).zipWithIndex
         .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
       val df = docs.toDF("doc_id", "text")
-      val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
+      val dir = tempDir("graft-prop").toString
       df.write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val chunks = graft.queries.PipelineOps.docChunks(spark, dir).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getInt(3)))
@@ -310,8 +310,7 @@ class PropertySpec extends SparkTestBase {
     val deltaGen = Gen.listOfN(12,
       Gen.zip(Gen.choose(0L, 30L), Gen.alphaStr.map(_.take(6))))
     for (seed <- 1L to 4L) {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-mtprop").toString + "/t"
+      val path = tempDir("graft-mtprop").toString + "/t"
       val model = scala.collection.mutable.Map.empty[Long, String]
       for (round <- 0 until 4) {
         // unique keys within a delta (mergeDeterministic's within-source

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class RocksDBStateSpec extends SparkTestBase {
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-rocksdb").toString
+    tempDir("graft-rocksdb").toString
 
   private def stateFiles(cp: String): Seq[String] = {
     import scala.jdk.CollectionConverters._

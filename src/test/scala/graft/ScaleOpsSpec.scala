@@ -88,7 +88,7 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("compact: many small files -> few files, same rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = tempDir("graft-compact").toString + "/t"
     val df = (1 to 5000).map(i => (i.toLong, s"row_$i")).toDF("id", "payload")
     df.repartition(64).write.parquet(dir) // 64 tiny files
     val before = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
@@ -102,7 +102,7 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("compact recovers a directory stranded at .old by a killed run; every row survives") {
-    val base = java.nio.file.Files.createTempDirectory("graft-compact-rec")
+    val base = tempDir("graft-compact-rec")
     val dir = base.resolve("t")
     val df = (1 to 3000).map(i => (i.toLong, s"row_$i")).toDF("id", "payload")
     df.repartition(16).write.parquet(dir.toString)
@@ -122,7 +122,7 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("compact shrink plans shuffle-free (coalesce); grow/skew keep repartition") {
-    val base = java.nio.file.Files.createTempDirectory("graft-cplan").toString
+    val base = tempDir("graft-cplan").toString
     val df = (1 to 5000).map(i => (i.toLong, s"row_$i")).toDF("id", "payload")
     // shrink, near-uniform files -> coalesce: no exchange in the plan
     df.repartition(64).write.parquet(s"$base/uniform")
@@ -143,7 +143,7 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("hive-partitioned write prunes partitions at scan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-prune").toString + "/t"
+    val dir = tempDir("graft-prune").toString + "/t"
     Tables.orders(spark, sf)
       .withColumn("order_month",
         date_format(col("o_orderdate"), "yyyy-MM"))
@@ -266,7 +266,7 @@ class ScaleOpsSpec extends SparkTestBase {
   test("plannedScanWidth declines partitioned trees (falls back to planning)") {
     // the split arithmetic ignores partition filters, so a partitioned
     // layout must return None rather than overstate the width
-    val dir = java.nio.file.Files.createTempDirectory("graft-psw").toString + "/t"
+    val dir = tempDir("graft-psw").toString + "/t"
     Tables.orders(spark, sf)
       .withColumn("m", date_format(col("o_orderdate"), "yyyy-MM"))
       .write.partitionBy("m").parquet(dir)
@@ -313,7 +313,7 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("clusterForSkipping yields disjoint per-file key ranges; unclustered does not") {
-    val base = java.nio.file.Files.createTempDirectory("graft-skip").toString
+    val base = tempDir("graft-skip").toString
     val ev = Tables.events(spark, sf).select(col("event_id"), col("user_id"))
     // clustered layout: disjoint per-file user_id ranges
     ScaleOps.clusterForSkipping(ev, s"$base/clustered", 8, Seq("user_id"))
@@ -349,7 +349,7 @@ class ScaleOpsSpec extends SparkTestBase {
   }
 
   test("Z-order layout prunes on BOTH columns; lexicographic only on the first") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zord").toString
+    val base = tempDir("graft-zord").toString
     // full 256x256 grid: x and y independent and uniform
     val grid = spark.range(0, 65536L)
       .select((col("id") % 256).as("x"), (col("id") / 256).as("y"))

@@ -58,8 +58,8 @@ class SessionBoundaryPropertySpec extends SparkTestBase {
         (id, us, s.userId, "click", (id % 7).toDouble / 2.0)
       }
     }
-    val dir = Files.createTempDirectory(s"graft-sessprop-$seed")
-    val stage = Files.createTempDirectory(s"graft-sessprop-stage-$seed")
+    val dir = tempDir(s"graft-sessprop-$seed")
+    val stage = tempDir(s"graft-sessprop-stage-$seed")
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .withColumn("ts", timestamp_micros(col("us")))
       .select("event_id", "ts", "user_id", "event_type", "value")

@@ -40,7 +40,7 @@ class StageSpec extends SparkTestBase {
   /** Copy the single part file of `df` to `dir/name` (a one-file fixture,
     * like the testdata tables). */
   private def writeSingleFile(df: DataFrame, dir: Path, name: String): Unit = {
-    val stage = Files.createTempDirectory("graft-stagespec-write")
+    val stage = tempDir("graft-stagespec-write")
     df.coalesce(1).write.mode("overwrite").option("compression", "none")
       .parquet(stage.toString)
     scala.util.Using.resource(Files.list(stage)) { listing =>
@@ -144,7 +144,7 @@ class StageSpec extends SparkTestBase {
 
   for (k <- kinds) {
     test(s"${k.name}: unchanged fixture reuses, rewrite rebuilds") {
-      val dir = Files.createTempDirectory("graft-stagespec")
+      val dir = tempDir("graft-stagespec")
       val fixture = dir.resolve(k.fixture).toString
       k.write(dir, idsA)
       val a = k.stage(dir.toString)
@@ -163,7 +163,7 @@ class StageSpec extends SparkTestBase {
     }
 
     test(s"${k.name}: dying or losing build leaves nothing accepted") {
-      val dir = Files.createTempDirectory("graft-stagespec")
+      val dir = tempDir("graft-stagespec")
       val fixture = dir.resolve(k.fixture).toString
       k.write(dir, idsA)
       val e = intercept[IllegalStateException] {
@@ -197,14 +197,14 @@ class StageSpec extends SparkTestBase {
   }
 
   test("a deleted fixture's stages are removed by the next build") {
-    val gone = Files.createTempDirectory("graft-stagespec-gone")
+    val gone = tempDir("graft-stagespec-gone")
     val fixture = gone.resolve("events.parquet").toString
     events(gone, idsA)
     Streaming.stagedEvents(spark, gone.toString, 3)
     StreamingQueries.q87Seed(spark, gone.toString)
     assert(Stage.dirsFor(fixture, "events-s3").nonEmpty)
     FileUtils.deleteDirectory(gone.toFile)
-    val other = Files.createTempDirectory("graft-stagespec-other")
+    val other = tempDir("graft-stagespec-other")
     events(other, idsB)
     Streaming.stagedEvents(spark, other.toString, 3)
     assert(Stage.dirsFor(fixture, "events-s3").isEmpty &&
@@ -213,12 +213,12 @@ class StageSpec extends SparkTestBase {
   }
 
   test("a deleted documents fixture's blob corpus is removed by the next build") {
-    val gone = Files.createTempDirectory("graft-stagespec-gone")
+    val gone = tempDir("graft-stagespec-gone")
     writeDocuments(gone, idsA)
     val corpus = Paths.get(new java.net.URI(
       Multimodal.documentBlobs(spark, gone.toString).inputFiles.head)).getParent
     FileUtils.deleteDirectory(gone.toFile)
-    val other = Files.createTempDirectory("graft-stagespec-other")
+    val other = tempDir("graft-stagespec-other")
     events(other, idsB)
     Streaming.stagedEvents(spark, other.toString, 3)
     assert(!Files.exists(corpus), s"$corpus outlived its fixture")
@@ -226,7 +226,7 @@ class StageSpec extends SparkTestBase {
   }
 
   test("a stage another graft build wrote is rebuilt, and swept") {
-    val dir = Files.createTempDirectory("graft-stagespec-build")
+    val dir = tempDir("graft-stagespec-build")
     val fixture = dir.resolve("events.parquet").toString
     events(dir, idsA)
     // the name a stage had before the build's identity joined it: variant,
@@ -246,7 +246,7 @@ class StageSpec extends SparkTestBase {
   }
 
   test("q87 seed restages after a same-size sub-ms rewrite") {
-    val dir = Files.createTempDirectory("graft-stagespec-mtime")
+    val dir = tempDir("graft-stagespec-mtime")
     val f = dir.resolve("events.parquet")
     // both stamps fall inside one millisecond, which is all Hadoop's
     // FileStatus reports

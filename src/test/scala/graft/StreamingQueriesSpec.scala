@@ -76,8 +76,7 @@ class StreamingQueriesSpec extends SparkTestBase {
       val blob = if (id % 4 == 0) c.take(5) else c // ids 4, 8 corrupt
       Multimodal.MediaRow(id, t, blob)
     }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-q92spec-").toString
+    val base = tempDir("graft-q92spec-").toString
     try {
       val mainT = s"$base/main"; val quarT = s"$base/quar"
       rows.toDS().toDF().repartitionByRange(3, col("media_id"))
@@ -152,8 +151,7 @@ class StreamingQueriesSpec extends SparkTestBase {
       val r = pristine(id)
       if (id % 4 == 0) r.copy(content = r.content.take(5)) else r // 4, 8
     }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-q93spec-").toString
+    val base = tempDir("graft-q93spec-").toString
     try {
       val mainT = s"$base/main"; val quarT = s"$base/quar"
       wave1.toDS().toDF().repartitionByRange(3, col("media_id"))

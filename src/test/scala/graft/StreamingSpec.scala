@@ -33,8 +33,7 @@ class StreamingSpec extends SparkTestBase {
     //                                            advances wm to 11:55 and
     //                                            evicts w11 too → {w12}
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-evict-").toString
+    val base = tempDir("graft-evict-").toString
     try {
       val in = s"$base/in"
       def write(ts: String*): Unit =
@@ -125,7 +124,7 @@ class StreamingSpec extends SparkTestBase {
     // watermark in batches 2-3, which must evict and emit user 1's
     // session via GroupStateTimeout.EventTimeTimeout — the path a
     // single-batch drain never takes.
-    val dir = java.nio.file.Files.createTempDirectory("graft-mb").toString
+    val dir = tempDir("graft-mb").toString
     def ev(id: Long, user: Long, minute: Long) = Streaming.Event(
       id, java.sql.Timestamp.valueOf(s"2024-01-01 ${"%02d".format(minute / 60)}:${"%02d".format(minute % 60)}:00"),
       user, "click", 1.0)
@@ -153,7 +152,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("upsert sink partitioned backend: merge, delta-wins, replay no-op") {
     import graft.merge.MergeTable
-    val dir = java.nio.file.Files.createTempDirectory("graft-upsertp").toString
+    val dir = tempDir("graft-upsertp").toString
     val season = s"$dir/season"
     MergeTable.write(
       batchEvents.filter($"event_id" < 100).withColumn("src_tag", lit("seed")),
@@ -178,7 +177,7 @@ class StreamingSpec extends SparkTestBase {
   test("upsert sink stamps a fresh season with the sizing rule's " +
       "floor (16 buckets)") {
     import graft.merge.MergeTable
-    val dir = java.nio.file.Files.createTempDirectory("graft-upfresh").toString
+    val dir = tempDir("graft-upfresh").toString
     val season = s"$dir/season"
     Streaming.upsertSink(streamEvents.withColumn("src_tag", lit("delta")),
       season, s"$dir/ckpt", keys = Seq("event_id"))
@@ -238,7 +237,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("clustering sink: two micro-batches produce the batch clustering membership") {
     import graft.queries.ClusterOps
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstream").toString
+    val dir = tempDir("graft-cstream").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     // stage the corpus as two single-file halves so AvailableNow +
     // maxFilesPerTrigger=1 delivers exactly two micro-batches
@@ -288,7 +287,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("clustering state folds into base: bounded dirs, same membership, replay across fold") {
     import graft.queries.ClusterOps
-    val dir = java.nio.file.Files.createTempDirectory("graft-cfold").toString
+    val dir = tempDir("graft-cfold").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val n = 6
     def run(state: String, every: Int): Unit =
@@ -366,7 +365,7 @@ class StreamingSpec extends SparkTestBase {
   test("clustering sink: a fold killed between its renames recovers from base.old; " +
       "membership equals the unfolded twin") {
     import graft.queries.ClusterOps
-    val dir = java.nio.file.Files.createTempDirectory("graft-cfoldkill").toString
+    val dir = tempDir("graft-cfoldkill").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val n = 6
     def batch(state: String, b: Int, every: Int): Unit =
@@ -400,7 +399,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("clustering sink: replay after a crash mid-members-merge converges (durable delta)") {
     import graft.queries.ClusterOps
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccrash").toString
+    val dir = tempDir("graft-ccrash").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     val state = s"$dir/state"
     // batch 0 primes the state; snapshot the members table before batch 1
@@ -447,8 +446,7 @@ class StreamingSpec extends SparkTestBase {
     // branch is asserted from documentation — both are executed, so the
     // behavior is pinned, not assumed (r13 verdict item 7).
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-drift-").toString
+    val base = tempDir("graft-drift-").toString
     try {
       val in = s"$base/in"; val out = s"$base/out"
       Seq((1L, 10.0), (2L, 20.0), (2L, 5.0)).toDF("event_id", "value")

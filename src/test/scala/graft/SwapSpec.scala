@@ -17,7 +17,7 @@ class SwapSpec extends AnyFunSuite {
     FileSystem.getLocal(conf)
   }
 
-  private def dir(): JPath = Files.createTempDirectory("graft-swap")
+  private def dir(): JPath = SparkTestBase.tempDir("graft-swap")
   private def write(p: JPath, s: String): JPath = {
     Files.createDirectories(p.getParent)
     Files.write(p, s.getBytes(UTF_8))

@@ -468,7 +468,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val base =
-      java.nio.file.Files.createTempDirectory("graft-q91vac-").toString
+      tempDir("graft-q91vac-").toString
     try {
       val mainT = s"$base/main"; val quarT = s"$base/quar"
       def stage(rows: Seq[Multimodal.MediaRow], p: String) = {
@@ -524,7 +524,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     val corrupted = pristine.map(r =>
       if (r.media_id % 4 == 0) r.copy(content = r.content.take(5)) else r)
     val base =
-      java.nio.file.Files.createTempDirectory("graft-q91spec-").toString
+      tempDir("graft-q91spec-").toString
     try {
       val mainT = s"$base/main"
       val quarT = s"$base/quar"
@@ -647,8 +647,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     import graft.merge.MergeTable
     val rng = new scala.util.Random(9161)
     (1 to 2).foreach { round =>
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-q91fz-").toString
+      val base = tempDir("graft-q91fz-").toString
       try {
         val mainT = s"$base/main"; val quarT = s"$base/quar"
         // reference state: main key -> (type, bytes); quar key ->
@@ -723,7 +722,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     import graft.merge.MergeTable
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val base =
-      java.nio.file.Files.createTempDirectory("graft-q91empty-").toString
+      tempDir("graft-q91empty-").toString
     try {
       val mainT = s"$base/main"; val quarT = s"$base/quar"
       val empty = spark.emptyDataset[Multimodal.DecodedTryRow].toDF()
@@ -770,7 +769,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     import graft.merge.MergeTable
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val base =
-      java.nio.file.Files.createTempDirectory("graft-q91ret-").toString
+      tempDir("graft-q91ret-").toString
     try {
       val mainT = s"$base/main"; val quarT = s"$base/quar"
       def stage(rows: Seq[Multimodal.MediaRow], p: String) = {
@@ -846,7 +845,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val base =
-      java.nio.file.Files.createTempDirectory("graft-q91dup-").toString
+      tempDir("graft-q91dup-").toString
     try {
       val mainT = s"$base/main"; val quarT = s"$base/quar"
       def stage(rows: Seq[Multimodal.MediaRow], p: String) = {
@@ -898,7 +897,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     import graft.merge.MergeTable
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val base =
-      java.nio.file.Files.createTempDirectory("graft-q91det-").toString
+      tempDir("graft-q91det-").toString
     try {
       // two distinct corruptions of key 1 → two distinct error rows
       // (different n_bytes), plus a clean copy that must LOSE to both
@@ -941,7 +940,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val base =
-      java.nio.file.Files.createTempDirectory("graft-q91ret-").toString
+      tempDir("graft-q91ret-").toString
     try {
       val mainT = s"$base/main"; val quarT = s"$base/quar"
       def stage(rows: Seq[Multimodal.MediaRow], p: String) = {
@@ -1015,7 +1014,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
     import graft.merge.MergeTable
     val png = Multimodal.ImageCodec.encode(20, 10, seed = 1, "png")
     val base =
-      java.nio.file.Files.createTempDirectory("graft-qstale-").toString
+      tempDir("graft-qstale-").toString
     try {
       def route(rows: Seq[Multimodal.MediaRow], seq: Long, t: String): Unit = {
         val d = s"$base/d$seq-$t"
@@ -1121,8 +1120,7 @@ class VectorAndMultimodalSpec extends SparkTestBase {
             mainT, quarT, 4, s"$base/s2", seq = 2L)
       }
     }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-qoverlap-").toString
+    val base = tempDir("graft-qoverlap-").toString
     try {
       run(s"$base/ref", None) // the never-crashed reference
       Seq("main_merge", "quar_chain").foreach { doomed =>
