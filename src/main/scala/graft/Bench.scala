@@ -78,13 +78,18 @@ object Bench {
     val cacheBuilds = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     // The warm run alone is recorded by graft.obs (per query: its scopes'
     // jobs, task cpu, shuffle, planning, streaming durationMs and state
-    // peaks); the timed runs run with no listener registered.
+    // peaks; the query's own scope also gets `codegen_compiles` and
+    // `codegen_ms`, the classes Janino compiled during the warm run and
+    // their time); the timed runs run with no listener registered.
     val layers = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Map[String, Long]]]
     // returns the warm wall (-1 on error) and, when both timed runs
     // succeeded, the kept run's cost with its cache-miss delta
     def attempt(n: String): (Double, Option[(Cost, Long)]) = {
+      val cg0 = graft.obs.Codegen.now
       val (warm, record) = graft.obs.Obs.record(spark)(graft.obs.Obs.scope(n)(runOnce(n)))
-      layers(n) = record
+      val cg = graft.obs.Codegen.now - cg0
+      layers(n) = record.updated(n, record.getOrElse(n, Map.empty[String, Long]) ++
+        Map("codegen_compiles" -> cg.compiles, "codegen_ms" -> cg.ms))
       val w = warm.fold(-1.0)(_.wallSec)
       if (w < 0) return (w, None)
       errors.remove(n)

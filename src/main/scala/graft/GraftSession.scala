@@ -20,11 +20,14 @@ import scala.jdk.CollectionConverters._
   *    default split size, which would serialize each scan on one core;
   *    a cluster keeps its own split size.
   *  - Either way `file:` is served by the fork-free local filesystem
-  *    ([[graft.fs.ForkFree.install]]): two `fs.*` keys in the
+  *    ([[graft.fs.ForkFree]]). A session built here carries the two
+  *    `spark.hadoop.fs.*` keys in its SparkConf before the SparkContext
+  *    starts, unless the caller set them, so even Spark's event-log
+  *    writer, which opens its files while the context starts, forks no
+  *    `chmod`. Then [[graft.fs.ForkFree.install]] names the classes in the
   *    SparkContext's Hadoop conf, and a stock `file:` FileSystem that the
-  *    JVM cached earlier (Spark's event-log writer caches one while the
-  *    SparkContext starts) is dropped from Hadoop's cache. No other conf
-  *    is touched.
+  *    JVM cached earlier is dropped from Hadoop's cache. No other conf is
+  *    touched.
   */
 object GraftSession {
   def apply(appName: String): SparkSession = {
@@ -33,7 +36,8 @@ object GraftSession {
         val conf = new SparkConf() // loads spark.* system properties
         val local = !conf.contains("spark.master")
         val spark = SparkSession.builder()
-          .config(resolve(conf, sys.env.get("SPARK_GRAFT_CPUS"))
+          .config(graft.fs.ForkFree.sparkConf(
+            resolve(conf, sys.env.get("SPARK_GRAFT_CPUS")))
             .setIfMissing("spark.app.name", appName))
           .getOrCreate()
         if (local) spark.sparkContext.setLogLevel("WARN")
@@ -57,10 +61,12 @@ object GraftSession {
     }
 
   /** Run `body` with each of `settings` set in the session conf, then put
-    * every key back as it was: its previous value, or unset if it had
-    * none. Restored on failure too. */
+    * every key back as it was: its previous value, or unset if it was not
+    * set (a key left at its default stays unset, not set to the default).
+    * Restored on failure too. */
   def withConf[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
-    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> set.get(k) }
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.reverse.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, F
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
+import org.apache.spark.SparkConf
 
 /** A `file:` filesystem that starts no child process.
   *
@@ -90,6 +91,27 @@ object ForkFree {
         FileSystem.get(Root, conf)
       }
     }
+  }
+
+  /** `conf` with `spark.hadoop.fs.file.impl` and
+    * `spark.hadoop.fs.AbstractFileSystem.file.impl` naming the fork-free
+    * classes, for a SparkContext that has not started yet. Spark copies
+    * `spark.hadoop.*` keys into every Hadoop conf it builds, including
+    * the one its event-log writer uses to open its files while the context
+    * starts; that writer keeps its FileSystem for the application's life,
+    * so [[install]] comes too late for it. A key the caller set is kept,
+    * whether in `conf` or as a non-Hadoop class in the Hadoop site files.
+    */
+  def sparkConf(conf: SparkConf): SparkConf = {
+    lazy val site = new Configuration()
+    def name(key: String, cls: Class[_]): Unit = {
+      val sparkKey = "spark.hadoop." + key
+      if (!conf.contains(sparkKey) && stock(Option(site.get(key)).getOrElse("").trim))
+        conf.set(sparkKey, cls.getName)
+    }
+    name(FileImpl, classOf[ForkFreeLocalFileSystem])
+    name(AbstractFileImpl, classOf[ForkFreeLocalFs])
+    conf
   }
 
   /** The POSIX set for the low nine mode bits, e.g. 0644 → rw-r--r--. */

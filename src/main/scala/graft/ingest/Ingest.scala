@@ -166,13 +166,10 @@ object Ingest {
     * reference's write (its checkpoint path is computed but unused,
     * spark_processing.py:275). Returns after draining (AvailableNow).
     */
-  def streamToCsv(df: DataFrame, path: String, checkpoint: String): Unit = {
-    val q = df.writeStream.format("csv")
+  def streamToCsv(df: DataFrame, path: String, checkpoint: String): Unit =
+    graft.streaming.Streaming.drain(df.sparkSession, df.writeStream.format("csv")
       .option("header", "true")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      .trigger(Trigger.AvailableNow()))
 }

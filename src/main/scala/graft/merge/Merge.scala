@@ -5,6 +5,7 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream,
 import java.nio.charset.StandardCharsets
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
+import com.univocity.parsers.csv.CsvParser
 import graft.obs.Obs
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream, TarArchiveOutputStream}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -12,8 +13,12 @@ import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
 /** The reference's merge/publish job (scripts/spark_merge_dfs.py), i.e. the
@@ -39,9 +44,43 @@ object Merge {
   val dedupKeys: Seq[String] = Seq("game_id", "time_remaining", "quarter")
 
   /** S2: headered, string-typed CSV directory scan
-    * (spark_merge_dfs.py:73-80 — header=true, no inferSchema). */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+    * (spark_merge_dfs.py:73-80 — header=true, no inferSchema). The
+    * all-string schema is the one Spark's header inference would give,
+    * but it is read on the driver, from the header line of one part
+    * file, instead of by a Spark job: the first file with a header line,
+    * in the order the file-sink log (`_spark_metadata`, which defines a
+    * streamed delta) lists them, else in name order. Each delta keeps its
+    * own header, so a `--typed` delta or one from an older ingest still
+    * meets the season through [[mergeDeterministic]]'s `unionByName`. A
+    * path with no header line anywhere (or no such path) is read as
+    * before, with inference.
+    */
+  def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    headerSchema(spark, path).fold(reader.csv(path))(reader.schema(_).csv(path))
+  }
+
+  private def headerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val (conf, sqlConf) = (session.sessionState.newHadoopConf(), session.sessionState.conf)
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) return None
+    val files =
+      if (FileStreamSink.hasMetadata(Seq(path), conf, sqlConf))
+        new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark,
+          new Path(dir, FileStreamSink.metadataDir).toString)
+          .allFiles().iterator.map(_.toFileStatus.getPath)
+      else fs.listStatus(dir).sortBy(_.getPath.getName).iterator
+        .filter(s => s.isFile && !"_.".contains(s.getPath.getName.head)).map(_.getPath)
+    val opts = new CSVOptions(Map("header" -> "true"), sqlConf.csvColumnPruning,
+      sqlConf.sessionLocalTimeZone)
+    files.flatMap(CSVUtils.readHeaderLine(_, opts, conf)).nextOption().map { line =>
+      val names = CSVUtils.makeSafeHeader(new CsvParser(opts.asParserSettings).parseLine(line),
+        sqlConf.caseSensitiveAnalysis, opts)
+      StructType(names.map(StructField(_, StringType)))
+    }
+  }
 
   /** D1/U1: the reference's upsert (spark_merge_dfs.py:82-83 — align by
     * name, missing columns → null, one row per key) made deterministic:

@@ -641,8 +641,13 @@ object Multimodal {
           .select(col("media_id"), col("media_type"))
           .withColumn("error", lit(null).cast("string"))
           .withColumn("status", lit("resolved"))
+      // the stamp reaches the generated code through a UDF's reference,
+      // not as an inlined literal: `lit(seq)` changed the code of the
+      // qdelta stages every batch, so each batch compiled them again. A
+      // UDF is not foldable, so ConstantFolding cannot turn it back into
+      // a literal; the column stays a non-null long.
       val qdelta = newQuar.unionByName(resolved)
-        .withColumn("routed_seq", lit(seq))
+        .withColumn("routed_seq", udf(() => seq).asNonNullable()())
       val qObs = org.apache.spark.sql.Observation()
       Obs.scope("qdelta_stage") {
         qdelta.observe(qObs, collect_set(bucketCol).as("q_buckets"))
@@ -707,7 +712,7 @@ object Multimodal {
       quarT: String, nBuckets: Int, checkpoint: String, scratch: String,
       afterBatch: Long => Unit = _ => ()): Unit = {
     val enc = org.apache.spark.sql.Encoders.product[MediaRow]
-    spark.readStream.schema(enc.schema)
+    graft.streaming.Streaming.drain(spark, spark.readStream.schema(enc.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -716,9 +721,7 @@ object Multimodal {
         afterBatch(id)
       }
       .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
   }
 
   /** Retention for the quarantine table: retire `resolved` tombstones

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming surface (BASELINE.json `spark_approach`;
   * SURVEY.md §2.9): the reference drains a Kafka topic as a batch and
@@ -366,16 +366,14 @@ object Streaming {
     import graft.merge.MergeTable
     val nBuckets = MergeTable.bucketsFor(delta.sparkSession, seasonPath,
       estimatedTableBytes = 0L)
-    val q = delta.writeStream
+    drain(delta.sparkSession, delta.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         MergeTable.merge(batch.toDF(), seasonPath, keys, nBuckets)
         ()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .trigger(Trigger.AvailableNow()))
   }
 
   /** Streaming duplicate clustering: documents arrive on a stream and the
@@ -412,7 +410,7 @@ object Streaming {
   def clusterSink(newDocs: DataFrame, statePath: String, checkpoint: String,
       threshold: Double = graft.queries.ClusterOps.clusterJaccard,
       nBuckets: Int = 16, compactEvery: Int = 8): Unit = {
-    val q = newDocs.writeStream
+    drain(newDocs.sparkSession, newDocs.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
@@ -420,9 +418,7 @@ object Streaming {
           compactEvery)
         ()
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .trigger(Trigger.AvailableNow()))
   }
 
   /** Current membership maintained by [[clusterSink]]: one
@@ -690,6 +686,33 @@ object Streaming {
     dropBatches(fs, p, foldedUpto(fs, dir) + 1)
   }
 
+  /** Starts `writer`'s query on `spark` and waits for it to end: every
+    * stream graft runs is started here.
+    *
+    * `start()` runs the query in a clone of `spark`, made in the query's
+    * constructor, and every clone gets a new session UUID. With artifact
+    * isolation on (Spark 4's default) each job carries that UUID, and the
+    * executor builds one class loader per UUID. Spark caches a generated
+    * class by (context class loader, code), so every run of a stream
+    * compiled all of its classes again under a fresh loader (BUILD_NOTES
+    * "Spark 4 codegen cache is per class loader"). So the clone is made
+    * with `spark.sql.artifact.isolation.enabled=false`, its tasks run
+    * under the executor's shared loader, and `spark`'s conf is restored
+    * as soon as the clone exists. A caller who set the key keeps their
+    * value. Starts are serialized, so a start on another thread never
+    * sees (or restores) this scoped setting.
+    */
+  def drain(spark: SparkSession, writer: DataStreamWriter[_]): Unit = {
+    val q = StartLock.synchronized {
+      if (spark.conf.getAll.contains(ArtifactIsolation)) writer.start()
+      else graft.GraftSession.withConf(spark, ArtifactIsolation -> "false")(writer.start())
+    }
+    q.awaitTermination()
+  }
+
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+  private object StartLock
+
   /** Drain a streaming frame through a parquet FILE sink (append mode)
     * and read the result back — the scale-safe drain: executors write
     * partitioned output directly, the driver never materializes a row,
@@ -703,13 +726,11 @@ object Streaming {
       checkpoint: String): DataFrame = {
     FileUtils.deleteDirectory(new java.io.File(outDir))
     FileUtils.deleteDirectory(new java.io.File(checkpoint))
-    val q = streamed.writeStream.format("parquet")
+    drain(streamed.sparkSession, streamed.writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .trigger(Trigger.AvailableNow()))
     streamed.sparkSession.read.parquet(outDir)
   }
 
@@ -754,11 +775,9 @@ object Streaming {
     */
   def drainToBatch(streamed: DataFrame, name: String,
       outputMode: String = "append"): DataFrame = {
-    val q = streamed.writeStream.format("memory").queryName(name)
+    drain(streamed.sparkSession, streamed.writeStream.format("memory").queryName(name)
       .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .trigger(Trigger.AvailableNow()))
     streamed.sparkSession.table(name)
   }
 }

@@ -43,4 +43,26 @@ class GraftSessionSpec extends SparkTestBase {
     assert(keys.map(hc.get) == Seq(classOf[graft.fs.ForkFreeLocalFileSystem].getName,
       classOf[graft.fs.ForkFreeLocalFs].getName))
   }
+
+  test("a new session's SparkConf names the fork-free file: classes unless the caller did") {
+    val keys = Seq("spark.hadoop.fs.file.impl", "spark.hadoop.fs.AbstractFileSystem.file.impl")
+    val named = graft.fs.ForkFree.sparkConf(new SparkConf(false))
+    assert(keys.map(named.get) == Seq(classOf[graft.fs.ForkFreeLocalFileSystem].getName,
+      classOf[graft.fs.ForkFreeLocalFs].getName))
+    val own = graft.fs.ForkFree.sparkConf(new SparkConf(false)
+      .set(keys.head, "com.example.OwnFileSystem"))
+    assert(own.get(keys.head) == "com.example.OwnFileSystem")
+    assert(own.get(keys(1)) == classOf[graft.fs.ForkFreeLocalFs].getName)
+  }
+
+  test("withConf restores a key that was not set to unset, not to its default") {
+    val key = "spark.sql.csv.filterPushdown.enabled"
+    spark.conf.unset(key)
+    GraftSession.withConf(spark, key -> "false")(assert(spark.conf.get(key) == "false"))
+    assert(!spark.conf.getAll.contains(key))
+    GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "2") {
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "2")
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
 }

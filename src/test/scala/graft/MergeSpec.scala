@@ -256,6 +256,55 @@ class MergeSpec extends SparkTestBase {
     count.get
   }
 
+  /** Spark jobs `body` starts. */
+  private def jobsStarted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"listener-marker-${System.nanoTime()}"
+    val count = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.rddInfos.exists(_.name == marker))) seen.countDown()
+        else count.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.parallelize(Seq(1), 1).setName(marker).count()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+    } finally sc.removeSparkListener(listener)
+    count.get
+  }
+
+  test("readCsv reads the header of a part file the sink log lists, without " +
+      "a Spark job, and names columns as header inference does") {
+    val dir = tempDir("graft-readcsv").toString
+    delta.write.parquet(s"$dir/src")
+    graft.ingest.Ingest.streamToCsv(
+      spark.readStream.schema(delta.schema).parquet(s"$dir/src"),
+      s"$dir/streamed", s"$dir/ckpt")
+    // a part no log entry lists (a torn batch's leftover), first by name
+    Files.writeString(java.nio.file.Paths.get(s"$dir/streamed/a-torn.csv"), "x,y\n1,2\n")
+    delta.coalesce(1).write.option("header", "true").csv(s"$dir/batch")
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/odd"))
+    Files.writeString(java.nio.file.Paths.get(s"$dir/odd/part-0.csv"),
+      "\n\"g,id\",a,a,,b\n1,2,3,4,5\n")
+    for (d <- Seq("streamed", "batch", "odd")) {
+      assert(jobsStarted(Merge.readCsv(spark, s"$dir/$d")) == 0, d)
+      val read = Merge.readCsv(spark, s"$dir/$d")
+      val inferred = spark.read.option("header", "true").csv(s"$dir/$d")
+      assert(read.schema == inferred.schema, d)
+      assert(read.collect().toSet == inferred.collect().toSet, d)
+    }
+    assert(Merge.readCsv(spark, s"$dir/streamed").columns.toSeq == delta.columns.toSeq)
+    assert(Merge.readCsv(spark, s"$dir/odd").columns.toSeq ==
+      Seq("g,id", "a1", "a2", "_c3", "b"))
+    // an empty dir is still read the inferring way: Spark cannot name its columns
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/empty"))
+    intercept[org.apache.spark.sql.AnalysisException](Merge.readCsv(spark, s"$dir/empty"))
+  }
+
   test("mergePublish decodes the season member once: one completed stage " +
       "runs the decode RDD") {
     import graft.tools.PipelineMain
